@@ -385,8 +385,8 @@ object MlFunctions {
     * Caveats (documented): the merged row order follows partition
     * order, so set a seed and expect scan-order sensitivity (the
     * reference has the same property — it trains in chunk order); the
-    * final merge runs in the reducer task, so the registry update is
-    * only visible in local mode — cluster deployments use
+    * final merge runs in the reducer task, so the registry update and
+    * [[lastStats]] are only visible in local mode — cluster deployments use
     * [[train]]/[[trainDistributed]]. Unlike the reference, predictions
     * are not returned inline (an aggregate yields one row); follow
     * with `ml_pred` after re-publish.
@@ -401,12 +401,12 @@ object MlFunctions {
         .get(name)
         .getOrElse(throw new IllegalArgumentException(s"ml_train: model '$name' not found"))
       val ordered = rows.reverse
-      model.fit(
+      lastStats = Some(model.fit(
         ordered.map(_._1).toArray,
         ordered.map(_._2).toArray,
         TrainConfig.parse(cfg),
         trainFraction = 0.3, // reference-observed split (src/nn/mod.rs:104-109)
-      )
+      ))
       ModelRegistry.put(model)
       "Ok"
     }
@@ -572,6 +572,9 @@ object MlFunctions {
     a
   }
 
-  /** Expose last train stats for tests. */
+  /** Per-epoch train/test MSE of the most recent driver-side fit
+    * (`train`, `trainSampled`, and the `ml_train`/`ml_train_cfg`
+    * aggregate, whose final merge shares this JVM in local mode).
+    */
   @volatile var lastStats: Option[TrainStats] = None
 }

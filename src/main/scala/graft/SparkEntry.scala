@@ -5553,10 +5553,12 @@ object SparkEntry {
     * Session-bound recompute contract as [[cachedBoundaries]] (a
     * frame from a stopped session fails every action); store dirs
     * ride the normal [[tempFixtureDir]] JVM-exit hook AND are deleted
-    * eagerly when a session restart replaces their entry (the
-    * [[cachedBoundaries]] contract — without it, same-JVM restarts
-    * accumulate dead store dirs and stopped-session references until
-    * exit; ADVICE r21); every gate still builds from scratch when run
+    * eagerly when a lookup from another session replaces an entry
+    * whose session is STOPPED (without it, same-JVM restarts
+    * accumulate dead store dirs until exit; ADVICE r21). An entry of a
+    * still-live session (`newSession()`, a parallel bench) keeps its
+    * dirs until exit: that session's frames read them lazily
+    * (ADVICE r22); every gate still builds from scratch when run
     * in isolation, and results are bit-identical because the fixtures
     * were already byte-identical.
     *
@@ -5575,18 +5577,18 @@ object SparkEntry {
     * race). `build` returns the fixture plus the temp dirs it
     * created, so a stale-session replacement can reclaim them.
     */
-  private def cachedStoreFixture[T](s: SparkSession, dir: String, key: String)(
+  private[graft] def cachedStoreFixture[T](s: SparkSession, dir: String, key: String)(
       build: => (T, Seq[java.nio.file.Path])): T =
     storeFixtureCache.synchronized {
       storeFixtureCache.get((dir, key)) match {
         case Some((sess, v, _)) if sess eq s => v.asInstanceOf[T]
         case stale =>
-          // session restarted: the superseded store dirs can never be
-          // read again (their frames belong to a stopped session) —
-          // reclaim them now instead of at JVM exit, and drop the
-          // stopped session reference with the entry
-          stale.foreach { case (_, _, dirs) =>
-            dirs.foreach { d =>
+          // another session asks: a stopped session's store dirs can
+          // never be read again — reclaim them now instead of at JVM
+          // exit; a live session's frames may still read them lazily,
+          // so those stay for the JVM-exit hook
+          stale.foreach { case (sess, _, dirs) =>
+            if (sess.sparkContext.isStopped) dirs.foreach { d =>
               deleteDirTree(d)
               fixtureDirs.synchronized { fixtureDirs -= d }
             }

@@ -78,4 +78,29 @@ class CacheOwnershipSpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dirs1.head)),
       s"superseded dir must be deleted: ${dirs1.head}")
   }
+
+  test("store fixture cache: a lookup from a second live session keeps the first session's frame readable") {
+    val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def build(s: org.apache.spark.sql.SparkSession) = {
+      val d = java.nio.file.Files.createTempDirectory("graft_storefix_spec")
+      made += d
+      val p = d.resolve("t").toString
+      s.range(5).write.parquet(p)
+      (s.read.parquet(p), Seq(d))
+    }
+    try {
+      val f1 = SparkEntry.cachedStoreFixture[DataFrame](spark, "spec://storefix", "live")(build(spark))
+      val s2 = spark.newSession()
+      val f2 = SparkEntry.cachedStoreFixture[DataFrame](s2, "spec://storefix", "live")(build(s2))
+      assert(made.size == 2, "a different session must rebuild")
+      assert(f2.collect().length == 5)
+      // the first session is not stopped: its dir must survive the replacement
+      assert(java.nio.file.Files.exists(made.head), s"live session's dir deleted: ${made.head}")
+      assert(f1.collect().map(_.getLong(0)).sorted.toSeq == (0L until 5L))
+    } finally made.foreach { d =>
+      val walk = java.nio.file.Files.walk(d)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    }
+  }
 }

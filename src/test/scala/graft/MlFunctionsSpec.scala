@@ -128,6 +128,28 @@ class MlFunctionsSpec extends SparkTestBase {
     assert(p.length == 1 && !p.head.isNaN)
   }
 
+  test("SQL ml_train_cfg aggregate records its per-epoch train/test MSE in lastStats") {
+    MlFunctions.registerAll(spark)
+    MlFunctions.create(
+      spark,
+      "sqlstats",
+      """{"layers":[{"in":2,"out":4,"activation":"relu"},{"in":4,"out":1}]}""",
+    )
+    (0 until 20).map(i => (Seq(i / 20f, 1f - i / 20f), Seq(i / 10f)))
+      .toDF("f", "t").createOrReplaceTempView("stats_rows")
+    MlFunctions.lastStats = None
+    val ok = spark
+      .sql("""SELECT ml_train_cfg('sqlstats', f, t, '{"epochs":7,"seed":3}') FROM stats_rows""")
+      .head()
+      .getString(0)
+    assert(ok == "Ok")
+    val stats = MlFunctions.lastStats.getOrElse(fail("ml_train_cfg left no TrainStats"))
+    assert(stats.epochTrainMse.length == 7 && stats.epochTestMse.length == 7)
+    // the aggregate keeps the reference's first-30% train split
+    assert(stats.trainRows == 6 && stats.testRows == 14)
+    assert((stats.epochTrainMse ++ stats.epochTestMse).forall(v => !v.isNaN && v >= 0.0))
+  }
+
   test("autompg.test SQL shape verbatim: ml_train over the relation yields 392 arity-1 prediction rows") {
     MlFunctions.registerAll(spark)
     val autompg = spark.read

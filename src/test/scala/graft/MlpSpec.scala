@@ -150,4 +150,176 @@ class MlpSpec extends AnyFunSuite {
     val x = Array(1f, 2f, 3f, 4f, 5f)
     assert(loaded.predict(x).sameElements(m.predict(x)))
   }
+
+  // ------------------------------------------------------------ golden bits
+
+  /** FNV-1a-style digest over the raw bits of every trained parameter
+    * (w, b, and per BatchNorm layer gamma, beta, running mean/var) and
+    * every per-epoch train/test MSE. Any change in arithmetic order,
+    * fused multiply-add, or dropout draw order changes it.
+    */
+  private def trainingDigest(m: Mlp, s: TrainStats): Long = {
+    var h = 0xcbf29ce484222325L
+    def mix(v: Long): Unit = { h = (h ^ v) * 0x100000001b3L; h ^= h >>> 29 }
+    def floats(a: Array[Float]): Unit = a.foreach(f => mix(java.lang.Float.floatToRawIntBits(f).toLong))
+    m.layers.foreach { l =>
+      floats(l.w); floats(l.b)
+      l.bn.foreach { bn => floats(bn.gamma); floats(bn.beta); floats(bn.runningMean); floats(bn.runningVar) }
+    }
+    (s.epochTrainMse ++ s.epochTestMse).foreach(d => mix(java.lang.Double.doubleToRawLongBits(d)))
+    mix(s.trainRows.toLong); mix(s.testRows.toLong)
+    h
+  }
+
+  private def goldenRun(
+      spec: String,
+      rows: Int,
+      inDim: Int,
+      outDim: Int,
+      cfg: TrainConfig,
+      trainFraction: Double,
+      dataSeed: Int = 11,
+  ): Long = {
+    val rng = new scala.util.Random(dataSeed)
+    // every 7th feature is an exact zero: the kernels' zero-input paths
+    val feats = Array.tabulate(rows, inDim)((r, i) =>
+      if ((r * inDim + i) % 7 == 3) 0f else rng.nextFloat() * 2 - 1)
+    val tgts = feats.map(f => Array.tabulate(outDim)(o => f.sum * (o + 1) * 0.3f + rng.nextFloat() * 0.1f))
+    val m = Mlp.fromSpec("golden", spec, seed = 42L)
+    val stats = m.fit(feats, tgts, cfg, trainFraction)
+    trainingDigest(m, stats)
+  }
+
+  private val benchSpec =
+    """{"layers":[{"in":5,"out":64,"activation":"relu"},""" +
+      """{"in":64,"out":32,"activation":"relu"},{"in":32,"out":1}]}"""
+  private val bnDropTanhSpec =
+    """{"layers":[
+      |{"in":4,"out":16,"activation":"tanh","batch_norm":true,"dropout":0.1},
+      |{"in":16,"out":8,"activation":"tanh","batch_norm":true,"dropout":0.1},
+      |{"in":8,"out":2}]}""".stripMargin
+  private val bnReluSpec =
+    """{"layers":[{"in":3,"out":6,"activation":"relu","batch_norm":true},{"in":6,"out":1}]}"""
+
+  /** Constants computed on the row-major kernels that predate the
+    * feature-major rewrite: training must stay bit-identical.
+    */
+  private val golden: Seq[(String, () => Long, Long)] = Seq(
+    ("bench net 5-64-32-1 relu, split 0.3, batch 64, seed 42",
+      () => goldenRun(benchSpec, 1200, 5, 1, TrainConfig(3, 64, 42L, 0.01f), 0.3), 0x96cb1e78bbc38315L),
+    ("bench net 5-64-32-1 relu, split 0.3, batch 64, seed 7",
+      () => goldenRun(benchSpec, 1200, 5, 1, TrainConfig(3, 64, 7L, 0.01f), 0.3), 0x8cc12f84b955f4d4L),
+    ("tanh + batch_norm + dropout 0.1, 2 outputs, seed 42",
+      () => goldenRun(bnDropTanhSpec, 400, 4, 2, TrainConfig(4, 32, 42L, 0.005f), 0.5), 0x18efc164154f2c78L),
+    ("tanh + batch_norm + dropout 0.1, 2 outputs, seed 9",
+      () => goldenRun(bnDropTanhSpec, 400, 4, 2, TrainConfig(4, 32, 9L, 0.005f), 0.5), 0x5e7d3ba091a8ab92L),
+    ("single identity layer",
+      () => goldenRun("""{"layers":[{"in":3,"out":1}]}""", 300, 3, 1, TrainConfig(5, 16, 42L, 0.01f), 0.3), 0xa79b2f8907f55a6cL),
+    ("100 rows at batch 32: tail batches of 1 row (33 train rows) through batch_norm",
+      () => goldenRun(bnReluSpec, 100, 3, 1, TrainConfig(3, 32, 42L, 0.01f), 0.33), 0x358b64dbf0c2cf2dL),
+    ("trainFraction 1.0: empty test split",
+      () => goldenRun(benchSpec, 200, 5, 1, TrainConfig(2, 64, 42L, 0.01f), 1.0), 0x1a582be6c551a3dcL),
+    ("1-row input, trained (trainFraction 1.0) through batch_norm",
+      () => goldenRun(bnReluSpec, 1, 3, 1, TrainConfig(3, 64, 42L, 0.01f), 1.0), 0x87d2841e01049c20L),
+    ("1-row input, empty train split (trainFraction 0.3)",
+      () => goldenRun(benchSpec, 1, 5, 1, TrainConfig(2, 64, 42L, 0.01f), 0.3), 0x0007501d613bad95L),
+  )
+
+  golden.foreach { case (label, run, expected) =>
+    test(s"golden training bits: $label") {
+      val got = run()
+      assert(got == expected, f"digest 0x$got%016xL != pinned 0x$expected%016xL")
+    }
+  }
+
+  // ------------------------------------------------------ gradient check
+
+  /** Batch-mean MSE of a train-mode forward (batch-statistic BatchNorm,
+    * no dropout) in double precision, over parameters given in the
+    * canonical tensor order of [[Mlp.backwardBatch]].
+    */
+  private def lossInDouble(
+      m: Mlp,
+      params: Array[Array[Double]],
+      x: Array[Array[Double]],
+      y: Array[Array[Double]],
+  ): Double = {
+    var cur = x
+    var pi = 0
+    m.layers.foreach { l =>
+      val w = params(pi); val b = params(pi + 1); pi += 2
+      val rows = cur.length
+      var z = Array.tabulate(rows, l.out) { (r, o) =>
+        var acc = b(o)
+        var i = 0
+        while (i < l.in) { acc += cur(r)(i) * w(i * l.out + o); i += 1 }
+        acc
+      }
+      l.bn.foreach { bn =>
+        val gamma = params(pi); val beta = params(pi + 1); pi += 2
+        val mean = Array.tabulate(l.out)(o => z.map(_(o)).sum / rows)
+        val variance = Array.tabulate(l.out)(o => z.map(zr => (zr(o) - mean(o)) * (zr(o) - mean(o))).sum / rows)
+        z = z.map(zr => Array.tabulate(l.out)(o =>
+          gamma(o) * (zr(o) - mean(o)) / math.sqrt(variance(o) + bn.eps) + beta(o)))
+      }
+      cur = z.map(_.map(v => l.activation match {
+        case Activation.Relu => math.max(v, 0.0)
+        case Activation.Tanh => math.tanh(v)
+        case Activation.Identity => v
+      }))
+    }
+    var sum = 0.0
+    for (r <- cur.indices; o <- cur(r).indices) { val d = cur(r)(o) - y(r)(o); sum += d * d }
+    sum / (cur.length * cur(0).length)
+  }
+
+  /** Tolerance of the check: |analytic - numeric| <= 1e-5 + 2e-3 * |numeric|.
+    * The analytic side runs in f32, the central difference (step 1e-6)
+    * in f64, so the bound covers f32 rounding of the backward pass only.
+    */
+  Seq("identity", "tanh", "relu").foreach { act =>
+    Seq(false, true).foreach { bn =>
+      test(s"backwardBatch matches a double-precision finite difference: $act, batch_norm=$bn") {
+        val spec =
+          s"""{"layers":[{"in":3,"out":5,"activation":"$act","batch_norm":$bn},""" +
+            s"""{"in":5,"out":2,"activation":"$act","batch_norm":$bn}]}"""
+        val m = Mlp.fromSpec(s"grad_$act", spec, seed = 5L)
+        // move BatchNorm affine parameters off their 1/0 init so their
+        // gradients are exercised away from the symmetric point
+        val prng = new scala.util.Random(13)
+        m.layers.foreach { l =>
+          l.b.indices.foreach(o => l.b(o) = prng.nextFloat() * 0.2f - 0.1f)
+          l.bn.foreach { p =>
+            p.gamma.indices.foreach(o => p.gamma(o) = 0.5f + prng.nextFloat())
+            p.beta.indices.foreach(o => p.beta(o) = prng.nextFloat() * 0.4f - 0.2f)
+          }
+        }
+        val rows = 8
+        val drng = new scala.util.Random(21)
+        val xb = Array.fill(rows * 3)(drng.nextFloat() * 2 - 1)
+        val yb = Array.fill(rows * 2)(drng.nextFloat() * 2 - 1)
+        val grads = m.copyOf().backwardBatch(xb, yb, rows, new scala.util.Random(0))
+
+        val params: Array[Array[Double]] = m.layers.flatMap { l =>
+          Seq(l.w, l.b) ++ l.bn.toSeq.flatMap(p => Seq(p.gamma, p.beta))
+        }.map(_.map(_.toDouble))
+        assert(grads.length == params.length)
+        val x = Array.tabulate(rows, 3)((r, i) => xb(r * 3 + i).toDouble)
+        val y = Array.tabulate(rows, 2)((r, o) => yb(r * 2 + o).toDouble)
+        val h = 1e-6
+        for (ti <- params.indices; k <- params(ti).indices) {
+          val p0 = params(ti)(k)
+          params(ti)(k) = p0 + h
+          val up = lossInDouble(m, params, x, y)
+          params(ti)(k) = p0 - h
+          val down = lossInDouble(m, params, x, y)
+          params(ti)(k) = p0
+          val numeric = (up - down) / (2 * h)
+          val analytic = grads(ti)(k).toDouble
+          assert(math.abs(analytic - numeric) <= 1e-5 + 2e-3 * math.abs(numeric),
+            s"tensor $ti element $k: analytic $analytic vs numeric $numeric")
+        }
+      }
+    }
+  }
 }
