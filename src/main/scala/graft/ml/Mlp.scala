@@ -92,15 +92,15 @@ final case class TrainStats(
   * `z(zOff + r) += x(xOff + r) * w` at ≈1.1 GMAC/s: C2 leaves a loop
   * scalar when its store and load offsets differ.
   *
-  * Bit-identity contract: training yields the same bits as the
-  * row-major kernels it replaced (pinned by MlpSpec's golden digests).
-  * Every output element sums bias first, then inputs in ascending
-  * order (four inputs per pass, still left to right); `dW`, `dB` and
-  * the BatchNorm sums accumulate rows in ascending order; dropout masks
-  * are drawn in row-major order. No `Math.fma`, no reassociation:
-  * either changes the rounding. Zero inputs are no longer skipped,
-  * which adds only signed zeros and so changes no bit while weights
-  * are finite. [[predict]] keeps its row-at-a-time form.
+  * Bit-identity contract (trained weights, BatchNorm statistics and
+  * per-epoch MSEs; MlpSpec's golden digests pin them): every output
+  * element sums bias first, then inputs in ascending order (four
+  * inputs per pass, still left to right); `dW`, `dB` and the BatchNorm
+  * sums accumulate rows in ascending order; dropout masks are drawn in
+  * row-major order. No `Math.fma`, no reassociation: either changes
+  * the rounding. A zero input is multiplied like any other: its
+  * product is a signed zero, which changes no sum while weights are
+  * finite. [[predict]] keeps its row-at-a-time form.
   */
 final class Mlp(
     val name: String,
