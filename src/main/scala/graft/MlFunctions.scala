@@ -386,8 +386,8 @@ object MlFunctions {
     * order, so set a seed and expect scan-order sensitivity (the
     * reference has the same property — it trains in chunk order); the
     * final merge runs in the reducer task, so the registry update and
-    * [[lastStats]] are only visible in local mode — cluster deployments use
-    * [[train]]/[[trainDistributed]]. Unlike the reference, predictions
+    * [[lastStats]] are only visible in local mode — cluster deployments
+    * use [[train]]/[[trainDistributed]]. Unlike the reference, predictions
     * are not returned inline (an aggregate yields one row); follow
     * with `ml_pred` after re-publish.
     */

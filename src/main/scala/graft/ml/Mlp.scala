@@ -287,24 +287,17 @@ final class Mlp(
       if (l.dropout > 0f) {
         val keep = 1.0f - l.dropout
         dropMask = Array.ofDim[Float](out, rows)
+        afterDrop = Array.ofDim[Float](out, rows)
         var r = 0
         while (r < rows) {
           var o = 0
           while (o < out) {
-            dropMask(o)(r) = if (rng.nextFloat() < keep) 1.0f / keep else 0.0f
+            val m = if (rng.nextFloat() < keep) 1.0f / keep else 0.0f
+            dropMask(o)(r) = m
+            afterDrop(o)(r) = afterBn(o)(r) * m
             o += 1
           }
           r += 1
-        }
-        afterDrop = new Array[Array[Float]](out)
-        var o = 0
-        while (o < out) {
-          val a = afterBn(o); val m = dropMask(o)
-          val d = new Array[Float](rows)
-          r = 0
-          while (r < rows) { d(r) = a(r) * m(r); r += 1 }
-          afterDrop(o) = d
-          o += 1
         }
       }
       // Activation
@@ -583,8 +576,7 @@ final class Mlp(
           o += 1
         }
       }
-      // linear backward: dB and dW sum rows in ascending order, four
-      // output units per pass (independent accumulators)
+      // linear backward: dB and dW sum rows in ascending order
       val dB = new Array[Float](out)
       var o = 0
       while (o < out) {
@@ -601,18 +593,6 @@ final class Mlp(
         val xi = tape.x(i)
         val wOff = i * out
         o = 0
-        while (o + 4 <= out) {
-          val g0 = dZ(o); val g1 = dZ(o + 1); val g2 = dZ(o + 2); val g3 = dZ(o + 3)
-          var a0 = 0f; var a1 = 0f; var a2 = 0f; var a3 = 0f
-          var r = 0
-          while (r < rows) {
-            val xv = xi(r)
-            a0 += xv * g0(r); a1 += xv * g1(r); a2 += xv * g2(r); a3 += xv * g3(r)
-            r += 1
-          }
-          dW(wOff + o) = a0; dW(wOff + o + 1) = a1; dW(wOff + o + 2) = a2; dW(wOff + o + 3) = a3
-          o += 4
-        }
         while (o < out) {
           val g = dZ(o)
           var acc = 0f
