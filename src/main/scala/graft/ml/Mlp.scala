@@ -215,7 +215,8 @@ final class Mlp(
     * half of the rows: relu cost 2/3 of the eval pass). It maps -0 to +0
     * where [[predict]] keeps -0; the sign of a zero never reaches a
     * weight, a running statistic or an MSE, because every sum it meets
-    * starts from a bias or an accumulator that is never -0.
+    * starts from +0 or from a bias, and Adam steps from a +0 init never
+    * make a bias -0.
     */
   private def activateRows(act: Activation, a: Array[Float], n: Int): Unit = act match {
     case Activation.Relu =>
