@@ -321,10 +321,11 @@ object Dedup {
     // Pass [[Materialize.Lazy]] when `sigs` is already parquet-backed
     // (the [[mergeSignatures]] shape) to skip the extra copy.
     val landed = Materialize(sigs.select("id", "sig", "grams"), materialize)
-    writeBandedTable(landed, path, name, numHashes, bands, maxBucketSize, numBuckets)
-    writeGramsTable(landed, path, name, numBuckets)
-    writeSignatureMeta(landed.sparkSession, path,
-      numHashes, bands, shingleSize, maxBucketSize, numBuckets)
+    StoreEpoch.commit(landed.sparkSession, path, name,
+      signatureMeta(numHashes, bands, shingleSize, maxBucketSize, numBuckets)) {
+      writeBandedTable(landed, path, name, numHashes, bands, maxBucketSize, numBuckets)
+      writeGramsTable(landed, path, name, numBuckets)
+    }
   }
 
   /** The banded-table write behind [[writeSignatures]] /
@@ -385,116 +386,40 @@ object Dedup {
       .sortBy("id")
       .saveAsTable(s"${name}_grams")
 
-  /** The meta write behind [[writeSignatures]] / [[mergeSignatures]].
-    * ALWAYS last: the meta job's `_SUCCESS` marker is the
-    * epoch-completeness signal the compaction protocol
-    * ([[graft.streaming.StreamingDedup.compactSignatureStore]])
-    * trusts, so every data file — including the merge's copied
-    * standing files — must be in place before it lands.
+  /** The meta row of [[writeSignatures]] / [[mergeSignatures]]: the
+    * banding recipe and bucket count, in [[readSignatures]]' order.
     */
-  private def writeSignatureMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
+  private def signatureMeta(
       numHashes: Int,
       bands: Int,
       shingleSize: Int,
       maxBucketSize: Int,
       numBuckets: Int,
-  ): Unit = {
-    import spark.implicits._
-    Seq((numHashes, bands, shingleSize, maxBucketSize, numBuckets))
-      .toDF("num_hashes", "bands", "shingle_size", "max_bucket_size", "num_buckets")
-      .coalesce(1)
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/meta")
-  }
+  ): Seq[(String, Int)] =
+    Seq("num_hashes" -> numHashes, "bands" -> bands, "shingle_size" -> shingleSize,
+      "max_bucket_size" -> maxBucketSize, "num_buckets" -> numBuckets)
 
   /** Open a [[SignatureStore]] written by [[writeSignatures]]. In a
     * fresh session the bucketed tables are re-registered over the
     * parquet location (DDL with the meta's bucket spec) — bucketing
     * metadata lives in the catalog, not the files, so this is what
-    * restores the no-exchange join property after a restart.
+    * restores the no-exchange join property after a restart. A name
+    * registered at another path fails actionably
+    * ([[StoreEpoch.register]]).
     */
-  /** Default ports for the schemes whose URIs commonly appear both
-    * with and without one (the [[readSignatures]] location guard
-    * normalizes them away). Not exhaustive — an unlisted scheme just
-    * compares its authority verbatim.
-    */
-  private val defaultFsPorts: Map[String, Int] =
-    Map("hdfs" -> 8020, "webhdfs" -> 9870, "ftp" -> 21)
-
-  /** The [[readSignatures]] stale-registration guard's canonical
-    * spelling of a store location: qualified (schemeful paths as-is —
-    * qualifying would instantiate a live FS client for a cluster we
-    * may only be COMPARING against; scheme-less via the session
-    * conf's default FS), scheme and authority lower-cased (DNS
-    * hostnames compare case-insensitively), the scheme's default
-    * port stripped ([[defaultFsPorts]] — `hdfs://nn:8020/x` and
-    * `hdfs://nn/x` name the same filesystem), trailing slash
-    * dropped. Two locations are "the same store" iff their
-    * normalized spellings are equal.
-    */
-  private[graft] def normalizeStoreLocation(
-      p: org.apache.hadoop.fs.Path,
-      hadoopConf: org.apache.hadoop.conf.Configuration): String = {
-    val q =
-      if (p.toUri.getScheme != null) p
-      else p.getFileSystem(hadoopConf).makeQualified(p)
-    val u = q.toUri
-    val scheme = Option(u.getScheme).map(_.toLowerCase).getOrElse("")
-    val auth = Option(u.getAuthority).getOrElse("").toLowerCase
-    val authNorm = defaultFsPorts.get(scheme) match {
-      case Some(dp) if auth.endsWith(s":$dp") =>
-        auth.dropRight(dp.toString.length + 1)
-      case _ => auth
-    }
-    s"$scheme://$authNorm${u.getPath.stripSuffix("/")}"
-  }
-
   def readSignatures(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       name: String,
   ): SignatureStore = {
-    val m = spark.read.parquet(s"$path/meta").head()
+    val m = StoreEpoch.readMeta(spark, path)
     val (numHashes, bands, shingleSize, maxBucketSize, numBuckets) =
       (m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3), m.getInt(4))
-    def ensure(table: String, sub: String, schema: String, key: String): DataFrame = {
-      if (!spark.catalog.tableExists(table)) {
-        spark.sql(
-          s"CREATE TABLE $table ($schema) USING PARQUET " +
-            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $numBuckets BUCKETS " +
-            s"LOCATION '$path/$sub'")
-      } else {
-        // a registered name pointing at a DIFFERENT path would
-        // silently serve stale data (epoch dirs + reused names are
-        // exactly the mergeSignatures workflow) — fail actionably.
-        // Hadoop Path, NOT java.nio: catalog locations are qualified
-        // URIs on whatever filesystem the store lives on (hdfs/s3a/
-        // file) and NIO has no provider for cluster schemes — the
-        // restart-on-cluster path this guard protects would crash
-        // with FileSystemNotFoundException instead of validating.
-        val hadoopConf = spark.sparkContext.hadoopConfiguration
-        def norm(p: org.apache.hadoop.fs.Path): String =
-          normalizeStoreLocation(p, hadoopConf)
-        val registered = new org.apache.hadoop.fs.Path(
-          spark.sql(s"DESCRIBE FORMATTED $table")
-            .where(col("col_name") === "Location")
-            .select("data_type").head().getString(0))
-        val expected = new org.apache.hadoop.fs.Path(s"$path/$sub")
-        require(norm(registered) == norm(expected),
-          s"readSignatures: table $table is already registered at ${norm(registered)}, " +
-            s"not ${norm(expected)} — use a distinct name per store path " +
-            "(epoch-suffixed names) " +
-            "or DROP TABLE the stale registration first")
-      }
-      spark.table(table)
-    }
+    def table(sub: String, schema: String, key: String): DataFrame =
+      StoreEpoch.register(spark, "readSignatures", path, name, sub, schema, key, numBuckets)
     SignatureStore(
-      ensure(s"${name}_banded", "banded", "bucket STRING, id BIGINT, bucket_n BIGINT", "bucket"),
-      ensure(s"${name}_grams", "grams",
-        "id BIGINT, sig ARRAY<BIGINT>, grams ARRAY<BIGINT>", "id"),
+      table("banded", "bucket STRING, id BIGINT, bucket_n BIGINT", "bucket"),
+      table("grams", "id BIGINT, sig ARRAY<BIGINT>, grams ARRAY<BIGINT>", "id"),
       numHashes, bands, shingleSize, maxBucketSize, numBuckets)
   }
 
@@ -563,18 +488,17 @@ object Dedup {
     // corpus-wide rebuild — bucket populations and the write-time skew
     // cap are properties of the UNION — but its standing read prunes
     // to (id, sig): the wide grams column (the store's dominant bytes)
-    // never moves through a merge at all. Meta lands LAST, after the
-    // copy — its `_SUCCESS` is the epoch-completeness marker the
-    // compaction protocol trusts.
-    writeBandedTable(
-      src.grams.select(col("id"), col("sig"))
-        .unionByName(add.select(col("id"), col("sig"))),
-      dstPath, dstName, src.numHashes, src.bands, src.maxBucketSize, src.numBuckets)
-    writeGramsTable(add, dstPath, dstName, src.numBuckets)
-    VectorStore.copyBucketFiles(spark, s"$srcPath/grams", s"$dstPath/grams")
-    spark.catalog.refreshTable(s"${dstName}_grams")
-    writeSignatureMeta(spark, dstPath,
-      src.numHashes, src.bands, src.shingleSize, src.maxBucketSize, src.numBuckets)
+    // never moves through a merge at all.
+    StoreEpoch.commit(spark, dstPath, dstName,
+      signatureMeta(src.numHashes, src.bands, src.shingleSize, src.maxBucketSize,
+        src.numBuckets),
+      Some(StoreEpoch.Standing(srcPath, Seq("grams")))) {
+      writeBandedTable(
+        src.grams.select(col("id"), col("sig"))
+          .unionByName(add.select(col("id"), col("sig"))),
+        dstPath, dstName, src.numHashes, src.bands, src.maxBucketSize, src.numBuckets)
+      writeGramsTable(add, dstPath, dstName, src.numBuckets)
+    }
     readSignatures(spark, dstPath, dstName)
   }
 

@@ -216,20 +216,10 @@ object VectorStore {
 
   /** The shared persist tail of [[write]] and [[merge]] — takes
     * ALREADY-CODED frames so compaction never re-encodes the standing
-    * corpus.
+    * corpus. Lands the epoch through [[StoreEpoch.commit]]: models and
+    * both bucketed tables, then (on a merge) the `standing` part files,
+    * then `meta` last.
     */
-  /** The parquet location a catalog table is registered at, or None
-    * if the table doesn't exist — the shared input of [[read]]'s and
-    * [[writeFrames]]'s collision guards.
-    */
-  private def registeredLocation(
-      spark: SparkSession, table: String): Option[org.apache.hadoop.fs.Path] =
-    if (!spark.catalog.tableExists(table)) None
-    else Some(new org.apache.hadoop.fs.Path(
-      spark.sql(s"DESCRIBE FORMATTED $table")
-        .where(col("col_name") === "Location")
-        .select("data_type").head().getString(0)))
-
   private def writeFrames(
       spark: SparkSession,
       coded: DataFrame,
@@ -241,8 +231,8 @@ object VectorStore {
       numBuckets: Int,
       opq: Option[OpqModel],
       face: String,
+      standing: Option[StoreEpoch.Standing] = None,
   ): Unit = {
-    import spark.implicits._
     // validate under the CALLER's face name, so an invalid dstName /
     // dstPath reaching this tail through merge or ingestDedup names
     // the operator the user actually invoked, not "write"
@@ -255,36 +245,32 @@ object VectorStore {
     // the same job idempotent. Open READERS of the old path are
     // protected where it matters: a reopen through [[read]] fails
     // actionably if the name no longer matches the path it expects.
-    IndexStore.saveIvf(spark, ivf, s"$path/model")
-    // saveOpq persists the rotation AND its codebooks (pq == opq.pq
-    // for an OPQ store); the rotation dir's presence is what [[read]]
-    // dispatches the store's recipe on
-    opq match {
-      case Some(o) => IndexStore.saveOpq(spark, o, s"$path/model")
-      case None => IndexStore.savePq(spark, pq, s"$path/model")
+    StoreEpoch.commit(spark, path, name, Seq("num_buckets" -> numBuckets), standing) {
+      IndexStore.saveIvf(spark, ivf, s"$path/model")
+      // saveOpq persists the rotation AND its codebooks (pq == opq.pq
+      // for an OPQ store); the rotation dir's presence is what [[read]]
+      // dispatches the store's recipe on
+      opq match {
+        case Some(o) => IndexStore.saveOpq(spark, o, s"$path/model")
+        case None => IndexStore.savePq(spark, pq, s"$path/model")
+      }
+      coded
+        .select("cell", "id", "code", "hcode")
+        .write
+        .mode(SaveMode.Overwrite)
+        .option("path", s"$path/coded")
+        .bucketBy(numBuckets, "cell")
+        .sortBy("cell")
+        .saveAsTable(s"${name}_coded")
+      vecs
+        .select("id", "vec")
+        .write
+        .mode(SaveMode.Overwrite)
+        .option("path", s"$path/vecs")
+        .bucketBy(numBuckets, "id")
+        .sortBy("id")
+        .saveAsTable(s"${name}_vecs")
     }
-    coded
-      .select("cell", "id", "code", "hcode")
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("path", s"$path/coded")
-      .bucketBy(numBuckets, "cell")
-      .sortBy("cell")
-      .saveAsTable(s"${name}_coded")
-    vecs
-      .select("id", "vec")
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("path", s"$path/vecs")
-      .bucketBy(numBuckets, "id")
-      .sortBy("id")
-      .saveAsTable(s"${name}_vecs")
-    Seq(numBuckets)
-      .toDF("num_buckets")
-      .coalesce(1)
-      .write
-      .mode(SaveMode.Overwrite)
-      .parquet(s"$path/meta")
   }
 
   /** Open a store written by [[write]]. In a fresh session the
@@ -296,26 +282,9 @@ object VectorStore {
     */
   def read(spark: SparkSession, path: String, name: String): CodedVectorStore = {
     validateNameAndPath(name, path, "read")
-    val numBuckets = spark.read.parquet(s"$path/meta").head().getInt(0)
-    def ensure(table: String, sub: String, schema: String, key: String): DataFrame = {
-      registeredLocation(spark, table) match {
-        case None =>
-          spark.sql(
-            s"CREATE TABLE $table ($schema) USING PARQUET " +
-              s"CLUSTERED BY ($key) SORTED BY ($key) INTO $numBuckets BUCKETS " +
-              s"LOCATION '$path/$sub'")
-        case Some(registered) =>
-          val hadoopConf = spark.sparkContext.hadoopConfiguration
-          def norm(p: org.apache.hadoop.fs.Path): String =
-            Dedup.normalizeStoreLocation(p, hadoopConf)
-          val expected = new org.apache.hadoop.fs.Path(s"$path/$sub")
-          require(norm(registered) == norm(expected),
-            s"VectorStore.read: table $table is already registered at ${norm(registered)}, " +
-              s"not ${norm(expected)} — use a distinct name per store path " +
-              "(epoch-suffixed names) or DROP TABLE the stale registration first")
-      }
-      spark.table(table)
-    }
+    val numBuckets = StoreEpoch.readMeta(spark, path).getInt(0)
+    def table(sub: String, schema: String, key: String): DataFrame =
+      StoreEpoch.register(spark, "VectorStore.read", path, name, sub, schema, key, numBuckets)
     // recipe dispatch: a persisted rotation marks an OPQ store (every
     // artifact in rotated space); loadOpq reads the codebooks from the
     // same model dir, so pq == opq.pq by construction
@@ -327,9 +296,8 @@ object VectorStore {
         Some(IndexStore.loadOpq(spark, s"$path/model"))
       else None
     CodedVectorStore(
-      ensure(s"${name}_coded", "coded",
-        "cell INT, id BIGINT, code BINARY, hcode ARRAY<BIGINT>", "cell"),
-      ensure(s"${name}_vecs", "vecs", "id BIGINT, vec ARRAY<FLOAT>", "id"),
+      table("coded", "cell INT, id BIGINT, code BINARY, hcode ARRAY<BIGINT>", "cell"),
+      table("vecs", "id BIGINT, vec ARRAY<FLOAT>", "id"),
       IndexStore.loadIvf(spark, s"$path/model"),
       opq.map(_.pq).getOrElse(IndexStore.loadPq(spark, s"$path/model")),
       numBuckets,
@@ -402,38 +370,9 @@ object VectorStore {
     writeFrames(spark,
       landed.select("cell", "id", "code", "hcode"),
       landed.select("id", "vec"),
-      src.ivf, src.pq, dstPath, dstName, src.numBuckets, src.opq, face = "merge")
-    copyBucketFiles(spark, s"$srcPath/coded", s"$dstPath/coded")
-    copyBucketFiles(spark, s"$srcPath/vecs", s"$dstPath/vecs")
-    spark.catalog.refreshTable(s"${dstName}_coded")
-    spark.catalog.refreshTable(s"${dstName}_vecs")
+      src.ivf, src.pq, dstPath, dstName, src.numBuckets, src.opq, face = "merge",
+      standing = Some(StoreEpoch.Standing(srcPath, Seq("coded", "vecs"))))
     read(spark, dstPath, dstName)
-  }
-
-  /** Copy a bucketed table directory's data files into another
-    * bucketed table directory of the SAME bucket spec — the standing
-    * side of a store compaction ([[merge]]'s coded/vecs tables,
-    * [[Dedup.mergeSignatures]]' grams table). Only `part-*` data
-    * files move (commit markers stay); names are kept verbatim — the
-    * `_NNNNN` bucket suffix is what assigns a file to its bucket, and
-    * name collisions cannot happen because every write job stamps a
-    * fresh UUID into its part names.
-    */
-  private[operators] def copyBucketFiles(
-      spark: SparkSession, srcDir: String, dstDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcPath = new org.apache.hadoop.fs.Path(srcDir)
-    val dstPath = new org.apache.hadoop.fs.Path(dstDir)
-    val fs = srcPath.getFileSystem(conf)
-    fs.listStatus(srcPath).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isFile && name.startsWith("part-")) {
-        val ok = org.apache.hadoop.fs.FileUtil.copy(
-          fs, st.getPath, fs, new org.apache.hadoop.fs.Path(dstPath, name),
-          false, false, conf)
-        require(ok, s"copyBucketFiles: failed to copy standing file $name to $dstDir")
-      }
-    }
   }
 
   /** The COMPOSED daily-ingest verb — exactly the workflow [[merge]]'s

@@ -448,8 +448,9 @@ object EventStreams {
   }
 
   /** Score a stream of feature arrays with a registered model — the
-    * streaming face of `ml_pred`: the same broadcast-snapshot UDF works
-    * unchanged because it is stateless per row.
+    * streaming face of `ml_pred`: [[graft.MlFunctions.predictCol]]'s
+    * native `MlpPredict` expression works unchanged because it is
+    * stateless per row.
     */
   def scoreStream(spark: SparkSession, events: DataFrame, modelName: String, features: org.apache.spark.sql.Column): DataFrame =
     events.withColumn("prediction", graft.MlFunctions.predictCol(spark, modelName, features))

@@ -339,7 +339,7 @@ object StreamingDedup {
     * increment invisible to the compaction, which would then no-op
     * forever rather than lose data.
     */
-  private[streaming] def listSignatureIncrements(
+  private[graft] def listSignatureIncrements(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
   ): Seq[(Long, String)] = {
@@ -451,132 +451,17 @@ object StreamingDedup {
       incDir: String,
       keepEpochs: Int = 2,
       upToBatchId: Long = Long.MaxValue,
-  ): graft.operators.Dedup.SignatureStore = {
-    val srcPath = s"$epochRoot/epoch$srcEpoch"
-    val srcName = s"${baseName}_e$srcEpoch"
-    val nextPath = s"$epochRoot/epoch${srcEpoch + 1}"
-    val nextName = s"${baseName}_e${srcEpoch + 1}"
-    // meta is the LAST file writeSignatures lands, so its presence
-    // means epoch srcEpoch+1 round-tripped in some earlier turn —
-    // either this turn is a crash-recovery re-run or the caller's
-    // srcEpoch is stale; both cases are distinguished below, and
-    // neither may be answered with the srcEpoch store (resurrecting
-    // it would let tomorrow's fold clobber the live epoch).
-    // Completeness is the meta JOB COMMIT (`meta/_SUCCESS`), not the
-    // directory: Spark creates the output dir at job setup, so a crash
-    // DURING the meta write leaves an empty meta dir that a bare
-    // existence test would trust — pruning the increments and wedging
-    // the next turn on the empty read. Same marker the increment
-    // listing gates on.
-    def nextEpochComplete: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$nextPath/meta/_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    // the retirement steps every turn ends with: prune epoch dirs
-    // (capped at the epoch just written/resumed), then retire
-    // catalog registrations by CATALOG-vs-DIRECTORY diff — every
-    // `<base>_e<n>` pair (n ≤ the live epoch) whose epoch dir no
-    // longer exists is dropped, not just the dirs THIS turn deleted.
-    // The diff form is crash-safe where drop-what-I-just-deleted is
-    // not: a turn that dies between the directory deletion and the
-    // DROPs leaves strands that a deletion-keyed drop can never see
-    // again (the dirs are already gone, so the next prune returns
-    // them as already-pruned), while the diff heals them on the next
-    // turn. A persistent metastore therefore stays exactly as large
-    // as the live epoch set.
-    def finishTurn(dst: graft.operators.Dedup.SignatureStore)
-        : graft.operators.Dedup.SignatureStore = {
-      graft.operators.Dedup.pruneSignatureEpochs(
-        spark, epochRoot, keepEpochs, upTo = srcEpoch + 1L)
-      val fs = new org.apache.hadoop.fs.Path(epochRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val epochTable = s"^${java.util.regex.Pattern.quote(baseName)}_e(\\d+)_(?:banded|grams)$$".r
-      spark.sql(s"SHOW TABLES LIKE '${baseName}_e*'").collect().foreach { row =>
-        val t = row.getString(1)
-        epochTable.findFirstMatchIn(t).map(_.group(1).toLong).foreach { n =>
-          // leave higher-than-live indices alone — they are aborted
-          // future runs' business, same cap as the directory prune
-          if (n <= srcEpoch + 1L &&
-              !fs.exists(new org.apache.hadoop.fs.Path(s"$epochRoot/epoch$n")))
-            spark.sql(s"DROP TABLE IF EXISTS $t")
-        }
-      }
-      dst
-    }
-    val listed = listSignatureIncrements(spark, incDir)
-    if (listed.isEmpty) {
-      if (nextEpochComplete)
-        // crash-recovery: fold + increment prune landed, the crash
-        // hit before epoch retirement — finish retirement, hand back
-        // the LIVE epoch
-        finishTurn(graft.operators.Dedup.readSignatures(spark, nextPath, nextName))
-      else
-        graft.operators.Dedup.readSignatures(spark, srcPath, srcName)
-    } else {
-      val pruneCap = math.min(upToBatchId, listed.map(_._1).max)
-      if (nextEpochComplete) {
-        // a complete next epoch's foldmark is trusted (it landed
-        // before the epoch's data, meta landed after): listed
-        // batchIds at or under it were folded by the crashed turn —
-        // pure recovery; any ABOVE it landed after that fold, so the
-        // caller's srcEpoch lags the live store
-        val mark = readFoldmark(spark, nextPath)
-        val unFolded = listed.map(_._1).filter(_ > mark)
-        require(unFolded.isEmpty,
-          s"compactSignatureStore: $nextPath already holds a complete epoch whose " +
-            s"foldmark ($mark) predates landed increments ${unFolded.mkString(",")} — " +
-            s"srcEpoch=$srcEpoch is stale (the live store is epoch ${srcEpoch + 1} " +
-            "or later); re-run with the current epoch index, or the fold would " +
-            "clobber the live epoch")
-        pruneSignatureIncrements(spark, incDir, pruneCap)
-        finishTurn(graft.operators.Dedup.readSignatures(spark, nextPath, nextName))
-      } else {
-        // idempotent fold by METADATA: the source epoch's own
-        // foldmark names the highest batchId folded into it, so
-        // increments a crashed turn already folded (into what is NOW
-        // the source epoch) are skipped by batchId — no data-plane
-        // containment check, and a TRUE id collision (sink contract
-        // broken) still fails loudly in mergeSignatures
-        val srcMark = readFoldmark(spark, srcPath)
-        val freshPaths = listed.collect { case (b, p) if b > srcMark => p }
-        if (freshPaths.isEmpty) {
-          // every listed increment was folded by the turn that wrote
-          // the CURRENT source epoch (its prune crashed) — nothing to
-          // fold, no copy epoch; drop the increments
-          pruneSignatureIncrements(spark, incDir, pruneCap)
-          finishTurn(graft.operators.Dedup.readSignatures(spark, srcPath, srcName))
-        } else {
-          val inc = spark.read.parquet(freshPaths: _*)
-          if (inc.isEmpty) {
-            // fresh epochs exist but hold zero rows (batches with no
-            // survivors): nothing to fold — drop the empties, keep
-            // the store as-is (a copy epoch would double storage for
-            // nothing). The turn still COMPLETES, so retirement runs
-            // exactly as on the freshPaths.isEmpty no-op (symmetric
-            // no-op branches; a crash-stranded old epoch dir or
-            // catalog pair heals here instead of waiting for the next
-            // non-empty fold)
-            pruneSignatureIncrements(spark, incDir, pruneCap)
-            finishTurn(graft.operators.Dedup.readSignatures(spark, srcPath, srcName))
-          } else {
-            // foldmark FIRST, then the fold: a crash in between
-            // leaves an incomplete epoch whose foldmark the re-run
-            // overwrites — it is only ever trusted once meta lands
-            writeFoldmark(spark, nextPath, listed.map(_._1).max)
-            // Lazy increment landing: `inc` IS the landed increment
-            // parquet (listed by the `_SUCCESS`-gated directory scan
-            // above) — deterministic and already on disk, so the
-            // merge's default re-landing would be a redundant copy
-            val dst = graft.operators.Dedup.mergeSignatures(
-              spark, srcPath, srcName, inc, nextPath, nextName,
-              materialize = graft.operators.Materialize.Lazy)
-            pruneSignatureIncrements(spark, incDir, pruneCap)
-            finishTurn(dst)
-          }
-        }
-      }
-    }
-  }
+  ): graft.operators.Dedup.SignatureStore =
+    graft.operators.StoreEpoch.compactionTurn(spark, "compactSignatureStore", epochRoot,
+        baseName, Seq("banded", "grams"), srcEpoch, incDir, keepEpochs, upToBatchId)(
+      e => graft.operators.Dedup.readSignatures(spark, e.path, e.name),
+      // Lazy increment landing: the increment IS landed parquet
+      // (listed by the `_SUCCESS`-gated directory scan) — deterministic
+      // and already on disk, so the merge's default re-landing would be
+      // a redundant copy
+      (src, inc, next) => graft.operators.Dedup.mergeSignatures(
+        spark, src.path, src.name, inc, next.path, next.name,
+        materialize = graft.operators.Materialize.Lazy))
 
   /** The compaction turn's fold high-water mark: the highest
     * increment batchId folded into the epoch at `epochPath`, landed

@@ -27,10 +27,10 @@ import graft.operators.{Similarity, VectorStore}
   *     about their originals still fold away), then prunes folded
   *     increments and retires old epochs + catalog registrations.
   *
-  * Same crash-recovery protocol as the signature compaction
-  * (foldmark-before-fold, meta-lands-last, prune capped at the
-  * listed snapshot) — one discipline for both stores, so an operator
-  * who learned one runs the other.
+  * The compaction turn is the signature store's own
+  * ([[graft.operators.StoreEpoch.compactionTurn]]: foldmark before
+  * the fold, meta lands last, prune capped at the listed snapshot) —
+  * one implementation for both stores.
   */
 object StreamingVectorStore {
 
@@ -326,11 +326,14 @@ object StreamingVectorStore {
     * convention), then prune folded increments and retire old epoch
     * dirs + catalog registrations, keep-latest-`keepEpochs`.
     *
-    * CRASH RECOVERY is decided from metadata alone, exactly as the
-    * signature turn documents (read that scaladoc for the window
-    * analysis): foldmark lands before the fold, the epoch's `meta`
-    * lands LAST ([[graft.operators.VectorStore]] writes coded, vecs,
-    * then meta), a complete next epoch with a foldmark below a listed
+    * CRASH RECOVERY is decided from metadata alone by the SAME turn
+    * the signature store runs ([[graft.operators.StoreEpoch.compactionTurn]];
+    * read the signature turn's scaladoc for the window analysis):
+    * foldmark lands before the fold, the epoch's `meta` lands LAST
+    * (every [[graft.operators.VectorStore]] write and merge commits
+    * through [[graft.operators.StoreEpoch.commit]]: models, coded,
+    * vecs, the merge's standing copy, then meta), a complete next
+    * epoch with a foldmark below a listed
     * batchId means the caller's `srcEpoch` is stale and the turn
     * fails actionably, and increments a crashed turn already folded
     * are skipped by batchId — never re-encoded, never deadlocked on
@@ -359,89 +362,13 @@ object StreamingVectorStore {
       materialize: graft.operators.Materialize = graft.operators.Materialize.LocalCheckpoint,
   ): (VectorStore.CodedVectorStore, DataFrame) = {
     import spark.implicits._
-    val srcPath = s"$epochRoot/epoch$srcEpoch"
-    val srcName = s"${baseName}_e$srcEpoch"
-    val nextPath = s"$epochRoot/epoch${srcEpoch + 1}"
-    val nextName = s"${baseName}_e${srcEpoch + 1}"
-    def emptyLedger: DataFrame =
-      Seq.empty[(Long, Long, Double)].toDF("id", "dup_of", "cosine")
-    // completeness is the meta JOB COMMIT (`meta/_SUCCESS`), not the
-    // meta directory: Spark creates the output dir at job setup, so a
-    // crash DURING the meta write leaves an empty meta dir — a bare
-    // existence test would then treat the epoch as complete, prune the
-    // increments, and wedge the next turn on reading the empty meta.
-    // Same marker the increment listing gates on.
-    def nextEpochComplete: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$nextPath/meta/_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    // retirement: epoch dirs capped at the epoch just written, then
-    // catalog-vs-directory diff (crash-safe where
-    // drop-what-I-just-deleted is not — see the signature twin)
-    def finishTurn(dst: VectorStore.CodedVectorStore): VectorStore.CodedVectorStore = {
-      graft.operators.Dedup.pruneSignatureEpochs(
-        spark, epochRoot, keepEpochs, upTo = srcEpoch + 1L)
-      val fs = new org.apache.hadoop.fs.Path(epochRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val epochTable =
-        s"^${java.util.regex.Pattern.quote(baseName)}_e(\\d+)_(?:coded|vecs)$$".r
-      spark.sql(s"SHOW TABLES LIKE '${baseName}_e*'").collect().foreach { row =>
-        val t = row.getString(1)
-        epochTable.findFirstMatchIn(t).map(_.group(1).toLong).foreach { n =>
-          if (n <= srcEpoch + 1L &&
-              !fs.exists(new org.apache.hadoop.fs.Path(s"$epochRoot/epoch$n")))
-            spark.sql(s"DROP TABLE IF EXISTS $t")
-        }
-      }
-      dst
-    }
-    val listed = StreamingDedup.listSignatureIncrements(spark, incDir)
-    if (listed.isEmpty) {
-      if (nextEpochComplete)
-        (finishTurn(VectorStore.read(spark, nextPath, nextName)), emptyLedger)
-      else
-        (VectorStore.read(spark, srcPath, srcName), emptyLedger)
-    } else {
-      val pruneCap = math.min(upToBatchId, listed.map(_._1).max)
-      if (nextEpochComplete) {
-        val mark = StreamingDedup.readFoldmark(spark, nextPath)
-        val unFolded = listed.map(_._1).filter(_ > mark)
-        require(unFolded.isEmpty,
-          s"compactVectorStore: $nextPath already holds a complete epoch whose " +
-            s"foldmark ($mark) predates landed increments ${unFolded.mkString(",")} — " +
-            s"srcEpoch=$srcEpoch is stale (the live store is epoch ${srcEpoch + 1} " +
-            "or later); re-run with the current epoch index, or the fold would " +
-            "clobber the live epoch")
-        StreamingDedup.pruneSignatureIncrements(spark, incDir, pruneCap)
-        (finishTurn(VectorStore.read(spark, nextPath, nextName)), emptyLedger)
-      } else {
-        val srcMark = StreamingDedup.readFoldmark(spark, srcPath)
-        val freshPaths = listed.collect { case (b, p) if b > srcMark => p }
-        if (freshPaths.isEmpty) {
-          StreamingDedup.pruneSignatureIncrements(spark, incDir, pruneCap)
-          (finishTurn(VectorStore.read(spark, srcPath, srcName)), emptyLedger)
-        } else {
-          val inc = spark.read.parquet(freshPaths: _*)
-          if (inc.isEmpty) {
-            // fresh-but-empty increments (batches with no survivors):
-            // nothing to fold, no copy epoch — but the turn still
-            // COMPLETES, so retirement runs exactly as on the
-            // freshPaths.isEmpty no-op (symmetric no-op branches; a
-            // crash-stranded old epoch dir or catalog pair heals here
-            // instead of waiting for the next non-empty fold)
-            StreamingDedup.pruneSignatureIncrements(spark, incDir, pruneCap)
-            (finishTurn(VectorStore.read(spark, srcPath, srcName)), emptyLedger)
-          } else {
-            StreamingDedup.writeFoldmark(spark, nextPath, listed.map(_._1).max)
-            val (dst, victims) = VectorStore.ingestDedup(spark, srcPath, srcName,
-              inc, "id", "vec", nextPath, nextName,
-              threshold = threshold, searchK = searchK, nprobe = nprobe,
-              refine = refine, materialize = materialize)
-            StreamingDedup.pruneSignatureIncrements(spark, incDir, pruneCap)
-            (finishTurn(dst), victims)
-          }
-        }
-      }
-    }
+    graft.operators.StoreEpoch.compactionTurn(spark, "compactVectorStore", epochRoot,
+        baseName, Seq("coded", "vecs"), srcEpoch, incDir, keepEpochs, upToBatchId)(
+      e => (VectorStore.read(spark, e.path, e.name),
+        Seq.empty[(Long, Long, Double)].toDF("id", "dup_of", "cosine")),
+      (src, inc, next) => VectorStore.ingestDedup(spark, src.path, src.name,
+        inc, "id", "vec", next.path, next.name,
+        threshold = threshold, searchK = searchK, nprobe = nprobe,
+        refine = refine, materialize = materialize))
   }
 }

@@ -948,7 +948,7 @@ class DedupSpec extends SparkTestBase {
   test("signature store: location guard normalizes authority — host case and scheme default ports do not block a legitimate re-open") {
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    def n(s: String) = Dedup.normalizeStoreLocation(new Path(s), conf)
+    def n(s: String) = graft.operators.StoreEpoch.normalizeStoreLocation(new Path(s), conf)
     // equivalent spellings of one hdfs location: with/without the
     // default 8020 port, upper/lower host case, trailing slash
     assert(n("hdfs://NN:8020/warehouse/sig") == n("hdfs://nn/warehouse/sig/"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Similarity, VectorStore}
-import graft.streaming.StreamingVectorStore
+import graft.streaming.{StreamingDedup, StreamingVectorStore}
 
 /** Top-level (not nested in the suite): MemoryStream needs a product
   * encoder, and inner case classes capture the suite's outer pointer.
@@ -455,5 +455,74 @@ class StreamingVectorStoreSpec extends SparkTestBase {
     assert(!spark.catalog.tableExists("svsc_e0_coded") &&
       !spark.catalog.tableExists("svsc_e0_vecs"),
       "catalog retirement must run on the zero-row no-op turn")
+  }
+
+  test("compactVectorStore: every crash window resumes to the live epoch; a stale srcEpoch cannot clobber it") {
+    // the signature turn's gauntlet (StreamingSpec) run against the
+    // vector store: windows A/B/C, the stale caller, and the
+    // already-folded-plus-fresh increment that must not deadlock
+    val df = corpus(67)
+    val ivf = Similarity.trainIvf(df, "embedding", nlist = 8, seed = 3L)
+    val pq = Similarity.trainPq(df, "embedding", m = 4, ksub = 16, seed = 3L)
+    val root = java.nio.file.Files.createTempDirectory("graft-svsg-root").toString
+    val incDir = java.nio.file.Files.createTempDirectory("graft-svsg-inc").toString
+    val n0 = df.count()
+    def fresh(id: Long) = freshRows(df, Seq(id), 5000L)
+    def epochDirs = new java.io.File(root).listFiles().map(_.getName).toSet
+    def incs = new java.io.File(incDir).listFiles().count(_.getName.startsWith("inc_"))
+    // the turn's fold step by hand: foldmark FIRST, then the fold
+    def crashedFold(src: Int, batchId: Long): Unit = {
+      StreamingDedup.writeFoldmark(spark, s"$root/epoch${src + 1}", batchId)
+      VectorStore.ingestDedup(spark, s"$root/epoch$src", s"svsg_e$src",
+        spark.read.parquet(s"$incDir/inc_$batchId"), "id", "vec",
+        s"$root/epoch${src + 1}", s"svsg_e${src + 1}", threshold = 0.9)
+    }
+    def turn(src: Int) = StreamingVectorStore.compactVectorStore(
+      spark, root, "svsg", srcEpoch = src, incDir = incDir, threshold = 0.9,
+      keepEpochs = 1)._1
+    VectorStore.write(df, "vec_id", "embedding", s"$root/epoch0", "svsg_e0",
+      ivf, pq, numBuckets = 4)
+    val sink = StreamingVectorStore.vectorIncrementSink(incDir, "vec_id", "embedding")
+    // CRASH WINDOW A — fold landed, increment prune did not
+    sink(fresh(11L), 0L)
+    crashedFold(0, 0L)
+    assert(turn(0).vecs.count() == n0 + 1, "resume must hand back the folded epoch 1")
+    assert(incs == 0, "resume must prune the already-folded increment")
+    assert(epochDirs == Set("epoch1"), "resume must finish epoch retirement")
+    // CRASH WINDOW B — fold + increment prune landed, retirement did
+    // not: epoch0 re-created stands for the unretired dir
+    VectorStore.write(df, "vec_id", "embedding", s"$root/epoch0", "svsg_e0",
+      ivf, pq, numBuckets = 4)
+    assert(turn(0).vecs.count() == n0 + 1,
+      "no-increment re-run with a complete next epoch must return the LIVE epoch 1")
+    assert(epochDirs == Set("epoch1"))
+    // STALE CALLER — a new increment and a re-run from epoch 0
+    sink(fresh(12L), 1L)
+    val stale = intercept[IllegalArgumentException](turn(0))
+    assert(stale.getMessage.contains("stale"), stale.getMessage)
+    assert(turn(1).vecs.count() == n0 + 2)
+    // DEADLOCK SCENARIO — a crashed turn folded inc_2 into epoch 3 and
+    // inc_3 landed before the re-run: srcEpoch=2 is stale, and the
+    // re-run from epoch 3 folds ONLY inc_3
+    sink(fresh(13L), 2L)
+    crashedFold(2, 2L)
+    sink(fresh(14L), 3L)
+    val stale2 = intercept[IllegalArgumentException](turn(2))
+    assert(stale2.getMessage.contains("stale"), stale2.getMessage)
+    val live = turn(3)
+    assert(live.vecs.count() == n0 + 4, "standing + 11, 12, 13 (crashed fold) + 14 (fresh)")
+    assert(live.vecs.where($"id" === 5013L).count() == 1L,
+      "the already-folded increment's row must appear exactly once")
+    assert(incs == 0)
+    assert(epochDirs == Set("epoch4"))
+    val regs = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("svsg_e")).toSet
+    assert(regs == Set("svsg_e4_coded", "svsg_e4_vecs"), s"catalog: $regs")
+    // CRASH WINDOW C — foldmark landed, the fold did not: the
+    // incomplete epoch's foldmark must not suppress the fold
+    sink(fresh(15L), 4L)
+    StreamingDedup.writeFoldmark(spark, s"$root/epoch5", 4L)
+    assert(turn(4).vecs.count() == n0 + 5)
+    assert(epochDirs == Set("epoch5"))
   }
 }

@@ -309,6 +309,26 @@ class VectorStoreSpec extends SparkTestBase {
     assert(err2.getMessage.contains("already registered"))
   }
 
+  test("merge: a crash in the standing copy leaves no meta/_SUCCESS — meta lands last") {
+    val (df, _) = fixture(43)
+    val epoch0 = df.where($"vec_id" < 150L)
+    val ivf = Similarity.trainIvf(epoch0, "embedding", nlist = 8, seed = 3L)
+    val pq = Similarity.trainPq(epoch0, "embedding", m = 4, ksub = 16, seed = 3L)
+    val d0 = tmp("ml0")
+    val d1 = tmp("ml1")
+    VectorStore.write(epoch0, "vec_id", "embedding", d0, "vs_ml_e0", ivf, pq, numBuckets = 4)
+    // merge reads only vecs and the models before the copy, so with the
+    // standing coded files gone the copy is the step that throws
+    val coded = new org.apache.hadoop.fs.Path(s"$d0/coded")
+    coded.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(coded, true)
+    intercept[java.io.FileNotFoundException] {
+      VectorStore.merge(spark, d0, "vs_ml_e0", df.where($"vec_id" >= 150L),
+        "vec_id", "embedding", d1, "vs_ml_e1")
+    }
+    assert(!new java.io.File(s"$d1/meta/_SUCCESS").exists,
+      "an epoch whose standing copy failed must not look complete")
+  }
+
   test("OPQ store: store-served opq/ivfOpq equal the from-floats faces; merge keeps the rotated space; faces refuse the wrong recipe") {
     val (df, queries) = fixture(43)
     val (ivf, opq) = Similarity.trainIvfOpq(df, "embedding", nlist = 8, m = 4,
