@@ -227,6 +227,8 @@ object StoreEpoch {
       live
     }
     val listed = StreamingDedup.listSignatureIncrements(spark, incDir)
+    // a complete next epoch is never answered with the source store:
+    // resurrecting it would let the next fold clobber the live epoch
     if (listed.isEmpty)
       // a complete next epoch here is a turn that crashed after its
       // increment prune: finish retirement, hand back the LIVE epoch
@@ -238,6 +240,9 @@ object StoreEpoch {
         finishTurn(live)
       }
       if (complete(spark, next.path)) {
+        // its foldmark landed before its data and its meta after, so it
+        // is trusted: listed batchIds at or under it were folded by the
+        // crashed turn, any above it mean the caller lags the live store
         val mark = StreamingDedup.readFoldmark(spark, next.path)
         val unFolded = listed.map(_._1).filter(_ > mark)
         require(unFolded.isEmpty,
@@ -248,9 +253,14 @@ object StoreEpoch {
             "clobber the live epoch")
         pruneAndFinish(open(next))
       } else {
+        // increments at or under the source epoch's own foldmark were
+        // folded into it by a turn whose prune crashed: skipped by
+        // batchId, so recovery never trips the fold's disjointness check
         val srcMark = StreamingDedup.readFoldmark(spark, src.path)
         val freshPaths = listed.collect { case (b, p) if b > srcMark => p }
         lazy val inc = spark.read.parquet(freshPaths: _*)
+        // nothing fresh, or only zero-row batches: no copy epoch, but the
+        // turn completes, so retirement runs as on every other branch
         if (freshPaths.isEmpty || inc.isEmpty) pruneAndFinish(open(src))
         else {
           // foldmark FIRST: a crash before the fold's meta leaves an
