@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.graftext.MlpPredict
+import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
@@ -15,12 +15,13 @@ import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
   * Execution model: models are created/trained on the DRIVER (training
   * a single model with sequential Adam is inherently driver-side state,
   * mirroring the reference's in-process registry at src/nn/mod.rs:25);
-  * inference runs distributed on executors against an immutable weight
-  * snapshot shipped via [[org.apache.spark.broadcast.Broadcast]] at
-  * publish time. Every registry mutation re-publishes, so a SQL
-  * `ml_pred(...)` call always binds the snapshot current at the time
-  * the query is planned — the distributed analog of the reference's
-  * clone-out-of-registry semantics (src/nn/mod.rs:48-55).
+  * inference runs distributed on executors through ONE forward path,
+  * the native [[org.apache.spark.sql.graftext.MlpPredict]] expression:
+  * SQL `ml_pred('name', feats)` and [[predictCol]] both build it over
+  * an immutable copy of the registry's weights taken when the query is
+  * analysed — the distributed analog of the reference's
+  * clone-out-of-registry semantics (src/nn/mod.rs:48-55). The model
+  * name of a SQL `ml_pred` call must therefore be a constant.
   *
   * Semantic divergences from the reference (documented, intentional):
   *   - `ml_train` trains on the WHOLE input relation exactly once.
@@ -33,8 +34,6 @@ import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
   *     reference's silent mis-slicing (src/utils.rs:14-23).
   */
 object MlFunctions {
-
-  @volatile private var snapshotBc: Option[Broadcast[Map[String, Mlp]]] = None
 
   /** `ml_create(name, spec[, weightsPath]) → "Ok"`
     * (reference src/lib.rs:23-86).
@@ -339,7 +338,7 @@ object MlFunctions {
     df.withColumn("prediction", predictCol(spark, name, features))
   }
 
-  /** Prediction column bound to the CURRENT snapshot of `name`'s
+  /** Prediction column bound to the CURRENT copy of `name`'s
     * weights, as a native codegen expression
     * ([[org.apache.spark.sql.graftext.MlpPredict]]): the KB-sized
     * weight snapshot is captured immutably in the plan (clone-out
@@ -350,30 +349,35 @@ object MlFunctions {
     val model = ModelRegistry
       .get(name)
       .getOrElse(throw new IllegalArgumentException(s"model '$name' not found"))
-    org.apache.spark.sql.graftext.MlpPredict
-      .column(features.cast(ArrayType(FloatType)), model)
+    MlpPredict.column(features.cast(ArrayType(FloatType)), model)
   }
 
-  /** Re-broadcast the registry and (re)bind the SQL UDF surface to the
-    * fresh snapshot. Called automatically by create/train.
+  /** (Re)register SQL `ml_pred` and refresh the `ml_models` view.
+    * Called automatically by create/train. `ml_pred` is a function
+    * builder, so it needs no re-binding after training: each query
+    * binds the weights current when it is analysed.
     */
   def publish(spark: SparkSession): Unit = synchronized {
-    snapshotBc.foreach(_.unpersist(blocking = false))
-    val bc = spark.sparkContext.broadcast(ModelRegistry.snapshot())
-    snapshotBc = Some(bc)
-    spark.udf.register("ml_pred", predUdf(bc))
+    spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction("ml_pred", predBuilder, "scala_udf")
     list(spark).createOrReplaceTempView("ml_models")
   }
 
-  private def predUdf(bc: Broadcast[Map[String, Mlp]]): UserDefinedFunction =
-    udf { (name: String, feats: Array[Float]) =>
-      val model = bc.value.getOrElse(
-        name,
-        throw new IllegalArgumentException(s"ml_pred: model '$name' not found"),
-      )
-      if (feats == null) null
-      else model.predict(feats)
-    }
+  /** SQL `ml_pred(name, feats)` → the [[predictCol]] expression: the
+    * constant `name` resolves against [[ModelRegistry]] when the query
+    * is analysed.
+    */
+  private def predBuilder(args: Seq[Expression]): Expression = args match {
+    case Seq(name, features) =>
+      require(name.foldable && name.dataType.isInstanceOf[StringType] && name.eval() != null,
+        s"ml_pred: the model name must be a constant string, got ${name.sql}")
+      val n = name.eval().toString
+      val model = ModelRegistry.get(n)
+        .getOrElse(throw new IllegalArgumentException(s"ml_pred: model '$n' not found"))
+      MlpPredict(Cast(features, ArrayType(FloatType)), model)
+    case _ =>
+      throw new IllegalArgumentException(s"ml_pred takes 2 arguments, got ${args.length}")
+  }
 
   /** SQL-callable whole-relation training: `ml_train(name, feats,
     * tgts[, cfg])` as an AGGREGATE function — `SELECT ml_train('m',
@@ -389,7 +393,7 @@ object MlFunctions {
     * [[lastStats]] are only visible in local mode — cluster deployments
     * use [[train]]/[[trainDistributed]]. Unlike the reference, predictions
     * are not returned inline (an aggregate yields one row); follow
-    * with `ml_pred` after re-publish.
+    * with `ml_pred`, which binds the trained weights in the next query.
     */
   private type TrainBuf = (String, String, List[(Array[Float], Array[Float])])
 
@@ -452,9 +456,9 @@ object MlFunctions {
     * one prediction list per input row (src/lib.rs:175-176, exercised
     * by test/sql/autompg.test:16,22). On Spark an aggregate yields one
     * row, so this helper runs the `ml_train`/`ml_train_cfg` aggregate
-    * (trains on the whole relation), re-publishes the fresh snapshot,
-    * and projects `ml_pred` over the same relation — same rows, same
-    * shape as the reference call.
+    * (trains on the whole relation) and projects `ml_pred` — analysed
+    * after the training, so it binds the fresh weights — over the same
+    * relation: same rows, same shape as the reference call.
     */
   def trainSql(
       spark: SparkSession,
@@ -485,12 +489,12 @@ object MlFunctions {
       status.headOption.exists(_.getString(0) == "Ok"),
       s"ml_train failed: ${status.mkString(",")}",
     )
-    publish(spark) // rebind ml_pred to the freshly trained snapshot
     spark.sql(s"SELECT ml_pred(${lit(name)}, $featuresExpr) AS prediction FROM $table")
   }
 
   /** Register the SQL-compat surface on a fresh session:
-    *   - `ml_pred(name, feats)` — distributed, broadcast-bound.
+    *   - `ml_pred('name', feats)` — the native [[MlpPredict]]
+    *     expression over the weights current at analysis ([[publish]]).
     *   - `ml_create(name, spec)` AND `ml_create(name, spec,
     *     weightsPath)` — both reference arities (src/lib.rs:23-86) on
     *     one name via an arity-dispatching builder; the 3-arg form

@@ -2087,7 +2087,7 @@ object SparkEntry {
 
   /** Store-served IVF-OPQ planted recall — q99's gate through an
     * OPQ-coded store ([[graft.operators.VectorStore.writeOpq]] →
-    * [[graft.operators.Similarity.ivfOpqTopKFromStore]]): the
+    * [[graft.operators.Similarity.ivfPqTopKFromStore]]): the
     * rotation, rotated PQ codes, and rotated floats are persisted
     * ONCE at write (the from-floats q99 path re-rotates AND re-encodes
     * the corpus every search job — the most expensive per-job encode
@@ -2101,7 +2101,7 @@ object SparkEntry {
       load(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
       (corpus, queries) => {
         val store = annOpqStoreFixture(s, dir, corpus)
-        Similarity.ivfOpqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
+        Similarity.ivfPqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
           nprobe = 4, refine = 4)
       })
 
@@ -2996,7 +2996,7 @@ object SparkEntry {
       |ORDER BY id""".stripMargin
 
   /** FILTERED store-served ANN gate
-    * ([[graft.operators.Similarity.ivfPqTopKFromStoreFiltered]] —
+    * ([[graft.operators.Similarity.ivfPqTopKFromStore]] with `allowed` —
     * "top-k among the documents the metadata predicate allows"): each
     * planted id gets TWO perturbed copies — a +0.01 decoy
     * (id + unit) and a +0.02 query (id + 2·unit, unit =
@@ -3032,8 +3032,8 @@ object SparkEntry {
       .ivfPqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
         nprobe = 4, refine = 4)
     val filtered = Similarity
-      .ivfPqTopKFromStoreFiltered(store, queries, "vec_id", "embedding", k = 5,
-        allowed, "vec_id", nprobe = 4, refine = 4)
+      .ivfPqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
+        nprobe = 4, refine = 4, allowed = Some(Similarity.AllowedIds(allowed, "vec_id")))
     val planted = emb.where(col("vec_id") % 10 === 0)
       .select((col("vec_id") + lit(2L * unit)).as("query_id"),
         col("vec_id").as("expected_id"))
@@ -3185,7 +3185,7 @@ object SparkEntry {
     "SELECT doc_id, true AS fluent_wins FROM documents ORDER BY doc_id"
 
   /** q180's filtered-ANN truth through the SIGN-CODE (Hamming) store
-    * face ([[graft.operators.Similarity.ivfHammingTopKFromStoreFiltered]]
+    * face ([[graft.operators.Similarity.ivfHammingTopKFromStore]] with `allowed`
     * — the license-clean-only lookup on a binary-quantized store):
     * same decoy/query/allowed plant, same three booleans — the decoy
     * IS an unfiltered top-k hit, the filtered search recovers the
@@ -3224,8 +3224,8 @@ object SparkEntry {
       .ivfHammingTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
         nprobe = 4, refine = 4)
     val filtered = Similarity
-      .ivfHammingTopKFromStoreFiltered(store, queries, "vec_id", "embedding",
-        k = 5, allowed, "vec_id", nprobe = 4, refine = 4)
+      .ivfHammingTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
+        nprobe = 4, refine = 4, allowed = Some(Similarity.AllowedIds(allowed, "vec_id")))
     val planted = emb.where(col("vec_id") % 10 === 0)
       .select((col("vec_id") + lit(2L * unit)).as("query_id"),
         col("vec_id").as("expected_id"))
@@ -3606,7 +3606,7 @@ object SparkEntry {
       })
 
   /** Store-served FLAT-OPQ planted recall — q85's gate through an
-    * OPQ-coded store ([[graft.operators.Similarity.opqTopKFromStore]]):
+    * OPQ-coded store ([[graft.operators.Similarity.pqTopKFromStore]]):
     * only the QUERY side rotates (the store's codes and floats are
     * already in rotated space); the flat ADC + exact-re-rank tail runs
     * with cells ignored. Completes the store-served matrix's flat rows
@@ -3617,7 +3617,7 @@ object SparkEntry {
       load(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
       (corpus, queries) => {
         val store = annOpqStoreFixture(s, dir, corpus)
-        Similarity.opqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
+        Similarity.pqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
           refine = 4)
       })
 

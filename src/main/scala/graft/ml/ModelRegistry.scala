@@ -16,8 +16,8 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * Model>>>` (src/nn/mod.rs:25); `get` clones the model out
   * (src/nn/mod.rs:48-55) and `put` replaces (src/nn/mod.rs:57-64). On
   * Spark this state lives on the DRIVER only — executors never touch
-  * the registry; they see immutable weight snapshots shipped via
-  * broadcast at publish time (see [[graft.MlFunctions]]). That is the
+  * the registry; they see the immutable weight copy a query's plan
+  * captured when it was analysed (see [[graft.MlFunctions]]). That is the
   * one place the reference's shared-memory assumption does not survive
   * a distributed runtime.
   */
@@ -32,11 +32,6 @@ object ModelRegistry {
   def remove(name: String): Unit = models.remove(name)
 
   def clear(): Unit = models.clear()
-
-  /** Snapshot as (name → immutable deep copy), for broadcast. */
-  def snapshot(): Map[String, Mlp] = models.readOnlySnapshot().toMap.map { case (k, v) =>
-    k -> v.copyOf()
-  }
 
   /** (model, specJson) pairs, sorted by name — `ml_list` contract
     * (reference table function schema at src/lib.rs:93-97).

@@ -413,14 +413,25 @@ object Dedup {
       name: String,
   ): SignatureStore = {
     val m = StoreEpoch.readMeta(spark, path)
-    val (numHashes, bands, shingleSize, maxBucketSize, numBuckets) =
-      (m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3), m.getInt(4))
+    val numBuckets = m.getInt(4)
+    val (banded, grams) = signatureTables(spark, path, name, numBuckets)
+    SignatureStore(banded, grams, m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3), numBuckets)
+  }
+
+  /** The store's `banded` and `grams` tables at `path`, registered (or
+    * checked) through [[StoreEpoch.register]] — catalog calls only, no
+    * Spark job.
+    */
+  private def signatureTables(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      name: String,
+      numBuckets: Int,
+  ): (DataFrame, DataFrame) = {
     def table(sub: String, schema: String, key: String): DataFrame =
       StoreEpoch.register(spark, "readSignatures", path, name, sub, schema, key, numBuckets)
-    SignatureStore(
-      table("banded", "bucket STRING, id BIGINT, bucket_n BIGINT", "bucket"),
-      table("grams", "id BIGINT, sig ARRAY<BIGINT>, grams ARRAY<BIGINT>", "id"),
-      numHashes, bands, shingleSize, maxBucketSize, numBuckets)
+    (table("banded", "bucket STRING, id BIGINT, bucket_n BIGINT", "bucket"),
+      table("grams", "id BIGINT, sig ARRAY<BIGINT>, grams ARRAY<BIGINT>", "id"))
   }
 
   /** GROW a standing store: union the source store's docs with a new
@@ -499,7 +510,10 @@ object Dedup {
         dstPath, dstName, src.numHashes, src.bands, src.maxBucketSize, src.numBuckets)
       writeGramsTable(add, dstPath, dstName, src.numBuckets)
     }
-    readSignatures(spark, dstPath, dstName)
+    // the destination's meta was written from the source's recipe, so
+    // the fresh epoch opens from values in hand, without reading it back
+    val (banded, grams) = signatureTables(spark, dstPath, dstName, src.numBuckets)
+    src.copy(banded = banded, grams = grams)
   }
 
   /** Retention for [[mergeSignatures]] destination directories: under

@@ -352,7 +352,7 @@ object Similarity {
     val cap = store.ivf.centroids.length
     val bcIvf = sc.broadcast(store.ivf.centroids)
     val bcPq = sc.broadcast(store.pq)
-    val queries = store.opq.map(o => rotateColumn(sample, vecCol, o)).getOrElse(sample)
+    val queries = storeQueries(store, sample, vecCol)
     val probeAllUdf = udf((v: Array[Float]) => IvfModel.nearestK(bcIvf.value, v, cap))
     val lutUdf = udf((v: Array[Float]) => adcLut(bcPq.value, v))
     val probedAll = nonDegenerate(queries, vecCol)
@@ -361,9 +361,7 @@ object Similarity {
         lutUdf(col(vecCol)).as("lut"),
         posexplode(probeAllUdf(col(vecCol))).as(Seq("cellrank", "cell")))
       .localCheckpoint(true) // sample × nlist rows — the tuner's bounded query set
-    val indexed = store.coded.select(col("id").as("neighbor_id"), col("cell"), col("code"))
-    val corpusVecs = store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec"))
-    val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
+    val indexed = storeIndexed(store, None)
     // When k·refine ≥ corpus rows the per-step ADC cut is PROVABLY a
     // no-op (a query's probed pool never exceeds the corpus — each
     // corpus row lives in exactly one cell — so the bounded heap
@@ -387,14 +385,9 @@ object Similarity {
         .join(broadcast(band), "cell")
         .where(col("neighbor_id") =!= col("query_id"))
       if (exhaustiveCut) {
-        val rescoredDelta = joined
-          .select(col("query_id"), col("neighbor_id"))
-          .join(corpusVecs, "neighbor_id")
-          .join(broadcast(qvecs), "query_id")
-          .select(col("query_id"), col("neighbor_id"),
-            graft.functions.VectorExpressions.vecCosine(col("cvec"), col("qvec")).as("cosine"))
+        scored ::= rescore(storeVecs(store), queries,
+          joined.select(col("query_id"), col("neighbor_id")), idCol, vecCol)
           .localCheckpoint(true)
-        scored ::= rescoredDelta
         topKReduce(scored.reduce(_ unionByName _), k)
       } else {
         val delta = joined
@@ -403,16 +396,9 @@ object Similarity {
               .pqAdcScore(col("code"), col("lut"), store.pq.ksub).as("cosine"))
           .localCheckpoint(true)
         scored ::= delta
-        val cands = topKReduce(
-          scored.reduce(_ unionByName _),
-          math.min(Int.MaxValue.toLong, k.toLong * refine).toInt)
+        val cands = topKReduce(scored.reduce(_ unionByName _), shortlistSize(k, refine))
           .select(col("query_id"), col("neighbor_id"))
-        val rescored = cands
-          .join(corpusVecs, "neighbor_id")
-          .join(broadcast(qvecs), "query_id")
-          .select(col("query_id"), col("neighbor_id"),
-            graft.functions.VectorExpressions.vecCosine(col("cvec"), col("qvec")).as("cosine"))
-        topKReduce(rescored, k)
+        rerankShortlist(storeVecs(store), queries, cands, idCol, vecCol, k)
       }
     }
   }
@@ -470,33 +456,25 @@ object Similarity {
     val sc = spark.sparkContext
     val bcIvf = sc.broadcast(store.ivf.centroids)
     val bcPq = sc.broadcast(store.pq)
-    val queries = store.opq.map(o => rotateColumn(sample, vecCol, o)).getOrElse(sample)
+    val queries = storeQueries(store, sample, vecCol)
     val probeUdf = udf((v: Array[Float]) => IvfModel.nearestK(bcIvf.value, v, nprobe))
     val lutUdf = udf((v: Array[Float]) => adcLut(bcPq.value, v))
     val probed = nonDegenerate(queries, vecCol).select(
       col(idCol).as("query_id"),
       lutUdf(col(vecCol)).as("lut"),
       explode(probeUdf(col(vecCol))).as("cell"))
-    val adc = store.coded
-      .select(col("id").as("neighbor_id"), col("cell"), col("code"))
+    val adc = storeIndexed(store, None)
       .join(broadcast(probed), "cell")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         graft.functions.VectorExpressions
           .pqAdcScore(col("code"), col("lut"), store.pq.ksub).as("cosine"))
       .localCheckpoint(true)
-    val corpusVecs = store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec"))
-    val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     walkKnobCurve(spark, "refine", doublingTo(exhaustive),
       exact, k, targetRecall) { rf =>
-      val cands = topKReduce(adc, math.min(Int.MaxValue.toLong, k.toLong * rf).toInt)
+      val cands = topKReduce(adc, shortlistSize(k, rf))
         .select(col("query_id"), col("neighbor_id"))
-      val rescored = cands
-        .join(corpusVecs, "neighbor_id")
-        .join(broadcast(qvecs), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          graft.functions.VectorExpressions.vecCosine(col("cvec"), col("qvec")).as("cosine"))
-      topKReduce(rescored, k)
+      rerankShortlist(storeVecs(store), queries, cands, idCol, vecCol, k)
     }
   }
 
@@ -530,9 +508,7 @@ object Similarity {
     require(store.ivf.centroids.nonEmpty,
       s"$caller: store has no IVF centroids (nlist = 0) — nothing to tune")
     val sample = sampleQueries.localCheckpoint(true)
-    val truthQueries = store.opq
-      .map(o => rotateColumn(sample, vecCol, o))
-      .getOrElse(sample)
+    val truthQueries = storeQueries(store, sample, vecCol)
     val corpus = store.vecs.select(col("id").as(idCol), col("vec").as(vecCol))
     val exact = bruteForceTopK(corpus, truthQueries, idCol, vecCol, k)
       .localCheckpoint(true)
@@ -695,10 +671,7 @@ object Similarity {
       poolSize: Int = 0,
       lambda: Double = 0.5,
   ): DataFrame = {
-    require(k > 0, s"k must be > 0: $k")
-    require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0, 1]: $lambda")
-    val ps = if (poolSize <= 0) 4 * k else poolSize
-    require(ps >= k, s"poolSize must be ≥ k: $ps < $k")
+    val ps = mmrValidatedPoolSize(k, lambda, poolSize)
     val pool = bruteForceTopK(corpus, queries, idCol, vecCol, ps)
     mmrGreedyTail(
       pool.join(
@@ -710,13 +683,20 @@ object Similarity {
   /** [[mmrTopK]] with the relevance-pool pass served from a persisted
     * [[VectorStore.CodedVectorStore]] — the "swap in IVF upstream at
     * corpus scale" sentence of [[mmrTopK]]'s contract made a face:
-    * the pool comes from [[ivfPqTopKFromStore]] (or the OPQ twin on a
-    * rotated store — relevances and pairwise cosines are
+    * the pool comes from [[ivfPqTopKFromStore]] (on an OPQ store in
+    * rotated space — relevances and pairwise cosines are
     * rotation-invariant, so the greedy is untouched), pool members'
     * vectors fetch through the id-bucketed `vecs` scan, and the SAME
     * greedy tail re-ranks — the corpus is never re-encoded, scanned,
     * or broadcast. Pool recall < 1 is the ANN trade (`nprobe`/
     * `refine`); the diversification itself is exact over the pool.
+    *
+    * `allowed` restricts the POOL to the allowed ids (the
+    * [[ivfPqTopKFromStore]] pre-filter), so the greedy diversifies
+    * over eligible candidates only — filtering AFTER MMR would both
+    * lose recall and re-shape the diversity penalty around disallowed
+    * picks. Pool members are allowed by construction, so the vector
+    * fetch needs no second filter.
     */
   def mmrTopKFromStore(
       store: VectorStore.CodedVectorStore,
@@ -728,14 +708,16 @@ object Similarity {
       lambda: Double = 0.5,
       nprobe: Int = 4,
       refine: Int = 4,
+      allowed: Option[AllowedIds] = None,
   ): DataFrame = {
     val ps = mmrValidatedPoolSize(k, lambda, poolSize)
-    val pool =
-      if (store.opq.nonEmpty)
-        ivfOpqTopKFromStore(store, queries, idCol, vecCol, ps, nprobe, refine)
-      else
-        ivfPqTopKFromStore(store, queries, idCol, vecCol, ps, nprobe, refine)
-    mmrOverStorePool(store, pool, k, lambda)
+    val pool = ivfPqTopKFromStore(store, queries, idCol, vecCol, ps, nprobe, refine,
+      allowed = allowed)
+    mmrGreedyTail(
+      pool.join(
+        store.vecs.select(col("id").as("neighbor_id"), col("vec").as("__nvec")),
+        "neighbor_id"),
+      k, lambda)
   }
 
   /** Shared MMR-face validation: k/lambda domain checks and the
@@ -747,57 +729,6 @@ object Similarity {
     val ps = if (poolSize <= 0) 4 * k else poolSize
     require(ps >= k, s"poolSize must be ≥ k: $ps < $k")
     ps
-  }
-
-  /** Shared store-served MMR body: fetch the pool members' floats
-    * through the id-bucketed `vecs` scan, then the every-face greedy.
-    */
-  private def mmrOverStorePool(
-      store: VectorStore.CodedVectorStore,
-      pool: DataFrame,
-      k: Int,
-      lambda: Double,
-  ): DataFrame =
-    mmrGreedyTail(
-      pool.join(
-        store.vecs.select(col("id").as("neighbor_id"), col("vec").as("__nvec")),
-        "neighbor_id"),
-      k, lambda)
-
-  /** [[mmrTopKFromStore]] restricted to an allowed-id subset —
-    * "diverse top-k among the documents the metadata predicate
-    * allows": the relevance POOL comes from the filtered search faces
-    * (pre-filter semi-join, [[ivfPqTopKFromStoreFiltered]] holds the
-    * rationale), so the greedy re-rank diversifies over eligible
-    * candidates only — filtering AFTER MMR would both lose recall and
-    * re-shape the diversity penalty around disallowed picks. The same
-    * shared [[mmrGreedyTail]]; pool vectors fetch through the
-    * id-bucketed `vecs` scan (shortlist members are allowed by
-    * construction, so the fetch needs no second filter).
-    */
-  def mmrTopKFromStoreFiltered(
-      store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      poolSize: Int = 0,
-      lambda: Double = 0.5,
-      nprobe: Int = 4,
-      refine: Int = 4,
-      broadcastAllowed: Boolean = true,
-  ): DataFrame = {
-    val ps = mmrValidatedPoolSize(k, lambda, poolSize)
-    val pool =
-      if (store.opq.nonEmpty)
-        ivfOpqTopKFromStoreFiltered(store, queries, idCol, vecCol, ps,
-          allowed, allowedIdCol, nprobe, refine, broadcastAllowed = broadcastAllowed)
-      else
-        ivfPqTopKFromStoreFiltered(store, queries, idCol, vecCol, ps,
-          allowed, allowedIdCol, nprobe, refine, broadcastAllowed = broadcastAllowed)
-    mmrOverStorePool(store, pool, k, lambda)
   }
 
   /** The per-query greedy MMR re-rank shared by [[mmrTopK]] and
@@ -1256,6 +1187,14 @@ object Similarity {
     * space — cosines are rotation-invariant, so `eps` means exactly
     * what it means from floats.
     *
+    * `allowed` dedups a SLICE of the store in place (one language,
+    * one license class, one ingest window): the [[ivfPqTopKFromStore]]
+    * pre-filter runs on the coded table before the vecs join, so the
+    * ε-ball machinery only ever pairs allowed rows and the verdict
+    * frame covers exactly the slice. Cross-slice near-dups are out of
+    * scope by definition — pass no filter when the dedup domain is
+    * the whole store.
+    *
     * Scale note: the one exchange this face adds over the write-time
     * layout is the coded⋈vecs id-join (index-sized rows hash to the
     * vecs side's id bucketing); the ε-ball pair cost is the same
@@ -1266,46 +1205,7 @@ object Similarity {
       eps: Double = 0.95,
       maxClusterSize: Int = 100000,
       materialize: graft.operators.Materialize = graft.operators.Materialize.LocalCheckpoint,
-  ): DataFrame =
-    semanticDedupCoded(store, store.coded.select(col("id"), col("cell")),
-      eps, maxClusterSize, materialize)
-
-  /** [[semanticDedupFromStore]] restricted to an allowed-id subset —
-    * "dedup this SLICE of my standing store in place" (one language,
-    * one license class, one ingest window) without touching the rest:
-    * the same left-semi pre-filter discipline as the filtered search
-    * faces, applied to the coded table before the vecs join, so the
-    * ε-ball machinery only ever pairs allowed rows and the verdict
-    * frame covers exactly the slice. Cross-slice near-dups are out of
-    * scope by definition here — run the unfiltered face when the
-    * dedup domain is the whole store.
-    */
-  def semanticDedupFromStoreFiltered(
-      store: VectorStore.CodedVectorStore,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      eps: Double = 0.95,
-      maxClusterSize: Int = 100000,
-      materialize: graft.operators.Materialize = graft.operators.Materialize.LocalCheckpoint,
-      broadcastAllowed: Boolean = true,
-  ): DataFrame =
-    // the ONE shared pre-filter (column pruning drops the unused code)
-    semanticDedupCoded(store,
-      filteredIndexed(store, allowed, allowedIdCol, broadcastAllowed)
-        .select(col("neighbor_id").as("id"), col("cell")),
-      eps, maxClusterSize, materialize)
-
-  /** The shared store-served SemDeDup body: (id, cell) rows (already
-    * filtered, when filtering applies) joined to the id-bucketed
-    * floats, one centroid cosine for the keep rank, then the
-    * every-face [[semanticDedupTail]].
-    */
-  private def semanticDedupCoded(
-      store: VectorStore.CodedVectorStore,
-      coded: DataFrame,
-      eps: Double,
-      maxClusterSize: Int,
-      materialize: graft.operators.Materialize,
+      allowed: Option[AllowedIds] = None,
   ): DataFrame = {
     val spark = store.coded.sparkSession
     val bc = spark.sparkContext.broadcast(store.ivf.centroids)
@@ -1313,7 +1213,9 @@ object Similarity {
       val cs = bc.value
       if (cs.isEmpty) 0.0 else -IvfModel.negCos(cs(c), v)
     }
-    val assigned = coded
+    // column pruning drops the unused code from the shared pre-filter
+    val assigned = storeIndexed(store, allowed)
+      .select(col("neighbor_id").as("id"), col("cell"))
       .join(store.vecs.select(col("id"), col("vec")), "id")
       .withColumn("cent_sim", centSimUdf(col("vec"), col("cell")))
       .persist()
@@ -1478,7 +1380,13 @@ object Similarity {
     * [[VectorStore.CodedVectorStore]] — the flat-ADC row of the
     * store-served matrix (q157/q158 gate the IVF-pruned rows): codes
     * come from the store's `coded` table (cells ignored — flat scan),
-    * re-rank floats from `vecs`; no per-job encode.
+    * re-rank floats from `vecs`; no per-job encode. On an OPQ store
+    * only the query side rotates (the [[ivfPqTopKFromStore]] recipe
+    * rule), so the result equals [[opqTopK]] over the same corpus
+    * without its per-job corpus rotation and re-encode. `allowed`
+    * pre-filters the scanned codes ([[ivfPqTopKFromStore]] holds the
+    * semantics), so the `k·refine` shortlist is spent entirely on
+    * eligible candidates.
     */
   def pqTopKFromStore(
       store: VectorStore.CodedVectorStore,
@@ -1487,97 +1395,11 @@ object Similarity {
       vecCol: String,
       k: Int,
       refine: Int = 4,
-  ): DataFrame = {
-    require(store.opq.isEmpty,
-      "pqTopKFromStore: this store is OPQ-coded (every artifact lives in rotated " +
-        "space) — use opqTopKFromStore, which rotates the query side to match")
-    pqSearchEncoded(
-      store.coded.select(col("id").as("neighbor_id"), col("code")),
-      store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-      queries, idCol, vecCol, k,
+      allowed: Option[AllowedIds] = None,
+  ): DataFrame =
+    pqSearchEncoded(storeIndexed(store, allowed), storeVecs(store),
+      storeQueries(store, queries, vecCol), idCol, vecCol, k,
       queries.sparkSession.sparkContext.broadcast(store.pq), refine)
-  }
-
-  /** [[opqTopK]] served from an OPQ-coded
-    * [[VectorStore.CodedVectorStore]] ([[VectorStore.writeOpq]]): the
-    * store's codes AND floats already live in rotated space, so only
-    * the QUERY side rotates (one d×d mat-vec per query) and the flat
-    * ADC + exact-re-rank tail runs unchanged — the corpus-side
-    * rotation + re-encode that [[opqTopK]] pays per search job never
-    * happens. Row-for-row equal to the from-floats face by
-    * construction (one shared rotation kernel, one shared encode
-    * kernel; VectorStoreSpec locks the parity).
-    */
-  def opqTopKFromStore(
-      store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      refine: Int = 4,
-  ): DataFrame = {
-    val opq = store.opq.getOrElse(throw new IllegalArgumentException(
-      "opqTopKFromStore: this store is plain-PQ-coded (no persisted rotation) — " +
-        "use pqTopKFromStore, or rebuild the store with VectorStore.writeOpq"))
-    pqSearchEncoded(
-      store.coded.select(col("id").as("neighbor_id"), col("code")),
-      store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-      rotateColumn(queries, vecCol, opq), idCol, vecCol, k,
-      queries.sparkSession.sparkContext.broadcast(store.pq), refine)
-  }
-
-  /** [[pqTopKFromStore]] restricted to an allowed-id subset — the
-    * flat-ADC row of the filtered matrix
-    * ([[ivfPqTopKFromStoreFiltered]] holds the full semantics
-    * rationale: PRE-filter before the scan, because post-filtering
-    * returns < k and degrades recall with the filter's selectivity).
-    * Composition over the same shared [[filteredIndexed]] semi-join;
-    * the ADC scan then streams only allowed codes, so the `k·refine`
-    * shortlist is spent entirely on eligible candidates.
-    */
-  def pqTopKFromStoreFiltered(
-      store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      refine: Int = 4,
-      broadcastAllowed: Boolean = true,
-  ): DataFrame = {
-    require(store.opq.isEmpty,
-      "pqTopKFromStoreFiltered: this store is OPQ-coded — use " +
-        "opqTopKFromStoreFiltered, which rotates the query side to match")
-    pqSearchEncoded(
-      filteredIndexed(store, allowed, allowedIdCol, broadcastAllowed),
-      storeVecs(store), queries, idCol, vecCol, k,
-      queries.sparkSession.sparkContext.broadcast(store.pq), refine)
-  }
-
-  /** [[opqTopKFromStore]] restricted to an allowed-id subset: only
-    * the query side rotates (store artifacts already live in rotated
-    * space), then the identical pre-filtered flat-ADC tail.
-    */
-  def opqTopKFromStoreFiltered(
-      store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      refine: Int = 4,
-      broadcastAllowed: Boolean = true,
-  ): DataFrame = {
-    val opq = store.opq.getOrElse(throw new IllegalArgumentException(
-      "opqTopKFromStoreFiltered: this store is plain-PQ-coded (no persisted " +
-        "rotation) — use pqTopKFromStoreFiltered"))
-    pqSearchEncoded(
-      filteredIndexed(store, allowed, allowedIdCol, broadcastAllowed),
-      storeVecs(store), rotateColumn(queries, vecCol, opq), idCol, vecCol, k,
-      queries.sparkSession.sparkContext.broadcast(store.pq), refine)
-  }
 
   /** The flat ADC scan + exact re-rank tail of [[pqTopK]] over an
     * ALREADY-ENCODED corpus ((neighbor_id, code) + (neighbor_id,
@@ -1614,7 +1436,7 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val bcLuts = spark.sparkContext.broadcast(qLuts)
-    val kk = math.min(Int.MaxValue.toLong, k.toLong * refine).toInt // k*refine can overflow Int at exhaustive refine on a billion-row corpus; a saturated shortlist bound is still exhaustive
+    val kk = shortlistSize(k, refine)
     val m = model.m
     val ksub = model.ksub
     val partialCands = encoded
@@ -1767,14 +1589,9 @@ object Similarity {
     OpqModel(dim, r, pq)
   }
 
-  /** OPQ-ANN top-k: rotate corpus and query vectors (one narrow map,
-    * norm-preserving), then run the exact [[pqTopK]] machinery — ADC
-    * over m-byte codes in rotated space, exact cosine re-rank. Same
-    * shuffle bound as PQ; the rotation costs one d×d mat-vec per row.
-    */
   /** Replace `vecCol` with its OPQ rotation — the ONE place the
-    * broadcast-model-plus-udf lifecycle lives (three call sites; a
-    * rotation-path fix must not be appliable to only some of them).
+    * broadcast-model-plus-udf lifecycle lives (a rotation-path fix
+    * must not be appliable to only some of its call sites).
     */
   private[graft] def rotateColumn(df: DataFrame, vecCol: String, opq: OpqModel): DataFrame = {
     val bc = df.sparkSession.sparkContext.broadcast(opq)
@@ -1787,6 +1604,11 @@ object Similarity {
     df.withColumn(vecCol, rotUdf(col(vecCol)))
   }
 
+  /** OPQ-ANN top-k: rotate corpus and query vectors (one narrow map,
+    * norm-preserving), then run the exact [[pqTopK]] machinery — ADC
+    * over m-byte codes in rotated space, exact cosine re-rank. Same
+    * shuffle bound as PQ; the rotation costs one d×d mat-vec per row.
+    */
   def opqTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -1907,12 +1729,6 @@ object Similarity {
       pq.ksub, nprobe, refine, broadcastQueries)
   }
 
-  /** Encode one vector with `mdl`'s codebooks (cosine-normalized
-    * first) — the ONE kernel shared by [[ivfPqTopK]]'s inline encode
-    * and the persisted coded-corpus store's write path
-    * ([[VectorStore.write]]), so stored codes are bit-identical to
-    * what a from-floats search would compute.
-    */
   /** Per-query ADC lookup table (m·ksub subspace dot products against
     * the cosine-normalized query) — the ONE kernel behind every ADC
     * face's LUT UDF ([[pqSearchEncoded]], [[ivfPqSearchBc]]),
@@ -1947,6 +1763,12 @@ object Similarity {
       centroids: Array[Array[Float]], v: Array[Float], nprobe: Int): Seq[Int] =
     IvfModel.nearestK(centroids, v, nprobe)
 
+  /** Encode one vector with `mdl`'s codebooks (cosine-normalized
+    * first) — the ONE kernel shared by [[ivfPqTopK]]'s inline encode
+    * and the persisted coded-corpus store's write path
+    * ([[VectorStore.write]]), so stored codes are bit-identical to
+    * what a from-floats search would compute.
+    */
   private[operators] def pqEncode(mdl: PqModel, v: Array[Float]): Array[Byte] = {
     require(v.length >= mdl.m * mdl.dsub,
       s"pq encode: vector width ${v.length} < model dim ${mdl.m * mdl.dsub}")
@@ -1967,31 +1789,10 @@ object Similarity {
     * store-serving face ([[ivfPqTopKFromStore]]) reads both from the
     * persisted [[VectorStore.CodedVectorStore]] — the corpus is never
     * re-encoded and, with the store's cell-bucketed layout, never
-    * re-exchanged.
-    */
-  private[operators] def ivfPqSearchIndexed(
-      indexed: DataFrame,
-      corpusVecs: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      ivf: IvfModel,
-      pq: PqModel,
-      nprobe: Int,
-      refine: Int,
-      broadcastQueries: Boolean,
-  ): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    ivfPqSearchBc(indexed, corpusVecs, queries, idCol, vecCol, k,
-      sc.broadcast(ivf.centroids), sc.broadcast(pq), pq.ksub, nprobe, refine,
-      broadcastQueries)
-  }
-
-  /** [[ivfPqSearchIndexed]] over ALREADY-BROADCAST models — the
-    * from-floats face reuses its encode-side broadcasts here instead
-    * of shipping a second copy of the centroid matrix and codebooks
-    * to every executor.
+    * re-exchanged. Takes ALREADY-BROADCAST models, so the from-floats
+    * face reuses its encode-side broadcasts instead of shipping a
+    * second copy of the centroid matrix and codebooks to every
+    * executor.
     */
   private def ivfPqSearchBc(
       indexed: DataFrame,
@@ -2027,21 +1828,22 @@ object Similarity {
         col("neighbor_id"),
         graft.functions.VectorExpressions.pqAdcScore(col("code"), col("lut"), ksub).as("cosine"),
       )
-    val cands = topKReduce(adc, math.min(Int.MaxValue.toLong, k.toLong * refine).toInt).select(col("query_id"), col("neighbor_id"))
-    // the re-rank must honor the same bound as the probe join: with
-    // broadcastQueries=false the query set is too big to broadcast
-    // ANYWHERE, so fetch qvecs through a shuffle join instead
-    val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val rescored = cands
-      .join(corpusVecs, "neighbor_id")
-      .join(if (broadcastQueries) broadcast(qvecs) else qvecs.hint("merge"), "query_id")
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        graft.functions.VectorExpressions.vecCosine(col("cvec"), col("qvec")).as("cosine"),
-      )
-    topKReduce(rescored, k)
+    val cands = topKReduce(adc, shortlistSize(k, refine))
+      .select(col("query_id"), col("neighbor_id"))
+    rerankShortlist(corpusVecs, queries, cands, idCol, vecCol, k, broadcastQueries)
   }
+
+  /** An allowed-id filter for the store-served faces: the ids in
+    * `idCol` of `ids` are the only corpus rows a search may return.
+    * `broadcast = true` (default) broadcasts the id set and PRESERVES
+    * the coded table's cell bucketing (no exchange added — right
+    * whenever the filter side is a bounded id list). For allowed sets
+    * at corpus scale (a predicate over a metadata table) pass
+    * `false`: the semi-join becomes a shuffle on id — the honest
+    * price of an arbitrary filter — and the probe join re-buckets by
+    * cell after.
+    */
+  final case class AllowedIds(ids: DataFrame, idCol: String, broadcast: Boolean = true)
 
   /** [[ivfPqTopK]] served from a persisted
     * [[VectorStore.CodedVectorStore]]: cells and PQ codes come from
@@ -2052,6 +1854,28 @@ object Similarity {
     * to embeddings. Same results as the from-floats face by
     * construction (one shared encode kernel; SimilaritySpec locks
     * row-for-row parity).
+    *
+    * The store's recipe is a fact the store carries: on an OPQ-coded
+    * store ([[VectorStore.writeOpq]]) every artifact lives in rotated
+    * space, so only the QUERY side rotates (one d×d mat-vec per
+    * query) — the result equals [[ivfOpqTopK]] (FAISS
+    * `OPQ..,IVF..,PQ..`) with the per-job corpus rotation, cell
+    * assignment and re-encode all paid ONCE at write. Every
+    * store-served face follows this rule.
+    *
+    * `allowed` makes this FILTERED ANN — "top-k among the documents a
+    * metadata predicate allows" (language = en only, license-clean
+    * only, post-cutoff only…). Semantics: exactly this search run
+    * over the allowed subset — the coded table is PRE-filtered with a
+    * semi-join on id BEFORE the cell join and ADC, so the `k·refine`
+    * shortlist is spent entirely on eligible candidates. The tempting
+    * cheap alternative — search unfiltered, drop disallowed rows
+    * after — is WRONG twice at scale: a selective filter leaves < k
+    * results (the shortlist filled up with ineligible neighbors), and
+    * the recall contract silently degrades with the filter's
+    * selectivity. The re-rank side needs NO filter: the shortlist is
+    * already allowed-only, and the id-bucketed `vecs` join fetches
+    * only shortlisted floats. [[AllowedIds]] holds the scale choice.
     */
   def ivfPqTopKFromStore(
       store: VectorStore.CodedVectorStore,
@@ -2062,139 +1886,49 @@ object Similarity {
       nprobe: Int = 4,
       refine: Int = 4,
       broadcastQueries: Boolean = true,
+      allowed: Option[AllowedIds] = None,
   ): DataFrame = {
-    require(store.opq.isEmpty,
-      "ivfPqTopKFromStore: this store is OPQ-coded (every artifact lives in rotated " +
-        "space) — use ivfOpqTopKFromStore, which rotates the query side to match")
-    val indexed = store.coded.select(
-      col("id").as("neighbor_id"), col("cell"), col("code"))
-    val corpusVecs = store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec"))
-    ivfPqSearchIndexed(indexed, corpusVecs, queries, idCol, vecCol, k,
-      store.ivf, store.pq, nprobe, refine, broadcastQueries)
+    val sc = queries.sparkSession.sparkContext
+    ivfPqSearchBc(storeIndexed(store, allowed), storeVecs(store),
+      storeQueries(store, queries, vecCol), idCol, vecCol, k,
+      sc.broadcast(store.ivf.centroids), sc.broadcast(store.pq), store.pq.ksub,
+      nprobe, refine, broadcastQueries)
   }
 
-  /** [[ivfOpqTopK]] served from an OPQ-coded
-    * [[VectorStore.CodedVectorStore]] — the full billion-scale
-    * composition (FAISS `OPQ..,IVF..,PQ..`) with the per-job corpus
-    * rotation + cell assignment + re-encode all paid ONCE at write:
-    * only the query side rotates, then the [[ivfPqTopKFromStore]]
-    * probe/ADC/re-rank tail runs unchanged over the cell-bucketed
-    * coded table. Supports the same `broadcastQueries = false`
-    * merge-join path for corpus-sized query sets.
+  /** The store's index rows as (neighbor_id, cell, code), `code` read
+    * from `codeCol` (`code` for PQ, `hcode` for packed sign words) —
+    * the ONE coded-side source of every store-served face. With
+    * `allowed`, the rows are semi-joined against the allowed ids
+    * (broadcast by default — no exchange on the bucketed coded side).
+    * No distinct() on the allowed side: a LEFT SEMI join already
+    * returns each coded row at most once, and the dedup aggregation
+    * would cost an exchange the join does not need (PlanShapeSpec
+    * pins the filtered plan's shuffle count equal to the unfiltered
+    * face's).
     */
-  def ivfOpqTopKFromStore(
+  private def storeIndexed(
       store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nprobe: Int = 4,
-      refine: Int = 4,
-      broadcastQueries: Boolean = true,
-  ): DataFrame = {
-    val opq = store.opq.getOrElse(throw new IllegalArgumentException(
-      "ivfOpqTopKFromStore: this store is plain-PQ-coded (no persisted rotation) — " +
-        "use ivfPqTopKFromStore, or rebuild the store with VectorStore.writeOpq"))
-    val indexed = store.coded.select(
-      col("id").as("neighbor_id"), col("cell"), col("code"))
-    val corpusVecs = store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec"))
-    ivfPqSearchIndexed(indexed, corpusVecs, rotateColumn(queries, vecCol, opq),
-      idCol, vecCol, k, store.ivf, store.pq, nprobe, refine, broadcastQueries)
-  }
-
-  /** FILTERED store-served ANN — "top-k among the documents a
-    * metadata predicate allows", the table-stakes vector-store
-    * operation (language = en only, license-clean only, post-cutoff
-    * only…). Semantics: exactly [[ivfPqTopKFromStore]] run over the
-    * allowed subset — the coded table is PRE-filtered with a semi-join
-    * on id BEFORE the cell join and ADC, so the `k·refine` shortlist
-    * is spent entirely on eligible candidates. The tempting cheap
-    * alternative — search unfiltered, drop disallowed rows after —
-    * is WRONG twice at scale: a selective filter leaves < k results
-    * (the shortlist filled up with ineligible neighbors), and the
-    * recall contract silently degrades with the filter's selectivity.
-    *
-    * Scale shape: `broadcastAllowed = true` (default) broadcasts the
-    * allowed-id set and PRESERVES the coded table's cell bucketing
-    * (no exchange added — right whenever the filter side is a bounded
-    * id list). For allowed sets at corpus scale (a predicate over a
-    * metadata table) pass `false`: the semi-join becomes a shuffle on
-    * id — the honest price of an arbitrary filter — and the probe
-    * join re-buckets by cell after. The re-rank side needs NO filter:
-    * the shortlist is already allowed-only, and the id-bucketed
-    * `vecs` join fetches only shortlisted floats.
-    */
-  def ivfPqTopKFromStoreFiltered(
-      store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      nprobe: Int = 4,
-      refine: Int = 4,
-      broadcastQueries: Boolean = true,
-      broadcastAllowed: Boolean = true,
-  ): DataFrame = {
-    require(store.opq.isEmpty,
-      "ivfPqTopKFromStoreFiltered: this store is OPQ-coded — use " +
-        "ivfOpqTopKFromStoreFiltered, which rotates the query side to match")
-    ivfPqSearchIndexed(filteredIndexed(store, allowed, allowedIdCol, broadcastAllowed),
-      storeVecs(store), queries, idCol, vecCol, k,
-      store.ivf, store.pq, nprobe, refine, broadcastQueries)
-  }
-
-  /** [[ivfPqTopKFromStoreFiltered]] for an OPQ-coded store: only the
-    * query side rotates (store artifacts already live in rotated
-    * space), then the identical pre-filtered probe/ADC/re-rank tail.
-    */
-  def ivfOpqTopKFromStoreFiltered(
-      store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      nprobe: Int = 4,
-      refine: Int = 4,
-      broadcastQueries: Boolean = true,
-      broadcastAllowed: Boolean = true,
-  ): DataFrame = {
-    val opq = store.opq.getOrElse(throw new IllegalArgumentException(
-      "ivfOpqTopKFromStoreFiltered: this store is plain-PQ-coded (no persisted " +
-        "rotation) — use ivfPqTopKFromStoreFiltered"))
-    ivfPqSearchIndexed(filteredIndexed(store, allowed, allowedIdCol, broadcastAllowed),
-      storeVecs(store), rotateColumn(queries, vecCol, opq), idCol, vecCol, k,
-      store.ivf, store.pq, nprobe, refine, broadcastQueries)
-  }
-
-  /** The filtered faces' shared pre-filter: allowed ids semi-joined
-    * against the coded table (broadcast by default — no exchange on
-    * the bucketed coded side). No distinct() on the allowed side: a
-    * LEFT SEMI join already returns each coded row at most once, and
-    * the dedup aggregation would cost an exchange the join does not
-    * need (PlanShapeSpec pins the filtered plan's shuffle count equal
-    * to the unfiltered face's).
-    */
-  private def filteredIndexed(
-      store: VectorStore.CodedVectorStore,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      broadcastAllowed: Boolean,
+      allowed: Option[AllowedIds],
       codeCol: String = "code",
   ): DataFrame = {
-    val allow = allowed
-      .select(col(allowedIdCol).cast("long").as("neighbor_id"))
-    store.coded
+    val indexed = store.coded
       .select(col("id").as("neighbor_id"), col("cell"), col(codeCol).as("code"))
-      .join(if (broadcastAllowed) broadcast(allow) else allow.hint("merge"),
+    allowed.fold(indexed) { a =>
+      val allow = a.ids.select(col(a.idCol).cast("long").as("neighbor_id"))
+      indexed.join(if (a.broadcast) broadcast(allow) else allow.hint("merge"),
         Seq("neighbor_id"), "left_semi")
+    }
   }
 
   private def storeVecs(store: VectorStore.CodedVectorStore): DataFrame =
     store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec"))
+
+  /** `queries` in the store's space: rotated when the store is
+    * OPQ-coded, as-is otherwise.
+    */
+  private def storeQueries(
+      store: VectorStore.CodedVectorStore, queries: DataFrame, vecCol: String): DataFrame =
+    store.opq.map(o => rotateColumn(queries, vecCol, o)).getOrElse(queries)
 
   /** ANN top-k via IVF: corpus rows join only the `nprobe` probed
     * cells per query (equi-join on cell id — hash join, no cartesian),
@@ -2295,7 +2029,7 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
     val bcCodes = spark.sparkContext.broadcast(qCodes)
-    val kk = math.min(Int.MaxValue.toLong, k.toLong * refine).toInt // k*refine can overflow Int at exhaustive refine on a billion-row corpus; a saturated shortlist bound is still exhaustive
+    val kk = shortlistSize(k, refine)
     val partialCands = nonDegenerate(corpus, vecCol)
       .select(col(idCol).cast("long").as("neighbor_id"), Quantize.signPack(col(vecCol)).as("code"))
       .as[(Long, Array[Long])]
@@ -2340,7 +2074,10 @@ object Similarity {
     * float vectors for shortlist members ONLY (id equi-join on the
     * corpus — at 100 TB this reads refine·k·|queries| vectors, not
     * the corpus), score exact cosine, cut to k with the shared
-    * comparator.
+    * comparator. The query-vector fetch honors the same bound as the
+    * caller's probe join: with `broadcastQueries = false` the query
+    * set is too big to broadcast ANYWHERE, so it joins through a
+    * shuffle instead.
     */
   private def rerankShortlist(
       corpusVecs: DataFrame,
@@ -2349,18 +2086,37 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
+      broadcastQueries: Boolean = true,
+  ): DataFrame =
+    topKReduce(rescore(corpusVecs, queries, shortlist, idCol, vecCol, broadcastQueries), k)
+
+  /** The (query_id, neighbor_id, exact cosine) rows of
+    * [[rerankShortlist]] before the top-k cut.
+    */
+  private def rescore(
+      corpusVecs: DataFrame,
+      queries: DataFrame,
+      shortlist: DataFrame,
+      idCol: String,
+      vecCol: String,
+      broadcastQueries: Boolean = true,
   ): DataFrame = {
-    val rescored = shortlist
+    val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
+    shortlist
       .join(corpusVecs, "neighbor_id")
-      .join(
-        broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))),
-        "query_id")
+      .join(if (broadcastQueries) broadcast(qvecs) else qvecs.hint("merge"), "query_id")
       .select(
         col("query_id"),
         col("neighbor_id"),
         graft.functions.VectorExpressions.vecCosine(col("cvec"), col("qvec")).as("cosine"))
-    topKReduce(rescored, k)
   }
+
+  /** The code-shortlist length `k·refine`, saturated at Int.MaxValue:
+    * the product overflows Int at exhaustive refine on a billion-row
+    * corpus, and a saturated bound is still exhaustive.
+    */
+  private def shortlistSize(k: Int, refine: Int): Int =
+    math.min(Int.MaxValue.toLong, k.toLong * refine).toInt
 
   /** IVF-pruned Hamming search — the composed scale path of the
     * binary row (the analogue of [[ivfPqTopK]] for sign codes): the
@@ -2412,10 +2168,14 @@ object Similarity {
     * (one shared sign-pack expression at write time).
     *
     * On an OPQ store the queries are rotated into the store's space
-    * first (there is no separately-named OPQ-Hamming face — the
-    * stored sign codes ARE rotated-space codes, and the result equals
-    * [[ivfHammingTopK]] over the rotated corpus and queries, i.e. the
-    * same ranking contract under a norm-preserving rotation).
+    * first (the stored sign codes ARE rotated-space codes, and the
+    * result equals [[ivfHammingTopK]] over the rotated corpus and
+    * queries, i.e. the same ranking contract under a norm-preserving
+    * rotation). `allowed` pre-filters the store's `hcode` words
+    * ([[ivfPqTopKFromStore]] holds the semantics): the per-partition
+    * Hamming heaps see only allowed rows, so the `k·refine` shortlist
+    * is spent entirely on eligible candidates, and the exact re-rank
+    * fetches only shortlisted (hence allowed) floats.
     */
   def ivfHammingTopKFromStore(
       store: VectorStore.CodedVectorStore,
@@ -2425,44 +2185,10 @@ object Similarity {
       k: Int,
       nprobe: Int = 4,
       refine: Int = 4,
-  ): DataFrame = {
-    val codedCorpus = store.coded.select(
-      col("id").as("neighbor_id"), col("hcode").as("code"), col("cell"))
-    val corpusVecs = store.vecs.select(col("id").as("neighbor_id"), col("vec").as("cvec"))
-    val q = store.opq.map(o => rotateColumn(queries, vecCol, o)).getOrElse(queries)
-    ivfHammingSearchCoded(codedCorpus, corpusVecs, q, idCol, vecCol, k,
-      store.ivf, nprobe, refine)
-  }
-
-  /** [[ivfHammingTopKFromStore]] restricted to an allowed-id subset —
-    * the license-clean-only / language-only lookup on a sign-coded
-    * store ([[ivfPqTopKFromStoreFiltered]] holds the full semantics
-    * rationale: PRE-filter before the Hamming scan, because
-    * post-filtering returns < k and degrades recall with the filter's
-    * selectivity). Same shared [[filteredIndexed]] semi-join, reading
-    * the store's `hcode` words; the per-partition Hamming heaps then
-    * see only allowed rows, so the `k·refine` shortlist is spent
-    * entirely on eligible candidates, and the exact re-rank fetches
-    * only shortlisted (hence allowed) floats.
-    */
-  def ivfHammingTopKFromStoreFiltered(
-      store: VectorStore.CodedVectorStore,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      allowed: DataFrame,
-      allowedIdCol: String,
-      nprobe: Int = 4,
-      refine: Int = 4,
-      broadcastAllowed: Boolean = true,
-  ): DataFrame = {
-    val codedCorpus =
-      filteredIndexed(store, allowed, allowedIdCol, broadcastAllowed, codeCol = "hcode")
-    val q = store.opq.map(o => rotateColumn(queries, vecCol, o)).getOrElse(queries)
-    ivfHammingSearchCoded(codedCorpus, storeVecs(store), q, idCol, vecCol, k,
-      store.ivf, nprobe, refine)
-  }
+      allowed: Option[AllowedIds] = None,
+  ): DataFrame =
+    ivfHammingSearchCoded(storeIndexed(store, allowed, codeCol = "hcode"), storeVecs(store),
+      storeQueries(store, queries, vecCol), idCol, vecCol, k, store.ivf, nprobe, refine)
 
   /** The probe + packed-Hamming-scan + exact-re-rank tail of
     * [[ivfHammingTopK]] over an ALREADY-CODED corpus — `codedCorpus`
@@ -2503,7 +2229,7 @@ object Similarity {
       .map { case (cell, xs) => cell -> xs.map(_._2).sorted }
     val bcCodes = spark.sparkContext.broadcast(qCodes)
     val bcByCell = spark.sparkContext.broadcast(byCell)
-    val kk = math.min(Int.MaxValue.toLong, k.toLong * refine).toInt // k*refine can overflow Int at exhaustive refine on a billion-row corpus; a saturated shortlist bound is still exhaustive
+    val kk = shortlistSize(k, refine)
     val partialCands = codedCorpus
       .select(col("neighbor_id").cast("long"), col("code"), col("cell").cast("int"))
       .as[(Long, Array[Long], Int)]

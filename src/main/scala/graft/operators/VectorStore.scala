@@ -56,9 +56,10 @@ import graft.operators.Similarity.{IvfModel, OpqModel, PqModel}
   *   - [[stats]] — cell-population skew diagnostics;
   *   - [[graft.streaming.StreamingVectorStore]] — the streaming half
   *     (live semantic hits, increment sink, compaction turn).
-  * Store-served search faces live in [[Similarity]]
-  * (`*FromStore`: ivfPq, ivfHamming, flat pq, opq, ivfOpq, MMR,
-  * semanticDedup).
+  * Store-served search faces live in [[Similarity]], one per scan
+  * recipe (`*FromStore`: ivfPq, ivfHamming, flat pq, MMR,
+  * semanticDedup); each serves plain and OPQ stores and takes an
+  * optional allowed-id filter.
   */
 object VectorStore {
 
@@ -92,10 +93,9 @@ object VectorStore {
     * `opq.get.pq`, the rotated-space codebooks). Rotations preserve
     * norms and angles, so exact cosine re-ranks over the rotated
     * floats equal original-space cosines; the only caller obligation
-    * is to rotate the QUERY side, which the
-    * [[Similarity.opqTopKFromStore]] / [[Similarity.ivfOpqTopKFromStore]]
-    * faces do. The plain faces refuse an OPQ store (and vice versa)
-    * rather than silently searching across spaces.
+    * is to rotate the QUERY side, which every store-served face in
+    * [[Similarity]] does exactly when `opq` is set — a search never
+    * mixes the two spaces.
     */
   final case class CodedVectorStore(
       coded: DataFrame,
@@ -283,8 +283,7 @@ object VectorStore {
   def read(spark: SparkSession, path: String, name: String): CodedVectorStore = {
     validateNameAndPath(name, path, "read")
     val numBuckets = StoreEpoch.readMeta(spark, path).getInt(0)
-    def table(sub: String, schema: String, key: String): DataFrame =
-      StoreEpoch.register(spark, "VectorStore.read", path, name, sub, schema, key, numBuckets)
+    val (coded, vecs) = storeTables(spark, path, name, numBuckets)
     // recipe dispatch: a persisted rotation marks an OPQ store (every
     // artifact in rotated space); loadOpq reads the codebooks from the
     // same model dir, so pq == opq.pq by construction
@@ -295,13 +294,23 @@ object VectorStore {
       if (fs.exists(rotBinPath) || fs.exists(rotPath))
         Some(IndexStore.loadOpq(spark, s"$path/model"))
       else None
-    CodedVectorStore(
-      table("coded", "cell INT, id BIGINT, code BINARY, hcode ARRAY<BIGINT>", "cell"),
-      table("vecs", "id BIGINT, vec ARRAY<FLOAT>", "id"),
+    CodedVectorStore(coded, vecs,
       IndexStore.loadIvf(spark, s"$path/model"),
       opq.map(_.pq).getOrElse(IndexStore.loadPq(spark, s"$path/model")),
       numBuckets,
       opq)
+  }
+
+  /** The store's `coded` and `vecs` tables at `path`, registered (or
+    * checked) through [[StoreEpoch.register]] — catalog calls only, no
+    * Spark job.
+    */
+  private def storeTables(
+      spark: SparkSession, path: String, name: String, numBuckets: Int): (DataFrame, DataFrame) = {
+    def table(sub: String, schema: String, key: String): DataFrame =
+      StoreEpoch.register(spark, "VectorStore.read", path, name, sub, schema, key, numBuckets)
+    (table("coded", "cell INT, id BIGINT, code BINARY, hcode ARRAY<BIGINT>", "cell"),
+      table("vecs", "id BIGINT, vec ARRAY<FLOAT>", "id"))
   }
 
   /** GROW a standing store: encode `newVecs` (disjoint ids required)
@@ -324,6 +333,20 @@ object VectorStore {
       dstName: String,
       materialize: Materialize = Materialize.LocalCheckpoint,
   ): CodedVectorStore = {
+    requireDistinctEpochs(srcPath, srcName, dstPath, dstName)
+    require(materialize != Materialize.Lazy,
+      "VectorStore.merge: Materialize.Lazy would execute the increment plan once per " +
+        "consumer and the coded/vecs sides could diverge row-wise — pass " +
+        "LocalCheckpoint or ParquetDir (the [[write]] invariant)")
+    mergeOpened(spark, read(spark, srcPath, srcName), srcPath, newVecs, idCol, vecCol,
+      dstPath, dstName, materialize)
+  }
+
+  /** [[merge]]'s epoch rule, checked by [[ingestDedup]] too before any
+    * work: a merge writes a NEW epoch directory under a NEW name.
+    */
+  private def requireDistinctEpochs(
+      srcPath: String, srcName: String, dstPath: String, dstName: String): Unit = {
     require(dstPath != srcPath,
       "VectorStore.merge: dstPath must differ from srcPath (epoch directories) — " +
         "an in-place rewrite would clobber the files it is reading")
@@ -331,11 +354,25 @@ object VectorStore {
       "VectorStore.merge: dstName must differ from srcName — the destination write " +
         "would overwrite catalog tables the merge is reading; use a distinct name " +
         "per store path (epoch-suffixed names, e.g. <name>_e<n>)")
-    require(materialize != Materialize.Lazy,
-      "VectorStore.merge: Materialize.Lazy would execute the increment plan once per " +
-        "consumer and the coded/vecs sides could diverge row-wise — pass " +
-        "LocalCheckpoint or ParquetDir (the [[write]] invariant)")
-    val src = read(spark, srcPath, srcName)
+  }
+
+  /** The body of [[merge]] over the ALREADY-OPEN source store `src`
+    * (at `srcPath`), so [[ingestDedup]] opens its source once. The
+    * returned store is the destination's tables with the source's
+    * models and bucket count — the values its meta was written from,
+    * so the fresh epoch opens without reading that meta back.
+    */
+  private def mergeOpened(
+      spark: SparkSession,
+      src: CodedVectorStore,
+      srcPath: String,
+      newVecs: DataFrame,
+      idCol: String,
+      vecCol: String,
+      dstPath: String,
+      dstName: String,
+      materialize: Materialize,
+  ): CodedVectorStore = {
     // ONE execution of the increment plan: encode with the SOURCE
     // models (shared projection with [[write]] — the two faces cannot
     // drift; an OPQ source rotates the increment with ITS standing
@@ -372,7 +409,8 @@ object VectorStore {
       landed.select("id", "vec"),
       src.ivf, src.pq, dstPath, dstName, src.numBuckets, src.opq, face = "merge",
       standing = Some(StoreEpoch.Standing(srcPath, Seq("coded", "vecs"))))
-    read(spark, dstPath, dstName)
+    val (coded, vecs) = storeTables(spark, dstPath, dstName, src.numBuckets)
+    src.copy(coded = coded, vecs = vecs)
   }
 
   /** The COMPOSED daily-ingest verb — exactly the workflow [[merge]]'s
@@ -420,6 +458,7 @@ object VectorStore {
     // validate the destination up front under THIS face's name — the
     // same strings would otherwise only fail inside merge's write tail
     validateNameAndPath(dstName, dstPath, "ingestDedup")
+    requireDistinctEpochs(srcPath, srcName, dstPath, dstName)
     require(materialize != Materialize.Lazy,
       "ingestDedup: Materialize.Lazy would re-execute the increment plan per " +
         "consumer (search, anti-join, merge) — pass LocalCheckpoint or ParquetDir")
@@ -434,11 +473,7 @@ object VectorStore {
       case m => (m, m)
     }
     val landed = Materialize(newVecs.select(col(idCol), col(vecCol)), landMode)
-    val hits =
-      if (src.opq.nonEmpty)
-        Similarity.ivfOpqTopKFromStore(src, landed, idCol, vecCol, searchK, nprobe, refine)
-      else
-        Similarity.ivfPqTopKFromStore(src, landed, idCol, vecCol, searchK, nprobe, refine)
+    val hits = Similarity.ivfPqTopKFromStore(src, landed, idCol, vecCol, searchK, nprobe, refine)
     // rank 1 is the max-cosine hit (shared comparator: score desc, id
     // asc) — if ANY hit clears the threshold, rank 1 does
     val victims = hits
@@ -447,7 +482,7 @@ object VectorStore {
       .localCheckpoint(true)
     val survivors = landed.join(
       victims.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-    val grown = merge(spark, srcPath, srcName, survivors, idCol, vecCol,
+    val grown = mergeOpened(spark, src, srcPath, survivors, idCol, vecCol,
       dstPath, dstName, mergeMode)
     (grown, victims)
   }

@@ -150,9 +150,9 @@ object Probe {
             .ivfOpqTopK(emb, queries, "vec_id", "embedding", k = 5, ivf, opq,
               nprobe = 4, refine = 4).count())
         }
-        timed(s"round $round: ivfOpqTopKFromStore (rotates queries only)") {
+        timed(s"round $round: ivfPqTopKFromStore on the OPQ store (rotates queries only)") {
           println("[probe] rows=" + graft.operators.Similarity
-            .ivfOpqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
+            .ivfPqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
               nprobe = 4, refine = 4).count())
         }
       }

@@ -83,28 +83,29 @@ class DegenerateInputsSpec extends SparkTestBase {
     VectorStore.write(df, "vec_id", "embedding", dir, "dg_filt", ivf, pq, numBuckets = 2)
     val store = VectorStore.read(spark, dir, "dg_filt")
     val queries = df.where($"vec_id" < 3)
-    val noneAllowed = df.select($"vec_id").where(lit(false))
-    assert(Similarity.ivfPqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 3, noneAllowed, "vec_id").count() == 0L)
-    assert(Similarity.ivfHammingTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 3, noneAllowed, "vec_id").count() == 0L)
-    assert(Similarity.pqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 3, noneAllowed, "vec_id").count() == 0L)
-    assert(Similarity.mmrTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 3, noneAllowed, "vec_id").count() == 0L)
-    assert(Similarity.semanticDedupFromStoreFiltered(store, noneAllowed, "vec_id")
+    val noneAllowed = Some(Similarity.AllowedIds(df.select($"vec_id").where(lit(false)),
+      "vec_id"))
+    assert(Similarity.ivfPqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 3, allowed = noneAllowed).count() == 0L)
+    assert(Similarity.ivfHammingTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 3, allowed = noneAllowed).count() == 0L)
+    assert(Similarity.pqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 3, allowed = noneAllowed).count() == 0L)
+    assert(Similarity.mmrTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 3, allowed = noneAllowed).count() == 0L)
+    assert(Similarity.semanticDedupFromStore(store, allowed = noneAllowed)
       .count() == 0L)
-    // OPQ twins drive the rotated-store path through the same empty set
+    // the same faces drive the rotated-store path through the same empty set
     val (ivfO, opqO) = Similarity.trainIvfOpq(df, "embedding", nlist = 4, m = 4,
       ksub = 16, seed = 1L)
     val dirO = java.nio.file.Files.createTempDirectory("graft-degenerate-filt-o").toString
     VectorStore.writeOpq(df, "vec_id", "embedding", dirO, "dg_filt_o", ivfO, opqO,
       numBuckets = 2)
     val storeO = VectorStore.read(spark, dirO, "dg_filt_o")
-    assert(Similarity.ivfOpqTopKFromStoreFiltered(storeO, queries, "vec_id",
-      "embedding", k = 3, noneAllowed, "vec_id").count() == 0L)
-    assert(Similarity.opqTopKFromStoreFiltered(storeO, queries, "vec_id",
-      "embedding", k = 3, noneAllowed, "vec_id").count() == 0L)
+    assert(Similarity.ivfPqTopKFromStore(storeO, queries, "vec_id",
+      "embedding", k = 3, allowed = noneAllowed).count() == 0L)
+    assert(Similarity.pqTopKFromStore(storeO, queries, "vec_id",
+      "embedding", k = 3, allowed = noneAllowed).count() == 0L)
   }
 
   test("text analysis family: empty and null-text inputs pass through typed") {

@@ -324,6 +324,43 @@ class MlFunctionsSpec extends SparkTestBase {
     }
   }
 
+  test("SQL ml_pred plans the native MlpPredict expression, not a UDF; a non-constant model name fails at analysis") {
+    MlFunctions.registerAll(spark)
+    MlFunctions.create(spark, "sqlplan", """{"layers":[{"in":2,"out":3,"activation":"relu"},{"in":3,"out":1}]}""")
+    // a range scan, not a local relation (whose projections the
+    // optimizer evaluates away before planning)
+    spark.range(3)
+      .selectExpr("CASE WHEN id = 2 THEN NULL " +
+        "ELSE array(CAST(id AS FLOAT), CAST(0.5 - id AS FLOAT)) END AS f")
+      .createOrReplaceTempView("sqlplan_in")
+    val sqlPred = spark.sql("SELECT ml_pred('sqlplan', f) AS p FROM sqlplan_in")
+    val exprs = sqlPred.queryExecution.executedPlan
+      .collect { case node => node.expressions }.flatten.flatMap(_.collect { case e => e })
+    assert(exprs.exists(_.isInstanceOf[org.apache.spark.sql.graftext.MlpPredict]),
+      sqlPred.queryExecution.executedPlan.toString)
+    assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]),
+      sqlPred.queryExecution.executedPlan.toString)
+    // the same values as predictCol, null features included
+    val api = spark.table("sqlplan_in")
+      .select(MlFunctions.predictCol(spark, "sqlplan", $"f").as("p"))
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => Option(r.getSeq[Float](0)).map(_.toSeq)).toSeq
+    assert(values(sqlPred) == values(api))
+    assert(values(sqlPred).last.isEmpty, "null features predict null")
+    // the name is resolved when the query is analysed, so it must be a constant
+    val err = intercept[Exception] {
+      spark.sql("SELECT ml_pred(name, f) FROM VALUES ('sqlplan', array(CAST(1 AS FLOAT), " +
+        "CAST(2 AS FLOAT))) AS t(name, f)")
+    }
+    assert(err.getMessage.contains("ml_pred: the model name must be a constant string"),
+      err.getMessage)
+    val missing = intercept[Exception] {
+      spark.sql("SELECT ml_pred('no_such_model', f) FROM sqlplan_in")
+    }
+    assert(missing.getMessage.contains("ml_pred: model 'no_such_model' not found"),
+      missing.getMessage)
+  }
+
   test("ml_pred snapshot isolation: retraining does not change published plan until re-publish") {
     MlFunctions.create(spark, "snap", """{"layers":[{"in":1,"out":1}]}""")
     val df = Seq(Tuple1(Seq(2f))).toDF("f")

@@ -187,22 +187,23 @@ class PlanShapeSpec extends SparkTestBase {
       val allowed = df.where(col("vec_id") % 2 === 0).select(col("vec_id"))
       val pu = plan(Similarity.ivfPqTopKFromStore(store, allQueries, "vec_id",
         "embedding", k = 5, nprobe = 2, refine = 4, broadcastQueries = false))
-      val pf = plan(Similarity.ivfPqTopKFromStoreFiltered(store, allQueries, "vec_id",
-        "embedding", k = 5, allowed, "vec_id", nprobe = 2, refine = 4,
-        broadcastQueries = false))
+      val only = Some(Similarity.AllowedIds(allowed, "vec_id"))
+      val pf = plan(Similarity.ivfPqTopKFromStore(store, allQueries, "vec_id",
+        "embedding", k = 5, nprobe = 2, refine = 4, broadcastQueries = false,
+        allowed = only))
       def shuffles(p: String) = "Exchange (hash|range)partitioning".r.findAllIn(p).size
       assert(pf.contains("BroadcastExchange"),
         s"broadcast-allowed filter must broadcast the id set:\n$pf")
       assert(shuffles(pf) == shuffles(pu),
         s"the broadcast filter must add no shuffle (unfiltered ${shuffles(pu)}, " +
           s"filtered ${shuffles(pf)}):\n$pf")
-      // the Hamming and flat filtered faces share filteredIndexed —
+      // the Hamming and flat faces share the same pre-filter —
       // same pin: broadcast semi-join, zero added shuffles over their
       // unfiltered twins
       val phu = plan(Similarity.ivfHammingTopKFromStore(store, allQueries,
         "vec_id", "embedding", k = 5, nprobe = 2, refine = 4))
-      val phf = plan(Similarity.ivfHammingTopKFromStoreFiltered(store, allQueries,
-        "vec_id", "embedding", k = 5, allowed, "vec_id", nprobe = 2, refine = 4))
+      val phf = plan(Similarity.ivfHammingTopKFromStore(store, allQueries,
+        "vec_id", "embedding", k = 5, nprobe = 2, refine = 4, allowed = only))
       assert(phf.contains("BroadcastExchange"),
         s"Hamming broadcast-allowed filter must broadcast the id set:\n$phf")
       assert(shuffles(phf) == shuffles(phu),
@@ -210,8 +211,8 @@ class PlanShapeSpec extends SparkTestBase {
           s"filtered ${shuffles(phf)}):\n$phf")
       val pqu = plan(Similarity.pqTopKFromStore(store, allQueries,
         "vec_id", "embedding", k = 5, refine = 4))
-      val pqf = plan(Similarity.pqTopKFromStoreFiltered(store, allQueries,
-        "vec_id", "embedding", k = 5, allowed, "vec_id", refine = 4))
+      val pqf = plan(Similarity.pqTopKFromStore(store, allQueries,
+        "vec_id", "embedding", k = 5, refine = 4, allowed = only))
       assert(shuffles(pqf) == shuffles(pqu),
         s"the flat-PQ filter must add no shuffle (unfiltered ${shuffles(pqu)}, " +
           s"filtered ${shuffles(pqf)}):\n$pqf")

@@ -25,11 +25,13 @@ class StoreEpochSpec extends SparkTestBase {
       .map(st => st.getPath.getName -> st.getLen).toMap
   }
 
-  /** Jobs `body` starts. Counted by job group; a marker job in a second
-    * group runs after `body`, and the listener bus delivers events in
-    * order, so once the marker is seen every job of `body` has been.
+  /** Jobs `body` starts (with `metaOnly`, only those whose call site is
+    * [[StoreEpoch.readMeta]]). Counted by job group; a marker job in a
+    * second group runs after `body`, and the listener bus delivers
+    * events in order, so once the marker is seen every job of `body`
+    * has been.
     */
-  private def jobsOf(body: => Any): Int = {
+  private def jobsOf(body: => Any, metaOnly: Boolean = false): Int = {
     val sc = spark.sparkContext
     val group = s"storeepoch-${java.util.UUID.randomUUID()}"
     val counted = new AtomicInteger
@@ -37,7 +39,12 @@ class StoreEpochSpec extends SparkTestBase {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case g if g == group => counted.incrementAndGet()
+          case g if g == group =>
+            // a stage's details are its job's long-form call site, whose
+            // top frame is the first frame outside Spark
+            if (!metaOnly ||
+              e.stageInfos.exists(_.details.contains("graft.operators.StoreEpoch$.readMeta(")))
+              counted.incrementAndGet()
           case g if g == s"$group-marker" => marker.countDown()
           case _ =>
         }
@@ -125,5 +132,50 @@ class StoreEpochSpec extends SparkTestBase {
     }
     assert(vecErr.getMessage.contains("VectorStore.read: table se_guard_vec_coded is " +
       "already registered at"), vecErr.getMessage)
+  }
+
+  test("merge, mergeSignatures and ingestDedup read each epoch's meta once") {
+    val docs = Seq((1L, "the quick brown fox jumps"), (2L, "over the lazy dog today"))
+      .toDF("doc_id", "text")
+    val more = Seq((3L, "a wholly different sentence here")).toDF("doc_id", "text")
+    val sig0 = tmp("once-sig0")
+    Dedup.writeSignatures(Dedup.minHashSignatures(docs, "doc_id", "text"), sig0, "se_once_s0")
+    val rng = new scala.util.Random(7)
+    val vecs = (0L until 64L).map(i => (i, Seq.fill(8)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val ivf = Similarity.trainIvf(vecs, "embedding", nlist = 4, seed = 3L)
+    val pq = Similarity.trainPq(vecs, "embedding", m = 4, ksub = 8, seed = 3L)
+    val vec0 = tmp("once-vec0")
+    VectorStore.write(vecs.where($"vec_id" < 48L), "vec_id", "embedding", vec0, "se_once_v0",
+      ivf, pq, numBuckets = 4)
+    val oneRead = jobsOf(StoreEpoch.readMeta(spark, sig0), metaOnly = true)
+    assert(oneRead > 0, "a meta read runs at least one job")
+    // each call opens its source epoch and builds the destination store
+    // from the values its meta was written from
+    assert(jobsOf(Dedup.mergeSignatures(spark, sig0, "se_once_s0",
+      Dedup.minHashSignatures(more, "doc_id", "text"), tmp("once-sig1"), "se_once_s1"),
+      metaOnly = true) == oneRead)
+    assert(jobsOf(VectorStore.merge(spark, vec0, "se_once_v0", vecs.where($"vec_id" >= 56L),
+      "vec_id", "embedding", tmp("once-vec1"), "se_once_v1"), metaOnly = true) == oneRead)
+    // ingestDedup hands the source it searched to the merge
+    assert(jobsOf(VectorStore.ingestDedup(spark, vec0, "se_once_v0",
+      vecs.where($"vec_id" >= 48L && $"vec_id" < 56L), "vec_id", "embedding",
+      tmp("once-vec2"), "se_once_v2"), metaOnly = true) == oneRead)
+    // the stores built without the read are the stores a reopen sees
+    val sig3 = tmp("once-sig3")
+    val sigs = Dedup.mergeSignatures(spark, sig0, "se_once_s0",
+      Dedup.minHashSignatures(more, "doc_id", "text"), sig3, "se_once_s3")
+    val sigsReread = Dedup.readSignatures(spark, sig3, "se_once_s3")
+    assert(sigs.copy(banded = null, grams = null) ==
+      sigsReread.copy(banded = null, grams = null))
+    assert(sigs.grams.count() == 3L && sigsReread.grams.count() == 3L)
+    val vec3 = tmp("once-vec3")
+    val grown = VectorStore.merge(spark, vec0, "se_once_v0", vecs.where($"vec_id" >= 56L),
+      "vec_id", "embedding", vec3, "se_once_v3")
+    val reread = VectorStore.read(spark, vec3, "se_once_v3")
+    assert(grown.numBuckets == reread.numBuckets && grown.opq == reread.opq &&
+      grown.pq.codebooks.toSeq == reread.pq.codebooks.toSeq &&
+      grown.ivf.centroids.map(_.toSeq).toSeq == reread.ivf.centroids.map(_.toSeq).toSeq)
+    assert(grown.vecs.count() == 56L && reread.vecs.count() == 56L)
   }
 }

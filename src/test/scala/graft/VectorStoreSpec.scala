@@ -32,6 +32,10 @@ class VectorStoreSpec extends SparkTestBase {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-vecstore-$tag").toString
 
+  /** The allowed-id filter of the store-served faces over `vec_id`. */
+  private def only(ids: DataFrame, broadcast: Boolean = true) =
+    Some(Similarity.AllowedIds(ids, "vec_id", broadcast))
+
   private def rows(df: DataFrame): Seq[(Long, Long, Long, Double)] =
     df.select("query_id", "neighbor_id", "rank", "cosine")
       .orderBy("query_id", "rank")
@@ -95,52 +99,52 @@ class VectorStoreSpec extends SparkTestBase {
     // filtered face must equal EXACT brute force over the allowed
     // subset — the "top-k among allowed" semantics, not "top-k then
     // filter"
-    val filtered = Similarity.ivfPqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", nprobe = 8, refine = 50)
+    val filtered = Similarity.ivfPqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 8, refine = 50, allowed = only(allowed))
     val brute = Similarity.bruteForceTopK(
       df.where($"vec_id" % 2 === 0), queries, "vec_id", "embedding", k = 5)
     assert(rows(filtered) == rows(brute),
       "filtered store search must equal brute force over the allowed subset")
     // no disallowed id may leak at stock (recall-limited) settings
-    val stock = Similarity.ivfPqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", nprobe = 2, refine = 4)
+    val stock = Similarity.ivfPqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 2, refine = 4, allowed = only(allowed))
     assert(stock.where($"neighbor_id" % 2 =!= 0).count() == 0,
       "a filtered-out id must never appear in results")
     // the shuffle-path filter (corpus-scale allowed sets) agrees with
     // the broadcast path
-    val shuffled = Similarity.ivfPqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", nprobe = 8, refine = 50,
-      broadcastAllowed = false)
+    val shuffled = Similarity.ivfPqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 8, refine = 50,
+      allowed = only(allowed, broadcast = false))
     assert(rows(shuffled) == rows(filtered))
     // an all-allowed filter degrades to the unfiltered face exactly
-    val all = Similarity.ivfPqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, df.select($"vec_id"), "vec_id", nprobe = 2, refine = 4)
+    val all = Similarity.ivfPqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 2, refine = 4, allowed = only(df.select($"vec_id")))
     val unfiltered = Similarity.ivfPqTopKFromStore(store, queries, "vec_id",
       "embedding", k = 5, nprobe = 2, refine = 4)
     assert(rows(all) == rows(unfiltered))
-    // face/store coding mismatches stay NAMED errors
-    intercept[IllegalArgumentException] {
-      Similarity.ivfOpqTopKFromStoreFiltered(store, queries, "vec_id", "embedding",
-        k = 5, allowed, "vec_id")
-    }
-    // OPQ twin: allowed-only + all-allowed ≡ unfiltered parity
+    // on the plain store the filtered face equals the from-floats
+    // IVF-PQ search over the allowed rows
+    val allowedDf = df.where($"vec_id" % 2 === 0)
+    assert(rows(stock) == rows(Similarity.ivfPqTopK(allowedDf, queries, "vec_id",
+      "embedding", k = 5, ivf, pq, nprobe = 2, refine = 4)))
+    // OPQ store: allowed-only + all-allowed ≡ unfiltered parity
     val (ivfO, opqO) = Similarity.trainIvfOpq(df, "embedding", nlist = 8, m = 4,
       ksub = 16, seed = 3L)
     val dirO = tmp("filtered-opq")
     VectorStore.writeOpq(df, "vec_id", "embedding", dirO, "vs_filt_opq", ivfO, opqO,
       numBuckets = 4)
     val storeO = VectorStore.read(spark, dirO, "vs_filt_opq")
-    val filtO = Similarity.ivfOpqTopKFromStoreFiltered(storeO, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", nprobe = 2, refine = 4)
+    val filtO = Similarity.ivfPqTopKFromStore(storeO, queries, "vec_id",
+      "embedding", k = 5, nprobe = 2, refine = 4, allowed = only(allowed))
     assert(filtO.where($"neighbor_id" % 2 =!= 0).count() == 0)
-    assert(rows(Similarity.ivfOpqTopKFromStoreFiltered(storeO, queries, "vec_id",
-      "embedding", k = 5, df.select($"vec_id"), "vec_id", nprobe = 2, refine = 4))
-      == rows(Similarity.ivfOpqTopKFromStore(storeO, queries, "vec_id", "embedding",
+    assert(rows(Similarity.ivfPqTopKFromStore(storeO, queries, "vec_id",
+      "embedding", k = 5, nprobe = 2, refine = 4, allowed = only(df.select($"vec_id"))))
+      == rows(Similarity.ivfPqTopKFromStore(storeO, queries, "vec_id", "embedding",
         k = 5, nprobe = 2, refine = 4)))
-    intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKFromStoreFiltered(storeO, queries, "vec_id", "embedding",
-        k = 5, allowed, "vec_id")
-    }
+    // on the OPQ store the filtered face equals the from-floats IVF-OPQ
+    // search over the allowed rows
+    assert(rows(filtO) == rows(Similarity.ivfOpqTopK(allowedDf, queries, "vec_id",
+      "embedding", k = 5, ivfO, opqO, nprobe = 2, refine = 4)))
   }
 
   test("filtered Hamming and flat store faces: allowed-only semantics via the shared pre-filter") {
@@ -156,55 +160,95 @@ class VectorStoreSpec extends SparkTestBase {
       allowedDf, queries, "vec_id", "embedding", k = 5))
     // full coverage (nprobe = nlist, shortlist ⊇ allowed corpus):
     // "top-k among allowed", not "top-k then filter"
-    assert(rows(Similarity.ivfHammingTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", nprobe = 8, refine = 50)) == brute,
+    assert(rows(Similarity.ivfHammingTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 8, refine = 50, allowed = only(allowed))) == brute,
       "filtered Hamming face must equal brute force over the allowed subset")
-    assert(rows(Similarity.pqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", refine = 50)) == brute,
+    assert(rows(Similarity.pqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, refine = 50, allowed = only(allowed))) == brute,
       "filtered flat-PQ face must equal brute force over the allowed subset")
     // no disallowed id may leak at stock (recall-limited) settings
-    assert(Similarity.ivfHammingTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", nprobe = 2, refine = 4)
+    assert(Similarity.ivfHammingTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 2, refine = 4, allowed = only(allowed))
       .where($"neighbor_id" % 2 =!= 0).count() == 0)
-    assert(Similarity.pqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", refine = 4)
+    assert(Similarity.pqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, refine = 4, allowed = only(allowed))
       .where($"neighbor_id" % 2 =!= 0).count() == 0)
     // an all-allowed filter degrades to the unfiltered face exactly;
     // the shuffle-path (corpus-scale) filter agrees with broadcast
     val allIds = df.select($"vec_id")
-    assert(rows(Similarity.ivfHammingTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allIds, "vec_id", nprobe = 2, refine = 4))
+    assert(rows(Similarity.ivfHammingTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 2, refine = 4, allowed = only(allIds)))
       == rows(Similarity.ivfHammingTopKFromStore(store, queries, "vec_id",
         "embedding", k = 5, nprobe = 2, refine = 4)))
-    assert(rows(Similarity.pqTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allIds, "vec_id", refine = 4))
+    assert(rows(Similarity.pqTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, refine = 4, allowed = only(allIds)))
       == rows(Similarity.pqTopKFromStore(store, queries, "vec_id",
         "embedding", k = 5, refine = 4)))
-    assert(rows(Similarity.ivfHammingTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", nprobe = 8, refine = 50,
-      broadcastAllowed = false)) == brute)
-    // coding mismatches stay NAMED errors; the OPQ flat twin serves a
+    assert(rows(Similarity.ivfHammingTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 5, nprobe = 8, refine = 50,
+      allowed = only(allowed, broadcast = false))) == brute)
+    // on the plain store the filtered flat face equals the from-floats
+    // flat PQ search over the allowed rows; the same face serves a
     // rotated store with the same allowed-only + degradation contract
-    intercept[IllegalArgumentException] {
-      Similarity.opqTopKFromStoreFiltered(store, queries, "vec_id", "embedding",
-        k = 5, allowed, "vec_id")
-    }
+    assert(rows(Similarity.pqTopKFromStore(store, queries, "vec_id", "embedding",
+      k = 5, allowed = only(allowed)))
+      == rows(Similarity.pqTopK(allowedDf, queries, "vec_id", "embedding", k = 5, pq)))
     val (ivfO, opqO) = Similarity.trainIvfOpq(df, "embedding", nlist = 8, m = 4,
       ksub = 16, seed = 3L)
     val dirO = tmp("filtered-ham-opq")
     VectorStore.writeOpq(df, "vec_id", "embedding", dirO, "vs_fho", ivfO, opqO,
       numBuckets = 4)
     val storeO = VectorStore.read(spark, dirO, "vs_fho")
-    assert(Similarity.opqTopKFromStoreFiltered(storeO, queries, "vec_id",
-      "embedding", k = 5, allowed, "vec_id", refine = 4)
+    assert(Similarity.pqTopKFromStore(storeO, queries, "vec_id",
+      "embedding", k = 5, refine = 4, allowed = only(allowed))
       .where($"neighbor_id" % 2 =!= 0).count() == 0)
-    assert(rows(Similarity.opqTopKFromStoreFiltered(storeO, queries, "vec_id",
-      "embedding", k = 5, allIds, "vec_id", refine = 4))
-      == rows(Similarity.opqTopKFromStore(storeO, queries, "vec_id",
+    assert(rows(Similarity.pqTopKFromStore(storeO, queries, "vec_id",
+      "embedding", k = 5, refine = 4, allowed = only(allIds)))
+      == rows(Similarity.pqTopKFromStore(storeO, queries, "vec_id",
         "embedding", k = 5, refine = 4)))
-    intercept[IllegalArgumentException] {
-      Similarity.pqTopKFromStoreFiltered(storeO, queries, "vec_id", "embedding",
-        k = 5, allowed, "vec_id")
+    // on the OPQ store the filtered flat face equals the from-floats
+    // flat OPQ search over the allowed rows
+    assert(rows(Similarity.pqTopKFromStore(storeO, queries, "vec_id", "embedding",
+      k = 5, allowed = only(allowed)))
+      == rows(Similarity.opqTopK(allowedDf, queries, "vec_id", "embedding", k = 5, opqO)))
+  }
+
+  test("one face per scan recipe: all five store faces serve plain and OPQ stores, and an all-ids filter equals no filter") {
+    val (df, queries) = fixture(53)
+    val ivf = Similarity.trainIvf(df, "embedding", nlist = 8, seed = 3L)
+    val pq = Similarity.trainPq(df, "embedding", m = 4, ksub = 16, seed = 3L)
+    val (ivfO, opqO) = Similarity.trainIvfOpq(df, "embedding", nlist = 8, m = 4,
+      ksub = 16, seed = 3L)
+    val dir = tmp("matrix")
+    val dirO = tmp("matrix-opq")
+    VectorStore.write(df, "vec_id", "embedding", dir, "vs_matrix", ivf, pq, numBuckets = 4)
+    VectorStore.writeOpq(df, "vec_id", "embedding", dirO, "vs_matrix_opq", ivfO, opqO,
+      numBuckets = 4)
+    def ordered(out: DataFrame) = out.orderBy(out.columns.map(col).toSeq: _*).collect().toSeq
+    type Face = (VectorStore.CodedVectorStore, Option[Similarity.AllowedIds]) => DataFrame
+    val faces: Seq[(String, Face)] = Seq(
+      "pqTopKFromStore" -> ((st, a) =>
+        Similarity.pqTopKFromStore(st, queries, "vec_id", "embedding", k = 5, allowed = a)),
+      "ivfPqTopKFromStore" -> ((st, a) =>
+        Similarity.ivfPqTopKFromStore(st, queries, "vec_id", "embedding", k = 5, allowed = a)),
+      "ivfHammingTopKFromStore" -> ((st, a) =>
+        Similarity.ivfHammingTopKFromStore(st, queries, "vec_id", "embedding", k = 5,
+          allowed = a)),
+      "mmrTopKFromStore" -> ((st, a) =>
+        Similarity.mmrTopKFromStore(st, queries, "vec_id", "embedding", k = 3, allowed = a)),
+      "semanticDedupFromStore" -> ((st, a) =>
+        Similarity.semanticDedupFromStore(st, eps = 0.99, allowed = a)))
+    val allIds = only(df.select($"vec_id"))
+    for {
+      store <- Seq(VectorStore.read(spark, dir, "vs_matrix"),
+        VectorStore.read(spark, dirO, "vs_matrix_opq"))
+      (name, face) <- faces
+    } {
+      val recipe = if (store.opq.isEmpty) "plain" else "OPQ"
+      val unfiltered = ordered(face(store, None))
+      assert(unfiltered.nonEmpty, s"$name on the $recipe store returned nothing")
+      assert(ordered(face(store, allIds)) == unfiltered,
+        s"$name on the $recipe store: an all-ids filter must equal no filter")
     }
   }
 
@@ -329,7 +373,7 @@ class VectorStoreSpec extends SparkTestBase {
       "an epoch whose standing copy failed must not look complete")
   }
 
-  test("OPQ store: store-served opq/ivfOpq equal the from-floats faces; merge keeps the rotated space; faces refuse the wrong recipe") {
+  test("OPQ store: store-served faces equal the from-floats opq/ivfOpq faces; merge keeps the rotated space; one face serves both recipes") {
     val (df, queries) = fixture(43)
     val (ivf, opq) = Similarity.trainIvfOpq(df, "embedding", nlist = 8, m = 4,
       ksub = 16, seed = 3L)
@@ -346,7 +390,7 @@ class VectorStoreSpec extends SparkTestBase {
       .ivfOpqTopK(df, queries, "vec_id", "embedding", k = 5, ivf, opq,
         nprobe = 2, refine = 4)
     val fromStoreIvfOpq = Similarity
-      .ivfOpqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
+      .ivfPqTopKFromStore(store, queries, "vec_id", "embedding", k = 5,
         nprobe = 2, refine = 4)
     assert(rows(fromStoreIvfOpq) == rows(fromFloatsIvfOpq),
       "store-served IVF-OPQ must equal the from-floats face")
@@ -354,7 +398,7 @@ class VectorStoreSpec extends SparkTestBase {
     val fromFloatsOpq = Similarity
       .opqTopK(df, queries, "vec_id", "embedding", k = 5, opq, refine = 4)
     val fromStoreOpq = Similarity
-      .opqTopKFromStore(store, queries, "vec_id", "embedding", k = 5, refine = 4)
+      .pqTopKFromStore(store, queries, "vec_id", "embedding", k = 5, refine = 4)
     assert(rows(fromStoreOpq) == rows(fromFloatsOpq),
       "store-served flat OPQ must equal the from-floats face")
 
@@ -387,20 +431,17 @@ class VectorStoreSpec extends SparkTestBase {
       .ivfOpqTopK(df, queries, "vec_id", "embedding", k = 5, ivf, opq,
         nprobe = 8, refine = 8)
     val unionStore = Similarity
-      .ivfOpqTopKFromStore(e1, queries, "vec_id", "embedding", k = 5,
+      .ivfPqTopKFromStore(e1, queries, "vec_id", "embedding", k = 5,
         nprobe = 8, refine = 8)
     assert(rows(unionStore) == rows(unionFloats),
       "epoch-1 OPQ store must equal the from-floats union search")
 
-    // recipe guards: plain faces refuse an OPQ store and vice versa
-    val wrongPlain = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKFromStore(store, queries, "vec_id", "embedding", k = 5)
-    }
-    assert(wrongPlain.getMessage.contains("OPQ-coded"))
-    val wrongFlat = intercept[IllegalArgumentException] {
-      Similarity.pqTopKFromStore(store, queries, "vec_id", "embedding", k = 5)
-    }
-    assert(wrongFlat.getMessage.contains("OPQ-coded"))
+    // one face per recipe: at default knobs the face equals the
+    // from-floats OPQ search on the OPQ store ...
+    assert(rows(Similarity.ivfPqTopKFromStore(store, queries, "vec_id", "embedding", k = 5))
+      == rows(Similarity.ivfOpqTopK(df, queries, "vec_id", "embedding", k = 5, ivf, opq)))
+    assert(rows(Similarity.pqTopKFromStore(store, queries, "vec_id", "embedding", k = 5))
+      == rows(Similarity.opqTopK(df, queries, "vec_id", "embedding", k = 5, opq)))
     val (dfP, queriesP) = fixture(29)
     val ivfP = Similarity.trainIvf(dfP, "embedding", nlist = 8, seed = 3L)
     val pqP = Similarity.trainPq(dfP, "embedding", m = 4, ksub = 16, seed = 3L)
@@ -408,10 +449,10 @@ class VectorStoreSpec extends SparkTestBase {
     VectorStore.write(dfP, "vec_id", "embedding", dirP, "vs_plainguard", ivfP, pqP,
       numBuckets = 4)
     val plainStore = VectorStore.read(spark, dirP, "vs_plainguard")
-    val wrongOpq = intercept[IllegalArgumentException] {
-      Similarity.ivfOpqTopKFromStore(plainStore, queriesP, "vec_id", "embedding", k = 5)
-    }
-    assert(wrongOpq.getMessage.contains("plain-PQ-coded"))
+    // ... and the from-floats plain search on a plain store
+    assert(rows(Similarity.ivfPqTopKFromStore(plainStore, queriesP, "vec_id", "embedding",
+      k = 5)) == rows(Similarity.ivfPqTopK(dfP, queriesP, "vec_id", "embedding", k = 5,
+        ivfP, pqP)))
   }
 
   test("ingestDedup: near-dup increments drop with a victim ledger, fresh rows merge; pruneEpochs retires dirs AND catalog entries") {
@@ -553,8 +594,7 @@ class VectorStoreSpec extends SparkTestBase {
     // appears (neither as a row nor as a component anchor)
     val store1 = VectorStore.read(spark, d1, "vs_sd")
     val allowed = corpus.select($"vec_id").where($"vec_id" =!= 9001L)
-    val filt = Similarity.semanticDedupFromStoreFiltered(
-      store1, allowed, "vec_id", eps = 0.99)
+    val filt = Similarity.semanticDedupFromStore(store1, eps = 0.99, allowed = only(allowed))
     assert(filt.count() == corpus.count() - 1, "verdicts cover exactly the allowed slice")
     assert(filt.where($"id" === 9001L).isEmpty)
     val ballF = filt.where($"id".isin(9000L, 9002L, 9003L))
@@ -566,8 +606,8 @@ class VectorStoreSpec extends SparkTestBase {
     def verdicts(out: org.apache.spark.sql.DataFrame) = out
       .select($"id", $"component", $"is_kept").orderBy("id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    assert(verdicts(Similarity.semanticDedupFromStoreFiltered(
-      store1, corpus.select($"vec_id"), "vec_id", eps = 0.99))
+    assert(verdicts(Similarity.semanticDedupFromStore(
+      store1, eps = 0.99, allowed = only(corpus.select($"vec_id"))))
       == verdicts(Similarity.semanticDedupFromStore(store1, eps = 0.99)))
   }
 
@@ -613,9 +653,9 @@ class VectorStoreSpec extends SparkTestBase {
     // selection equals the from-floats MMR run on ONLY the allowed
     // rows — "diversify among allowed", not "diversify then filter"
     val allowedDf = df.where($"vec_id" % 2 === 0)
-    val filtF = Similarity.mmrTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 4, allowedDf.select($"vec_id"), "vec_id", poolSize = 12,
-      lambda = 0.5, nprobe = 8, refine = 17)
+    val filtF = Similarity.mmrTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 4, poolSize = 12, lambda = 0.5, nprobe = 8, refine = 17,
+      allowed = only(allowedDf.select($"vec_id")))
     val floatsAllowed = Similarity
       .mmrTopK(allowedDf, queries, "vec_id", "embedding", k = 4, poolSize = 12,
         lambda = 0.5)
@@ -624,12 +664,12 @@ class VectorStoreSpec extends SparkTestBase {
     assert(filtF.where($"neighbor_id" % 2 =!= 0).count() == 0)
     // all-allowed degrades to the unfiltered face exactly; the OPQ
     // store routes through its filtered pool recipe
-    assert(sel(Similarity.mmrTopKFromStoreFiltered(store, queries, "vec_id",
-      "embedding", k = 4, df.select($"vec_id"), "vec_id", poolSize = 12,
-      lambda = 0.5, nprobe = 8, refine = 17)) == sel(fromStore))
-    assert(Similarity.mmrTopKFromStoreFiltered(storeO, queries, "vec_id",
-      "embedding", k = 4, allowedDf.select($"vec_id"), "vec_id", poolSize = 12,
-      lambda = 0.5, nprobe = 8, refine = 17)
+    assert(sel(Similarity.mmrTopKFromStore(store, queries, "vec_id",
+      "embedding", k = 4, poolSize = 12, lambda = 0.5, nprobe = 8, refine = 17,
+      allowed = only(df.select($"vec_id")))) == sel(fromStore))
+    assert(Similarity.mmrTopKFromStore(storeO, queries, "vec_id",
+      "embedding", k = 4, poolSize = 12, lambda = 0.5, nprobe = 8, refine = 17,
+      allowed = only(allowedDf.select($"vec_id")))
       .where($"neighbor_id" % 2 =!= 0).count() == 0)
   }
 
@@ -850,7 +890,7 @@ class VectorStoreSpec extends SparkTestBase {
       val it = Seq(1, 2, 4, 8).iterator
       while (it.hasNext && !met) {
         val np = it.next()
-        val m = meanRecallO(Similarity.ivfOpqTopKFromStore(storeO, sample,
+        val m = meanRecallO(Similarity.ivfPqTopKFromStore(storeO, sample,
           "vec_id", "embedding", k, nprobe = np, refine = 4))
         met = m >= 0.6
         buf += ((np, m, met))
