@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.MlpPredict
 import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
@@ -61,7 +63,8 @@ object MlFunctions {
 
   /** `ml_list() → TABLE(model VARCHAR, json VARCHAR)` (reference
     * src/lib.rs:88-126). Driver-local registry snapshot → DataFrame; no
-    * custom scan protocol needed on Spark.
+    * custom scan protocol needed on Spark. SQL reads the same rows
+    * through `ml_list()` and the `ml_models` view ([[publish]]).
     */
   def list(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -352,15 +355,29 @@ object MlFunctions {
     MlpPredict.column(features.cast(ArrayType(FloatType)), model)
   }
 
-  /** (Re)register SQL `ml_pred` and refresh the `ml_models` view.
-    * Called automatically by create/train. `ml_pred` is a function
-    * builder, so it needs no re-binding after training: each query
-    * binds the weights current when it is analysed.
+  /** Register SQL `ml_pred`, the table function `ml_list()` and the
+    * `ml_models` view over it on `spark`. Called automatically by
+    * create/train, so API-only sessions get the SQL surface too. All
+    * three resolve [[ModelRegistry]] when a query is analysed, so none
+    * needs a refresh after a create or a training, SQL or API: each
+    * query binds the weights and lists the models current at its
+    * analysis.
     */
   def publish(spark: SparkSession): Unit = synchronized {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction("ml_pred", predBuilder, "scala_udf")
-    list(spark).createOrReplaceTempView("ml_models")
+    spark.sessionState.tableFunctionRegistry
+      .createOrReplaceTempFunction("ml_list", listBuilder(spark), "scala_udf")
+    // a SQL temp view keeps its text and is analysed at every use
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW ml_models AS SELECT model, json FROM ml_list()")
+  }
+
+  /** SQL `ml_list()` → [[list]]'s rows, read when the query is analysed
+    * (the reference's `ml_list` table function, src/lib.rs:244-245).
+    */
+  private def listBuilder(spark: SparkSession)(args: Seq[Expression]): LogicalPlan = {
+    require(args.isEmpty, s"ml_list takes no arguments, got ${args.length}")
+    list(spark).queryExecution.analyzed
   }
 
   /** SQL `ml_pred(name, feats)` → the [[predictCol]] expression: the
@@ -386,25 +403,41 @@ object MlFunctions {
     * §2.1 row 3: partial buffers collect (features, targets) pairs,
     * the final merge trains.
     *
-    * Caveats (documented): the merged row order follows partition
-    * order, so set a seed and expect scan-order sensitivity (the
-    * reference has the same property — it trains in chunk order); the
+    * Training order: `reduce` tags each partial buffer's rows with the
+    * id of the input partition it runs in, and the final merge trains
+    * on the partitions in ascending id order, each in its scan order.
+    * That order does not depend on the order the shuffle delivers the
+    * partial buffers in, so one seed over one scan trains one model
+    * (the reference likewise trains in chunk order). Caveats: the
     * final merge runs in the reducer task, so the registry update and
     * [[lastStats]] are only visible in local mode — cluster deployments
     * use [[train]]/[[trainDistributed]]. Unlike the reference, predictions
     * are not returned inline (an aggregate yields one row); follow
     * with `ml_pred`, which binds the trained weights in the next query.
     */
-  private type TrainBuf = (String, String, List[(Array[Float], Array[Float])])
+  private[graft] type TrainBuf = (String, String, List[(Int, List[(Array[Float], Array[Float])])])
+
+  /** `b` plus one row of the partition this task scans. The buffer's
+    * rows are `(partitionId, rows)` chunks, newest chunk and newest row
+    * first.
+    */
+  private def addRow(b: TrainBuf, name: String, cfg: String, row: (Array[Float], Array[Float])): TrainBuf = {
+    val pid = TaskContext.getPartitionId()
+    val chunks = b._3 match {
+      case (p, rows) :: rest if p == pid => (p, row :: rows) :: rest
+      case other => (pid, List(row)) :: other
+    }
+    (name, cfg, chunks)
+  }
 
   private def finishTrain(b: TrainBuf): String = {
-    val (name, cfg, rows) = b
+    val (name, cfg, chunks) = b
     if (name.isEmpty) "Err: no rows"
     else {
       val model = ModelRegistry
         .get(name)
         .getOrElse(throw new IllegalArgumentException(s"ml_train: model '$name' not found"))
-      val ordered = rows.reverse
+      val ordered = chunks.sortBy(_._1).flatMap(_._2.reverse)
       lastStats = Some(model.fit(
         ordered.map(_._1).toArray,
         ordered.map(_._2).toArray,
@@ -430,7 +463,7 @@ object MlFunctions {
       ] {
     override def zero: TrainBuf = ("", "", Nil)
     override def reduce(b: TrainBuf, row: (String, Array[Float], Array[Float])): TrainBuf =
-      (row._1, b._2, (row._2, row._3) :: b._3)
+      addRow(b, row._1, b._2, (row._2, row._3))
     override def merge(a: TrainBuf, b: TrainBuf): TrainBuf = mergeBuf(a, b)
     override def finish(b: TrainBuf): String = finishTrain(b)
     override def bufferEncoder = org.apache.spark.sql.Encoders.kryo[TrainBuf]
@@ -438,13 +471,13 @@ object MlFunctions {
   }
 
   /** 4-arg form with a JSON config (autompg.test:22). */
-  private final class TrainAgg4
+  private[graft] final class TrainAgg4
       extends org.apache.spark.sql.expressions.Aggregator[
         (String, Array[Float], Array[Float], String), TrainBuf, String,
       ] {
     override def zero: TrainBuf = ("", "", Nil)
     override def reduce(b: TrainBuf, row: (String, Array[Float], Array[Float], String)): TrainBuf =
-      (row._1, row._4, (row._2, row._3) :: b._3)
+      addRow(b, row._1, row._4, (row._2, row._3))
     override def merge(a: TrainBuf, b: TrainBuf): TrainBuf = mergeBuf(a, b)
     override def finish(b: TrainBuf): String = finishTrain(b)
     override def bufferEncoder = org.apache.spark.sql.Encoders.kryo[TrainBuf]
@@ -503,7 +536,9 @@ object MlFunctions {
     *     registry in local mode. Cluster code should call [[create]].
     *     Marked nondeterministic so Catalyst cannot collapse/reorder/
     *     re-execute them (SURVEY §4).
-    *   - view `ml_models` — `ml_list()` equivalent.
+    *   - table function `ml_list()` and view `ml_models` over it —
+    *     the registry's models as of the query's analysis ([[publish]]),
+    *     so a SQL `ml_create` shows in the next query.
     */
   def registerAll(spark: SparkSession): Unit = {
     val create2 = udf { (name: String, spec: String) =>

@@ -36,10 +36,13 @@ object Smoke {
       .head
       .getString(0)
     println(s"ml_create → $created")
-    MlFunctions.publish(spark) // refresh snapshot after SQL-side create
 
-    // ml_list mirror (reference test/sql/autompg.test:7-10)
-    spark.sql("SELECT * FROM ml_models").show(truncate = false)
+    // ml_list mirror (reference test/sql/autompg.test:7-10): the SQL
+    // create shows in the next query, with no publish in between
+    val models = spark.sql("SELECT * FROM ml_models")
+    models.show(truncate = false)
+    require(models.where(col("model") === "mpg_model").count() == 1,
+      "ml_models does not list the model SQL ml_create just made")
 
     // train on lineitem-derived regression: predict extendedprice/10000
     // from (quantity, discount, tax)
@@ -75,7 +78,6 @@ object Smoke {
       .head()
       .getString(0)
     println(s"SQL ml_train → $sqlTrainStatus")
-    MlFunctions.publish(spark)
 
     // ml_pred via SQL over a fresh view (reference test/sql/autompg.test:19)
     val preds = spark.sql(

@@ -17,7 +17,9 @@ import graft.ml.Mlp
   * no Seq boxing, and the call participates in whole-stage codegen.
   *
   * Same eval-mode semantics as [[graft.ml.Mlp.predict]] (dropout off,
-  * BatchNorm running stats — reference src/nn/mod.rs:71).
+  * BatchNorm running stats — reference src/nn/mod.rs:71). SQL
+  * `ml_pred` and `MlFunctions.predictCol` both plan this expression,
+  * so `predict`'s input-major kernel is the one forward path of both.
   */
 case class MlpPredict(child: Expression, model: Mlp)
     extends UnaryExpression
@@ -41,7 +43,9 @@ case class MlpPredict(child: Expression, model: Mlp)
 }
 
 object MlpPredict {
-  /** Shared eval/codegen entry: primitive in, primitive out. */
+  /** Shared eval/codegen entry: primitive in, primitive out; the
+    * outputs have [[graft.ml.Mlp.predict]]'s bits.
+    */
   def run(model: Mlp, input: ArrayData): ArrayData = {
     val out = model.predict(input.toFloatArray())
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)

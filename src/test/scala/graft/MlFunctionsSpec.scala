@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ml.ModelRegistry
+import graft.ml.{Mlp, ModelRegistry, TrainConfig}
 import graft.sql.Macros
 
 /** Mirrors of the reference's sqllogictest corpus
@@ -374,5 +374,62 @@ class MlFunctionsSpec extends SparkTestBase {
     assert(before == after, "captured snapshot must be immutable")
     val fresh = df.select(MlFunctions.predictCol(spark, "snap", $"f")).head().getSeq[Float](0)
     assert(fresh != before, "new predictCol must bind the updated weights")
+  }
+
+  test("SQL ml_create shows in ml_models and ml_list() in the next query, with no publish in between") {
+    MlFunctions.registerAll(spark)
+    ModelRegistry.remove("fresh_sql")
+    assert(spark.sql("SELECT model FROM ml_models WHERE model = 'fresh_sql'").collect().isEmpty)
+    spark.sql("""SELECT ml_create('fresh_sql', '{"layers":[{"in":2,"out":1}]}')""").collect()
+    val listed = spark.sql("SELECT model, json FROM ml_models WHERE model = 'fresh_sql'").collect()
+    assert(listed.length == 1 && listed.head.getString(1).contains("\"in\":2"), listed.toSeq)
+    assert(spark.sql("SELECT model FROM ml_list() WHERE model = 'fresh_sql'").count() == 1)
+  }
+
+  private def weightBits(m: Mlp): Seq[Int] =
+    m.layers.toSeq.flatMap(l => (l.w ++ l.b).map(java.lang.Float.floatToRawIntBits))
+
+  test("ml_train aggregate: partial buffers train in partition order, whatever the merge order") {
+    val spec = """{"layers":[{"in":2,"out":4,"activation":"relu"},{"in":4,"out":1}]}"""
+    val cfg = """{"epochs":3,"batch_size":8,"seed":5}"""
+    val rows = (0 until 40).map(i => ("ord_merge", Array(i / 40f, 1f - i / 40f), Array(i / 20f), cfg))
+    val agg = new MlFunctions.TrainAgg4
+    // one partial buffer per partition, each reduced inside its task
+    val Array(a, b) = spark.sparkContext.parallelize(rows, 2)
+      .mapPartitions(it => Iterator.single(it.foldLeft(agg.zero)(agg.reduce)))
+      .collect()
+    def trained(buf: MlFunctions.TrainBuf): Seq[Int] = {
+      MlFunctions.create(spark, "ord_merge", spec)
+      assert(agg.finish(buf) == "Ok")
+      weightBits(ModelRegistry.get("ord_merge").get)
+    }
+    val direct = Mlp.fromSpec("ord_merge", spec)
+    direct.fit(rows.map(_._2).toArray, rows.map(_._3).toArray, TrainConfig.parse(cfg), trainFraction = 0.3)
+    assert(trained(agg.merge(a, b)) == weightBits(direct), "merge(a, b) must train on rows in partition order")
+    assert(trained(agg.merge(b, a)) == weightBits(direct), "merge(b, a) must train on rows in partition order")
+  }
+
+  test("SQL ml_train_cfg over an 8-partition table: same weight bits run to run, rows in partition order") {
+    MlFunctions.registerAll(spark)
+    val spec = """{"layers":[{"in":2,"out":8,"activation":"relu"},{"in":8,"out":1}]}"""
+    val cfg = """{"epochs":2,"batch_size":32,"seed":11}"""
+    spark.range(0, 2000, 1, 8)
+      .selectExpr("id", "array(CAST(sin(id) AS FLOAT), CAST(cos(id * 0.7) AS FLOAT)) AS f",
+        "array(CAST(0.5 * sin(id) + 0.25 * cos(id * 0.7) AS FLOAT)) AS t")
+      .createOrReplaceTempView("ord8")
+    def sqlTrained(): Seq[Int] = {
+      MlFunctions.create(spark, "ord8", spec)
+      val ok = spark.sql(s"SELECT ml_train_cfg('ord8', f, t, '$cfg') FROM ord8").head().getString(0)
+      assert(ok == "Ok")
+      weightBits(ModelRegistry.get("ord8").get)
+    }
+    val first = sqlTrained()
+    assert(sqlTrained() == first, "two runs over one table must train the same weights")
+    // range partitions hold ascending id slices: partition order is id order
+    val rows = spark.table("ord8").orderBy("id").collect()
+    val direct = Mlp.fromSpec("ord8", spec)
+    direct.fit(rows.map(_.getSeq[Float](1).toArray), rows.map(_.getSeq[Float](2).toArray),
+      TrainConfig.parse(cfg), trainFraction = 0.3)
+    assert(first == weightBits(direct))
   }
 }

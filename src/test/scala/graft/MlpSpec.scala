@@ -232,6 +232,99 @@ class MlpSpec extends AnyFunSuite {
     }
   }
 
+  // ----------------------------------------------------- predict golden bits
+
+  /** Digest of every [[Mlp.predict]] output over a fixed input grid:
+    * 256 random rows, then each special value (zeros of both signs, a
+    * negative, NaN, ±Inf, a huge and a tiny magnitude) at each input
+    * position of a random row, then rows made of one special value.
+    * Biases and BatchNorm parameters are moved off their 0/1 init so
+    * the bias-first order and the eval-mode normalisation show in the
+    * bits. Every output bit counts, a zero's sign included, except that
+    * all NaNs count as one value: which NaN an operation on two NaNs
+    * returns follows the operand order the JIT picks, which Java leaves
+    * open.
+    */
+  private def predictDigest(spec: String): Long = {
+    val m = Mlp.fromSpec("golden_predict", spec, seed = 42L)
+    val prng = new scala.util.Random(17)
+    m.layers.foreach { l =>
+      l.b.indices.foreach(o => l.b(o) = prng.nextFloat() * 0.4f - 0.2f)
+      l.bn.foreach { bn =>
+        bn.gamma.indices.foreach { o =>
+          bn.gamma(o) = 0.5f + prng.nextFloat()
+          bn.beta(o) = prng.nextFloat() * 0.4f - 0.2f
+          bn.runningMean(o) = prng.nextFloat() - 0.5f
+          bn.runningVar(o) = 0.2f + prng.nextFloat() * 2
+        }
+      }
+    }
+    val n = m.inputDim
+    val rng = new scala.util.Random(23)
+    def random(): Array[Float] = Array.fill(n)(rng.nextFloat() * 4 - 2)
+    val specials = Seq(0f, -0f, -1.75f, Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, 3e30f, -2e-30f)
+    val rows = Seq.fill(256)(random()) ++
+      (for (s <- specials; i <- 0 until n) yield { val x = random(); x(i) = s; x }) ++
+      specials.map(s => Array.fill(n)(s))
+    var h = 0xcbf29ce484222325L
+    def mix(v: Long): Unit = { h = (h ^ v) * 0x100000001b3L; h ^= h >>> 29 }
+    rows.foreach(x => m.predict(x).foreach(y =>
+      mix(if (y.isNaN) 0x7fc00000L else java.lang.Float.floatToRawIntBits(y).toLong)))
+    h
+  }
+
+  /** Constants computed on the output-major `predict` (one scalar chain
+    * per output unit) that predates the input-major pass. Input widths
+    * 1, 3, 5, 6 and 7 leave 1, 3, 1, 2 and 3 inputs after the passes
+    * of four.
+    */
+  private val goldenPredict: Seq[(String, String, Long)] = Seq(
+    ("bench net 5-64-32-1 relu", benchSpec, 0x16882d204eecc203L),
+    ("in 3, 2 outputs, relu",
+      """{"layers":[{"in":3,"out":8,"activation":"relu"},{"in":8,"out":2}]}""", 0x63a1b2aa0180a549L),
+    ("in 7, then in 6, tanh",
+      """{"layers":[{"in":7,"out":6,"activation":"tanh"},{"in":6,"out":1}]}""", 0xd02bc1608cfe905fL),
+    ("1-wide input",
+      """{"layers":[{"in":1,"out":4,"activation":"relu"},{"in":4,"out":1}]}""", 0x516e5c92e17e2edfL),
+    ("tanh + batch_norm + dropout 0.1 (eval mode), 2 outputs", bnDropTanhSpec, 0x3bbab586181c4566L),
+    ("single identity layer", """{"layers":[{"in":3,"out":1}]}""", 0xc5a9af2df527fdadL),
+  )
+
+  goldenPredict.foreach { case (label, spec, expected) =>
+    test(s"golden predict bits: $label") {
+      val got = predictDigest(spec)
+      assert(got == expected, f"digest 0x$got%016xL != pinned 0x$expected%016xL")
+    }
+  }
+
+  test("fit's per-epoch train MSE has the bits of an MSE over predict") {
+    Seq(benchSpec, bnDropTanhSpec, bnReluSpec).foreach { spec =>
+      val m = Mlp.fromSpec("mse_pin", spec, seed = 42L)
+      val rng = new scala.util.Random(31)
+      // more rows than one evaluation chunk; every 7th feature is zero
+      val feats = Array.tabulate(1100, m.inputDim)((r, i) =>
+        if ((r * m.inputDim + i) % 7 == 3) 0f else rng.nextFloat() * 2 - 1)
+      val tgts = feats.map(f => Array.tabulate(m.outputDim)(o => f.sum * (o + 1) * 0.3f))
+      def predictMse(): Double = {
+        var sum = 0.0
+        feats.indices.foreach { r =>
+          val p = m.predict(feats(r))
+          p.indices.foreach { o => val d = p(o) - tgts(r)(o); sum += d * d }
+        }
+        sum / (feats.length.toLong * m.outputDim)
+      }
+      // fit logs once per epoch, after that epoch's MSEs
+      val viaPredict = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val stats = m.fit(feats, tgts, TrainConfig(3, 64, 42L, 0.01f), trainFraction = 1.0,
+        log = _ => viaPredict += predictMse())
+      assert(stats.epochTrainMse.length == 3 && viaPredict.length == 3)
+      stats.epochTrainMse.zip(viaPredict).zipWithIndex.foreach { case ((fitMse, loopMse), e) =>
+        assert(java.lang.Double.doubleToRawLongBits(fitMse) == java.lang.Double.doubleToRawLongBits(loopMse),
+          s"$spec epoch ${e + 1}: fit $fitMse vs predict loop $loopMse")
+      }
+    }
+  }
+
   // ------------------------------------------------------ gradient check
 
   /** Batch-mean MSE of a train-mode forward (batch-statistic BatchNorm,
