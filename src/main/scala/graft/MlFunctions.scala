@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftext.MlpPredict
+import org.apache.spark.sql.graftext.{MlpPredict, MlpScoreStrategy}
 import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -17,13 +18,23 @@ import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
   * Execution model: models are created/trained on the DRIVER (training
   * a single model with sequential Adam is inherently driver-side state,
   * mirroring the reference's in-process registry at src/nn/mod.rs:25);
-  * inference runs distributed on executors through ONE forward path,
-  * the native [[org.apache.spark.sql.graftext.MlpPredict]] expression:
-  * SQL `ml_pred('name', feats)` and [[predictCol]] both build it over
-  * an immutable copy of the registry's weights taken when the query is
+  * inference runs distributed on executors through ONE expression,
+  * the native [[org.apache.spark.sql.graftext.MlpPredict]]: SQL
+  * `ml_pred('name', feats)` and [[predictCol]] both build it over an
+  * immutable copy of the registry's weights taken when the query is
   * analysed — the distributed analog of the reference's
   * clone-out-of-registry semantics (src/nn/mod.rs:48-55). The model
   * name of a SQL `ml_pred` call must therefore be a constant.
+  *
+  * Scoring runs in batches, as the reference's per-`DataChunk` tensor
+  * forward does (src/lib.rs:248-249): every call in a projection, and
+  * not under CASE, IF or COALESCE, is planned by
+  * [[org.apache.spark.sql.graftext.MlpScoreStrategy]] as one
+  * `MlpScoreExec`, which scores 512-row chunks feature-major through
+  * [[graft.ml.Mlp.predictColumns]]. A call under a conditional (so only
+  * a taken branch runs), in a filter or in an aggregate runs per row
+  * through [[graft.ml.Mlp.predict]]. Both give the same bits. [[publish]]
+  * installs the strategy with the SQL names, once per session.
   *
   * Semantic divergences from the reference (documented, intentional):
   *   - `ml_train` trains on the WHOLE input relation exactly once.
@@ -116,7 +127,8 @@ object MlFunctions {
   }
 
   /** Shared tail of every train path: fit the registered model on the
-    * collected rows, re-register, checkpoint weights, re-publish.
+    * collected rows, re-register, checkpoint weights, ensure the SQL
+    * surface ([[publish]]).
     */
   private def fitRows(
       spark: SparkSession,
@@ -342,34 +354,42 @@ object MlFunctions {
   }
 
   /** Prediction column bound to the CURRENT copy of `name`'s
-    * weights, as a native codegen expression
+    * weights, as a native expression
     * ([[org.apache.spark.sql.graftext.MlpPredict]]): the KB-sized
     * weight snapshot is captured immutably in the plan (clone-out
     * semantics), inputs are read as primitive float arrays — no UDF
-    * encoder boxing on the inference hot path.
+    * encoder boxing on the inference hot path. Ensures the session's
+    * batch scorer ([[publish]]), so a projection of it is batch-scored.
     */
   def predictCol(spark: SparkSession, name: String, features: Column): Column = {
     val model = ModelRegistry
       .get(name)
       .getOrElse(throw new IllegalArgumentException(s"model '$name' not found"))
+    publish(spark)
     MlpPredict.column(features.cast(ArrayType(FloatType)), model)
   }
 
-  /** Register SQL `ml_pred`, the table function `ml_list()` and the
-    * `ml_models` view over it on `spark`. Called automatically by
-    * create/train, so API-only sessions get the SQL surface too. All
-    * three resolve [[ModelRegistry]] when a query is analysed, so none
-    * needs a refresh after a create or a training, SQL or API: each
-    * query binds the weights and lists the models current at its
-    * analysis.
+  /** Ensure `spark` has SQL `ml_pred`, the table function `ml_list()`,
+    * the `ml_models` view over it and the batch scorer
+    * ([[org.apache.spark.sql.graftext.MlpScoreStrategy]]); adds only
+    * what this session lacks, so repeated calls register nothing.
+    * Called by create, the train paths and [[predictCol]], so API-only
+    * sessions get the SQL surface too. All three SQL names resolve
+    * [[ModelRegistry]] when a query is analysed, so none needs a refresh
+    * after a create or a training, SQL or API: each query binds the
+    * weights and lists the models current at its analysis.
     */
   def publish(spark: SparkSession): Unit = synchronized {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("ml_pred", predBuilder, "scala_udf")
-    spark.sessionState.tableFunctionRegistry
-      .createOrReplaceTempFunction("ml_list", listBuilder(spark), "scala_udf")
+    val functions = spark.sessionState.functionRegistry
+    if (!functions.functionExists(FunctionIdentifier("ml_pred")))
+      functions.createOrReplaceTempFunction("ml_pred", predBuilder, "scala_udf")
+    val tableFunctions = spark.sessionState.tableFunctionRegistry
+    if (!tableFunctions.functionExists(FunctionIdentifier("ml_list")))
+      tableFunctions.createOrReplaceTempFunction("ml_list", listBuilder(spark), "scala_udf")
     // a SQL temp view keeps its text and is analysed at every use
-    spark.sql("CREATE OR REPLACE TEMPORARY VIEW ml_models AS SELECT model, json FROM ml_list()")
+    if (spark.sessionState.catalog.getRawTempView("ml_models").isEmpty)
+      spark.sql("CREATE TEMPORARY VIEW ml_models AS SELECT model, json FROM ml_list()")
+    MlpScoreStrategy.install(spark)
   }
 
   /** SQL `ml_list()` → [[list]]'s rows, read when the query is analysed
@@ -527,7 +547,8 @@ object MlFunctions {
 
   /** Register the SQL-compat surface on a fresh session:
     *   - `ml_pred('name', feats)` — the native [[MlpPredict]]
-    *     expression over the weights current at analysis ([[publish]]).
+    *     expression over the weights current at analysis, batch-scored
+    *     in a projection ([[publish]]).
     *   - `ml_create(name, spec)` AND `ml_create(name, spec,
     *     weightsPath)` — both reference arities (src/lib.rs:23-86) on
     *     one name via an arity-dispatching builder; the 3-arg form

@@ -114,6 +114,19 @@ final case class TrainStats(
   * core of a 4-vCPU AVX-512 x86 VM, 150k rows: ≈0.44–0.72M rows/s
   * (≈0.40M with C2's SuperWord off); one scalar `+=` chain per unit
   * ran ≈0.17–0.20M rows/s there.
+  *
+  * [[predictColumns]] scores a feature-major chunk with the training
+  * kernels and keeps [[predict]]'s bits (MlpSpec runs the predict
+  * digests through it). It is the one batch eval forward: `fit`'s
+  * per-epoch MSE and the SQL batch scorer
+  * (`org.apache.spark.sql.graftext.MlpScoreExec`, which serves SQL
+  * `ml_pred` and `MlFunctions.predictCol` in a projection) both call it.
+  * [[predict]] stays the reference it is pinned against and the row
+  * fallback for a call the scorer does not take (under CASE, IF or
+  * COALESCE, in a filter or an aggregate). Same net, core and rows,
+  * 512-row chunks, transposition included: ≈3.8–4.6M rows/s against
+  * ≈0.46–0.59M for [[predict]] row by row; 2048-row chunks ran within
+  * that noise.
   */
 final class Mlp(
     val name: String,
@@ -129,17 +142,15 @@ final class Mlp(
 
   // ---------------------------------------------------------------- forward
 
-  /** Eval-mode forward for a single row (dropout off, BN running stats)
-    * — the `ml_pred` hot path (reference eval mode: src/nn/mod.rs:71,
-    * model.valid() drops autodiff so dropout is inactive). The linear
-    * step is the input-major pass of [[accumulateUnits]]; relu keeps a
-    * -0 input as -0.
+  /** Eval-mode forward for a single row (dropout off, BN running stats;
+    * reference eval mode: src/nn/mod.rs:71, model.valid() drops autodiff
+    * so dropout is inactive): the reference [[predictColumns]] is pinned
+    * against and the row path of an `ml_pred` the batch scorer does not
+    * take. The linear step is the input-major pass of
+    * [[accumulateUnits]]; relu keeps a -0 input as -0.
     */
   def predict(x: Array[Float]): Array[Float] = {
-    require(
-      x.length == inputDim,
-      s"model '$name' expects $inputDim features, got ${x.length}",
-    )
+    requireWidth(x.length)
     var cur = x
     var li = 0
     while (li < layers.length) {
@@ -156,6 +167,65 @@ final class Mlp(
       }
       applyActivationInPlace(l.activation, outArr)
       cur = outArr
+      li += 1
+    }
+    cur
+  }
+
+  /** Fails with the message every scoring path gives for a feature row
+    * of the wrong width.
+    */
+  def requireWidth(width: Int): Unit =
+    require(width == inputDim, s"model '$name' expects $inputDim features, got $width")
+
+  /** One `out × rows` output block per layer: the scratch
+    * [[predictColumns]] writes into, for chunks of up to `rows` rows.
+    */
+  def columnBuffers(rows: Int): Array[Array[Array[Float]]] =
+    layers.map(l => Array.ofDim[Float](l.out, rows))
+
+  /** Eval-mode forward over a feature-major chunk: `x(i)(r)` is input
+    * `i` of row `r`, for rows `[0, rows)`. Each layer writes its outputs
+    * into `bufs(li)` (from [[columnBuffers]]); the result is the last
+    * block, where `y(o)(r)` has the bits of `predict(row r)(o)`. Rows
+    * are independent, so values left in `x` or `bufs` past `rows` or
+    * from an earlier chunk change nothing.
+    *
+    * The linear step is [[linearInto]]'s feature-major pass, which sums
+    * every unit in [[predict]]'s order. Relu is `if (a < 0f) a = 0f` on
+    * the output layer, which keeps [[predict]]'s -0, and the
+    * branch-free `Math.max` of [[activateRows]] on a hidden layer, unless
+    * the next layer's bias or BatchNorm beta holds a -0: a hidden zero's
+    * sign reaches an output only through a sum that starts from -0
+    * (`-0 + -0` is -0, `+0 + ±0` is +0). The rule reads the parameters
+    * on each call.
+    */
+  def predictColumns(x: Array[Array[Float]], rows: Int, bufs: Array[Array[Array[Float]]]): Array[Array[Float]] = {
+    require(x.length == inputDim && bufs.length == layers.length, "predictColumns: input or buffers do not fit the model")
+    var cur = x
+    var li = 0
+    while (li < layers.length) {
+      val l = layers(li)
+      val z = bufs(li)
+      linearInto(l, cur, rows, z)
+      val keepZeroSign = l.activation == Activation.Relu &&
+        (li == layers.length - 1 || Mlp.holdsNegativeZero(layers(li + 1)))
+      var o = 0
+      while (o < l.out) {
+        val zo = z(o)
+        l.bn.foreach { bn =>
+          val inv = (1.0 / math.sqrt(bn.runningVar(o) + bn.eps)).toFloat
+          val g = bn.gamma(o); val mean = bn.runningMean(o); val beta = bn.beta(o)
+          var r = 0
+          while (r < rows) { zo(r) = g * ((zo(r) - mean) * inv) + beta; r += 1 }
+        }
+        if (keepZeroSign) {
+          var r = 0
+          while (r < rows) { if (zo(r) < 0f) zo(r) = 0f; r += 1 }
+        } else activateRows(l.activation, zo, rows)
+        o += 1
+      }
+      cur = z
       li += 1
     }
     cur
@@ -248,10 +318,11 @@ final class Mlp(
   /** Activation over `a(0 until n)`, in place. Relu is `Math.max`,
     * which C2 compiles without a branch (a branch mispredicts on about
     * half of the rows: relu cost 2/3 of the eval pass). It maps -0 to +0
-    * where [[predict]] keeps -0; the sign of a zero never reaches a
-    * weight, a running statistic or an MSE, because every sum it meets
+    * where [[predict]] keeps -0. In training the sign of a zero never
+    * reaches a weight or a running statistic, because every sum it meets
     * starts from +0 or from a bias, and Adam steps from a +0 init never
-    * make a bias -0.
+    * make a bias -0; [[predictColumns]] states when it may reach an
+    * eval output.
     */
   private def activateRows(act: Activation, a: Array[Float], n: Int): Unit = act match {
     case Activation.Relu =>
@@ -433,47 +504,28 @@ final class Mlp(
   }
 
   /** MSE of eval-mode predictions over rows `[from, until)` of the
-    * feature-major input, in chunks of [[Mlp.EvalChunk]] rows. Each
-    * prediction has [[predict]]'s bits; errors sum in row order, then
-    * output order, as a loop over [[predict]] would.
+    * feature-major input, through [[predictColumns]] in chunks of
+    * [[Mlp.EvalChunk]] rows. Each prediction has [[predict]]'s bits;
+    * errors sum in row order, then output order, as a loop over
+    * [[predict]] would.
     */
   private def evalMse(xT: Array[Array[Float]], tT: Array[Array[Float]], from: Int, until: Int): Double = {
     if (from >= until) return Double.NaN
     val chunk = math.min(Mlp.EvalChunk, until - from)
     val xBuf = Array.ofDim[Float](inputDim, chunk)
-    val outBufs = layers.map(l => Array.ofDim[Float](l.out, chunk))
+    val bufs = columnBuffers(chunk)
     var sum = 0.0
     var start = from
     while (start < until) {
       val rows = math.min(chunk, until - start)
       var i = 0
       while (i < inputDim) { System.arraycopy(xT(i), start, xBuf(i), 0, rows); i += 1 }
-      var cur = xBuf
-      var li = 0
-      while (li < layers.length) {
-        val l = layers(li)
-        val z = outBufs(li)
-        linearInto(l, cur, rows, z)
-        var o = 0
-        while (o < l.out) {
-          val zo = z(o)
-          l.bn.foreach { bn =>
-            val inv = (1.0 / math.sqrt(bn.runningVar(o) + bn.eps)).toFloat
-            val g = bn.gamma(o); val mean = bn.runningMean(o); val beta = bn.beta(o)
-            var r = 0
-            while (r < rows) { zo(r) = g * ((zo(r) - mean) * inv) + beta; r += 1 }
-          }
-          activateRows(l.activation, zo, rows)
-          o += 1
-        }
-        cur = z
-        li += 1
-      }
+      val y = predictColumns(xBuf, rows, bufs)
       var r = 0
       while (r < rows) {
         var o = 0
         while (o < outputDim) {
-          val d = cur(o)(r) - tT(o)(start + r)
+          val d = y(o)(r) - tT(o)(start + r)
           sum += d * d
           o += 1
         }
@@ -703,10 +755,18 @@ final class Mlp(
 
 object Mlp {
 
-  /** Rows per eval-mode pass in `fit`'s per-epoch MSE: the widest
-    * layer's activations for one chunk stay cache-resident.
+  /** Rows per [[Mlp.predictColumns]] call, in `fit`'s per-epoch MSE
+    * and in the SQL batch scorer: the widest layer's activations for
+    * one chunk stay cache-resident. 2048 rows (the reference's DuckDB
+    * chunk) scored within noise of 512.
     */
-  private val EvalChunk = 512
+  val EvalChunk = 512
+
+  /** Whether a -0 sits in `l`'s bias or BatchNorm beta. */
+  private def holdsNegativeZero(l: DenseLayer): Boolean = {
+    def negZero(a: Array[Float]) = a.exists(v => java.lang.Float.floatToRawIntBits(v) == 0x80000000)
+    negZero(l.b) || l.bn.exists(bn => negZero(bn.beta))
+  }
 
   /** Feature-major copy of row-major rows: one array per column. */
   private def featureMajor(rows: Array[Array[Float]], width: Int): Array[Array[Float]] =

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.MlpScoreExec
 
 import graft.MlFunctions
 
@@ -86,6 +87,17 @@ object Smoke {
     preds.show(5, truncate = false)
     val n = preds.where(col("yhat").isNotNull && size(col("yhat")) === 1).count()
     println(s"rows with arity-1 prediction: $n")
+    // it is batch-scored, with predictCol's values (order-free row checksum)
+    require(preds.queryExecution.executedPlan.find(_.isInstanceOf[MlpScoreExec]).isDefined,
+      s"SQL ml_pred does not plan MlpScoreExec:\n${preds.queryExecution.executedPlan}")
+    def checksum(df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)), bit_xor(xxhash64(col("l_orderkey"), col("l_linenumber"), col("yhat")))).head()
+    val viaSql = checksum(spark.sql(
+      "SELECT l_orderkey, l_linenumber, ml_pred('mpg_model', features) AS yhat FROM li_feats"))
+    val viaApi = checksum(li.select(col("l_orderkey"), col("l_linenumber"),
+      MlFunctions.predictCol(spark, "mpg_model", col("features")).as("yhat")))
+    require(viaSql == viaApi, s"SQL ml_pred checksum $viaSql differs from predictCol's $viaApi")
+    println(s"ml_pred (MlpScoreExec) equals predictCol: ${viaSql.getLong(0)} rows")
     val mse = trained
       .select(avg(pow(element_at(col("prediction"), 1) - element_at(col("targets"), 1), 2)))
       .as[Double]

@@ -18,8 +18,12 @@ import graft.ml.Mlp
   *
   * Same eval-mode semantics as [[graft.ml.Mlp.predict]] (dropout off,
   * BatchNorm running stats — reference src/nn/mod.rs:71). SQL
-  * `ml_pred` and `MlFunctions.predictCol` both plan this expression,
-  * so `predict`'s input-major kernel is the one forward path of both.
+  * `ml_pred` and `MlFunctions.predictCol` both build this expression.
+  * In a projection, and not under CASE, IF or COALESCE,
+  * [[MlpScoreStrategy]] plans it as [[MlpScoreExec]], which scores
+  * chunks feature-major through [[graft.ml.Mlp.predictColumns]] with
+  * the same output bits; everywhere else (under a conditional, in a
+  * filter or an aggregate) it runs per row through [[MlpPredict.run]].
   */
 case class MlpPredict(child: Expression, model: Mlp)
     extends UnaryExpression
@@ -43,8 +47,8 @@ case class MlpPredict(child: Expression, model: Mlp)
 }
 
 object MlpPredict {
-  /** Shared eval/codegen entry: primitive in, primitive out; the
-    * outputs have [[graft.ml.Mlp.predict]]'s bits.
+  /** The row path's eval/codegen entry: primitive in, primitive out;
+    * the outputs have [[graft.ml.Mlp.predict]]'s bits.
     */
   def run(model: Mlp, input: ArrayData): ArrayData = {
     val out = model.predict(input.toFloatArray())

@@ -334,15 +334,17 @@ class MlFunctionsSpec extends SparkTestBase {
         "ELSE array(CAST(id AS FLOAT), CAST(0.5 - id AS FLOAT)) END AS f")
       .createOrReplaceTempView("sqlplan_in")
     val sqlPred = spark.sql("SELECT ml_pred('sqlplan', f) AS p FROM sqlplan_in")
-    val exprs = sqlPred.queryExecution.executedPlan
-      .collect { case node => node.expressions }.flatten.flatMap(_.collect { case e => e })
-    assert(exprs.exists(_.isInstanceOf[org.apache.spark.sql.graftext.MlpPredict]),
-      sqlPred.queryExecution.executedPlan.toString)
-    assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]),
-      sqlPred.queryExecution.executedPlan.toString)
-    // the same values as predictCol, null features included
     val api = spark.table("sqlplan_in")
       .select(MlFunctions.predictCol(spark, "sqlplan", $"f").as("p"))
+    // both plan the batch scorer over the native expression
+    Seq(sqlPred, api).foreach { df =>
+      val plan = df.queryExecution.executedPlan
+      val exprs = plan.collect { case node => node.expressions }.flatten.flatMap(_.collect { case e => e })
+      assert(exprs.exists(_.isInstanceOf[org.apache.spark.sql.graftext.MlpPredict]), plan.toString)
+      assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]), plan.toString)
+      assert(scorers(df).map(_.preds.map(_.model.name)) == Seq(Seq("sqlplan")), plan.toString)
+    }
+    // the same values as predictCol, null features included
     def values(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => Option(r.getSeq[Float](0)).map(_.toSeq)).toSeq
     assert(values(sqlPred) == values(api))
@@ -359,6 +361,74 @@ class MlFunctionsSpec extends SparkTestBase {
     }
     assert(missing.getMessage.contains("ml_pred: model 'no_such_model' not found"),
       missing.getMessage)
+  }
+
+  private def scorers(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.graftext.MlpScoreExec] =
+    df.queryExecution.executedPlan.collect { case s: org.apache.spark.sql.graftext.MlpScoreExec => s }
+
+  private def floatBits(r: org.apache.spark.sql.Row, i: Int): Option[Seq[Int]] =
+    Option(r.getSeq[Float](i)).map(_.map(java.lang.Float.floatToRawIntBits))
+
+  test("batch-scored ml_pred: wrong width fails with predict's message; CASE keeps a call row-level and lazy") {
+    MlFunctions.registerAll(spark)
+    val m = Mlp.fromSpec("batch_sem", """{"layers":[{"in":2,"out":4,"activation":"relu"},{"in":4,"out":1}]}""")
+    ModelRegistry.put(m)
+    spark.range(6)
+      .selectExpr("id", "CASE WHEN id % 2 = 0 THEN array(CAST(id AS FLOAT), CAST(-id AS FLOAT)) " +
+        "ELSE array(CAST(id AS FLOAT)) END AS f")
+      .createOrReplaceTempView("batch_sem_in")
+    val wrong = spark.sql("SELECT ml_pred('batch_sem', f) AS p FROM batch_sem_in")
+    assert(scorers(wrong).nonEmpty, wrong.queryExecution.executedPlan.toString)
+    val err = intercept[Exception](wrong.collect())
+    assert(err.getMessage.contains("model 'batch_sem' expects 2 features, got 1"), err.getMessage)
+    // under CASE only the taken branch runs: the call is not batched
+    val guarded = spark.sql(
+      "SELECT id, CASE WHEN size(f) = 2 THEN ml_pred('batch_sem', f) END AS p FROM batch_sem_in ORDER BY id")
+    val rows = guarded.collect()
+    assert(rows.length == 6)
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      if (id % 2 == 0) assert(floatBits(r, 1).contains(m.predict(Array(id.toFloat, -id.toFloat)).toSeq
+        .map(java.lang.Float.floatToRawIntBits)))
+      else assert(r.isNullAt(1))
+    }
+  }
+
+  test("batch-scored ml_pred: two models in one SELECT equal two separate queries") {
+    MlFunctions.registerAll(spark)
+    MlFunctions.create(spark, "pair_a", """{"layers":[{"in":3,"out":8,"activation":"relu"},{"in":8,"out":2}]}""")
+    MlFunctions.create(spark, "pair_b", """{"layers":[{"in":3,"out":5,"activation":"tanh"},{"in":5,"out":1}]}""")
+    spark.range(0, 1000, 1, 3)
+      .selectExpr("id", "array(CAST(sin(id) AS FLOAT), CAST(cos(id) AS FLOAT), CAST(id / 1000.0 AS FLOAT)) AS f")
+      .createOrReplaceTempView("pair_in")
+    val both = spark.sql("SELECT id, ml_pred('pair_a', f) AS a, ml_pred('pair_b', f) AS b FROM pair_in")
+    assert(scorers(both).map(_.preds.map(_.model.name).toSet) == Seq(Set("pair_a", "pair_b")),
+      both.queryExecution.executedPlan.toString)
+    def byId(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) -> floatBits(r, 1)).toMap
+    val a = byId(spark.sql("SELECT id, ml_pred('pair_a', f) FROM pair_in"))
+    val b = byId(spark.sql("SELECT id, ml_pred('pair_b', f) FROM pair_in"))
+    val rows = both.collect()
+    assert(rows.length == 1000)
+    rows.foreach { r =>
+      assert(floatBits(r, 1) == a(r.getLong(0)) && floatBits(r, 2) == b(r.getLong(0)), r)
+    }
+  }
+
+  test("batch-scored ml_pred: a partition of several chunks and an empty partition score every row") {
+    val m = Mlp.fromSpec("chunks", """{"layers":[{"in":2,"out":6,"activation":"relu"},{"in":6,"out":1}]}""")
+    ModelRegistry.put(m)
+    // partition 0 keeps all its 1200 ids (two full chunks and a tail); partition 1 keeps none
+    val in = spark.range(0, 2400, 1, 2).where("id < 1200")
+      .selectExpr("id", "array(CAST(id / 7.0 - 80 AS FLOAT), CAST(3 - id / 300.0 AS FLOAT)) AS f")
+    val scored = in.select($"id", $"f", MlFunctions.predictCol(spark, "chunks", $"f").as("p"))
+    assert(scorers(scored).nonEmpty, scored.queryExecution.executedPlan.toString)
+    assert(scored.rdd.getNumPartitions == 2)
+    val rows = scored.collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 1200L))
+    rows.foreach { r =>
+      val want = m.predict(r.getSeq[Float](1).toArray).toSeq.map(java.lang.Float.floatToRawIntBits)
+      assert(floatBits(r, 2).contains(want), r)
+    }
   }
 
   test("ml_pred snapshot isolation: retraining does not change published plan until re-publish") {
@@ -384,6 +454,28 @@ class MlFunctionsSpec extends SparkTestBase {
     val listed = spark.sql("SELECT model, json FROM ml_models WHERE model = 'fresh_sql'").collect()
     assert(listed.length == 1 && listed.head.getString(1).contains("\"in\":2"), listed.toSeq)
     assert(spark.sql("SELECT model FROM ml_list() WHERE model = 'fresh_sql'").count() == 1)
+  }
+
+  test("publish adds the SQL surface and the batch scorer once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    assert(!s.sessionState.functionRegistry.functionExists(FunctionIdentifier("ml_pred")))
+    MlFunctions.publish(s)
+    def state() = (
+      s.sessionState.functionRegistry.lookupFunctionBuilder(FunctionIdentifier("ml_pred")).get,
+      s.sessionState.tableFunctionRegistry.lookupFunctionBuilder(FunctionIdentifier("ml_list")).get,
+      s.sessionState.catalog.getRawTempView("ml_models").get,
+    )
+    val (pred, list, view) = state()
+    MlFunctions.create(s, "once", """{"layers":[{"in":1,"out":1}]}""")
+    MlFunctions.publish(s)
+    MlFunctions.predictCol(s, "once", org.apache.spark.sql.functions.col("f"))
+    val (pred2, list2, view2) = state()
+    assert(pred2 eq pred, "publish replaced ml_pred")
+    assert(list2 eq list, "publish replaced ml_list")
+    assert(view2 eq view, "publish replaced ml_models")
+    assert(s.experimental.extraStrategies.count(_ == org.apache.spark.sql.graftext.MlpScoreStrategy) == 1)
+    assert(s.sql("SELECT model FROM ml_models WHERE model = 'once'").count() == 1)
   }
 
   private def weightBits(m: Mlp): Seq[Int] =

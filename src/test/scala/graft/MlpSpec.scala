@@ -245,7 +245,7 @@ class MlpSpec extends AnyFunSuite {
     * returns follows the operand order the JIT picks, which Java leaves
     * open.
     */
-  private def predictDigest(spec: String): Long = {
+  private def predictDigest(spec: String, score: (Mlp, Seq[Array[Float]]) => Seq[Array[Float]]): Long = {
     val m = Mlp.fromSpec("golden_predict", spec, seed = 42L)
     val prng = new scala.util.Random(17)
     m.layers.foreach { l =>
@@ -268,9 +268,26 @@ class MlpSpec extends AnyFunSuite {
       specials.map(s => Array.fill(n)(s))
     var h = 0xcbf29ce484222325L
     def mix(v: Long): Unit = { h = (h ^ v) * 0x100000001b3L; h ^= h >>> 29 }
-    rows.foreach(x => m.predict(x).foreach(y =>
+    score(m, rows).foreach(_.foreach(y =>
       mix(if (y.isNaN) 0x7fc00000L else java.lang.Float.floatToRawIntBits(y).toLong)))
     h
+  }
+
+  private def rowByRow(m: Mlp, rows: Seq[Array[Float]]): Seq[Array[Float]] = rows.map(m.predict)
+
+  /** `rows` through [[Mlp.predictColumns]] in chunks of 100 over one set
+    * of buffers: every grid crosses a chunk boundary and ends in a
+    * shorter tail chunk, which scores over the previous chunk's leftovers.
+    */
+  private def batched(m: Mlp, rows: Seq[Array[Float]]): Seq[Array[Float]] = {
+    val chunk = 100
+    val x = Array.ofDim[Float](m.inputDim, chunk)
+    val bufs = m.columnBuffers(chunk)
+    rows.grouped(chunk).flatMap { part =>
+      part.indices.foreach(r => part(r).indices.foreach(i => x(i)(r) = part(r)(i)))
+      val y = m.predictColumns(x, part.length, bufs)
+      part.indices.map(r => Array.tabulate(m.outputDim)(o => y(o)(r)))
+    }.toSeq
   }
 
   /** Constants computed on the output-major `predict` (one scalar chain
@@ -292,8 +309,34 @@ class MlpSpec extends AnyFunSuite {
 
   goldenPredict.foreach { case (label, spec, expected) =>
     test(s"golden predict bits: $label") {
-      val got = predictDigest(spec)
+      val got = predictDigest(spec, rowByRow)
       assert(got == expected, f"digest 0x$got%016xL != pinned 0x$expected%016xL")
+    }
+    test(s"golden predict bits through predictColumns, chunks of 100: $label") {
+      val got = predictDigest(spec, batched)
+      assert(got == expected, f"digest 0x$got%016xL != pinned 0x$expected%016xL")
+    }
+  }
+
+  test("predictColumns keeps predict's zero signs when every bias and beta is -0") {
+    // a 1-wide input of ±0 makes every linear term a signed zero; with
+    // positive weights an input of -0 stays -0 through each -0 bias, so a
+    // hidden relu that maps -0 to +0 flips the output's sign
+    val m = Mlp.fromSpec("neg_zero",
+      """{"layers":[{"in":1,"out":4,"activation":"relu"},""" +
+        """{"in":4,"out":3,"activation":"relu","batch_norm":true},{"in":3,"out":2,"activation":"relu"}]}""")
+    m.layers.foreach { l =>
+      l.w.indices.foreach(k => l.w(k) = math.abs(l.w(k)))
+      java.util.Arrays.fill(l.b, -0f)
+      l.bn.foreach(bn => java.util.Arrays.fill(bn.beta, -0f))
+    }
+    val rng = new scala.util.Random(5)
+    val rows = Seq.fill(40)(Array(0f)) ++ Seq.fill(40)(Array(-0f)) ++ Seq.fill(40)(Array(rng.nextFloat() * 2 - 1))
+    def bits(y: Array[Float]) = y.toSeq.map(v => if (v.isNaN) 0x7fc00000 else java.lang.Float.floatToRawIntBits(v))
+    val want = rowByRow(m, rows).map(bits)
+    assert(want.flatten.contains(0x80000000), "the grid must produce a -0 output")
+    batched(m, rows).map(bits).zip(want).zipWithIndex.foreach { case ((got, exp), r) =>
+      assert(got == exp, s"row $r (input ${rows(r).head}): predictColumns $got vs predict $exp")
     }
   }
 
