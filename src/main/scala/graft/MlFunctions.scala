@@ -1,12 +1,8 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftext.{MlpPredict, MlpScoreStrategy}
-import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
+import org.apache.spark.sql.graftext.{GraftFunctions, MlpPredict, MlpScoreStrategy}
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
@@ -120,8 +116,8 @@ object MlFunctions {
         targets.cast(ArrayType(FloatType)).as("t"),
       )
       .collect()
-    val feats = rows.map(r => seqToFloats(r.getSeq[Float](0), "features"))
-    val tgts = rows.map(r => seqToFloats(r.getSeq[Float](1), "targets"))
+    val feats = rows.map(r => seqToFloats(r.getSeq[Float](0)))
+    val tgts = rows.map(r => seqToFloats(r.getSeq[Float](1)))
     fitRows(spark, name, feats, tgts, cfg, trainFraction, log)
     df.withColumn("prediction", predictCol(spark, name, features))
   }
@@ -184,8 +180,8 @@ object MlFunctions {
         var seen = 0L
         it.foreach { row =>
           val tup = (
-            seqToFloats(row.getSeq[Float](0), "features"),
-            seqToFloats(row.getSeq[Float](1), "targets"),
+            seqToFloats(row.getSeq[Float](0)),
+            seqToFloats(row.getSeq[Float](1)),
           )
           if (res.length < perPartition) res += tup
           else {
@@ -232,7 +228,6 @@ object MlFunctions {
       configJson: String = "",
       log: String => Unit = m => Console.err.println(m),
   ): DataFrame = {
-    import graft.ml.Mlp
     val spark = df.sparkSession
     val cfg = TrainConfig.parse(configJson)
     val model = ModelRegistry
@@ -369,51 +364,26 @@ object MlFunctions {
     MlpPredict.column(features.cast(ArrayType(FloatType)), model)
   }
 
-  /** Ensure `spark` has SQL `ml_pred`, the table function `ml_list()`,
-    * the `ml_models` view over it and the batch scorer
-    * ([[org.apache.spark.sql.graftext.MlpScoreStrategy]]); adds only
-    * what this session lacks, so repeated calls register nothing.
-    * Called by create, the train paths and [[predictCol]], so API-only
-    * sessions get the SQL surface too. All three SQL names resolve
-    * [[ModelRegistry]] when a query is analysed, so none needs a refresh
-    * after a create or a training, SQL or API: each query binds the
-    * weights and lists the models current at its analysis.
+  /** Ensure `spark` has the SQL surface: every
+    * [[org.apache.spark.sql.graftext.GraftFunctions]] entry (`ml_create`,
+    * `ml_train`, `ml_train_cfg`, `ml_pred`, the table function
+    * `ml_list()` and the native expressions), the `ml_models` view over
+    * `ml_list()` and the batch scorer
+    * ([[org.apache.spark.sql.graftext.MlpScoreStrategy]]). It adds only
+    * what this session lacks, so repeated calls, or a session built with
+    * `GraftExtensions`, register nothing twice. Called by create, the
+    * train paths and [[predictCol]], so API-only sessions get the SQL
+    * surface too. `ml_pred` and `ml_list()` resolve [[ModelRegistry]]
+    * when a query is analysed, so neither needs a refresh after a create
+    * or a training, SQL or API: each query binds the weights and lists
+    * the models current at its analysis.
     */
   def publish(spark: SparkSession): Unit = synchronized {
-    val functions = spark.sessionState.functionRegistry
-    if (!functions.functionExists(FunctionIdentifier("ml_pred")))
-      functions.createOrReplaceTempFunction("ml_pred", predBuilder, "scala_udf")
-    val tableFunctions = spark.sessionState.tableFunctionRegistry
-    if (!tableFunctions.functionExists(FunctionIdentifier("ml_list")))
-      tableFunctions.createOrReplaceTempFunction("ml_list", listBuilder(spark), "scala_udf")
+    GraftFunctions.register(spark)
     // a SQL temp view keeps its text and is analysed at every use
     if (spark.sessionState.catalog.getRawTempView("ml_models").isEmpty)
       spark.sql("CREATE TEMPORARY VIEW ml_models AS SELECT model, json FROM ml_list()")
     MlpScoreStrategy.install(spark)
-  }
-
-  /** SQL `ml_list()` → [[list]]'s rows, read when the query is analysed
-    * (the reference's `ml_list` table function, src/lib.rs:244-245).
-    */
-  private def listBuilder(spark: SparkSession)(args: Seq[Expression]): LogicalPlan = {
-    require(args.isEmpty, s"ml_list takes no arguments, got ${args.length}")
-    list(spark).queryExecution.analyzed
-  }
-
-  /** SQL `ml_pred(name, feats)` → the [[predictCol]] expression: the
-    * constant `name` resolves against [[ModelRegistry]] when the query
-    * is analysed.
-    */
-  private def predBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(name, features) =>
-      require(name.foldable && name.dataType.isInstanceOf[StringType] && name.eval() != null,
-        s"ml_pred: the model name must be a constant string, got ${name.sql}")
-      val n = name.eval().toString
-      val model = ModelRegistry.get(n)
-        .getOrElse(throw new IllegalArgumentException(s"ml_pred: model '$n' not found"))
-      MlpPredict(Cast(features, ArrayType(FloatType)), model)
-    case _ =>
-      throw new IllegalArgumentException(s"ml_pred takes 2 arguments, got ${args.length}")
   }
 
   /** SQL-callable whole-relation training: `ml_train(name, feats,
@@ -435,7 +405,7 @@ object MlFunctions {
     * are not returned inline (an aggregate yields one row); follow
     * with `ml_pred`, which binds the trained weights in the next query.
     */
-  private[graft] type TrainBuf = (String, String, List[(Int, List[(Array[Float], Array[Float])])])
+  type TrainBuf = (String, String, List[(Int, List[(Array[Float], Array[Float])])])
 
   /** `b` plus one row of the partition this task scans. The buffer's
     * rows are `(partitionId, rows)` chunks, newest chunk and newest row
@@ -472,26 +442,14 @@ object MlFunctions {
   private def mergeBuf(a: TrainBuf, b: TrainBuf): TrainBuf =
     (if (a._1.nonEmpty) a._1 else b._1, if (a._2.nonEmpty) a._2 else b._2, a._3 ::: b._3)
 
-  /** 3-arg form — reference default config (functions.test:10).
-    * Input vectors are `Array[Float]` (the repo-wide kernel
-    * convention): the aggregate's deserializer then hands reduce the
-    * primitive float[] directly instead of a per-row element List.
+  /** The aggregate behind SQL `ml_train(name, feats, tgts)` (an empty
+    * config: the reference default, functions.test:10) and
+    * `ml_train_cfg(name, feats, tgts, configJson)` (autompg.test:22).
+    * Input vectors are `Array[Float]` (the repo-wide kernel convention):
+    * the aggregate's deserializer then hands reduce the primitive
+    * float[] directly instead of a per-row element List.
     */
-  private final class TrainAgg3
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (String, Array[Float], Array[Float]), TrainBuf, String,
-      ] {
-    override def zero: TrainBuf = ("", "", Nil)
-    override def reduce(b: TrainBuf, row: (String, Array[Float], Array[Float])): TrainBuf =
-      addRow(b, row._1, b._2, (row._2, row._3))
-    override def merge(a: TrainBuf, b: TrainBuf): TrainBuf = mergeBuf(a, b)
-    override def finish(b: TrainBuf): String = finishTrain(b)
-    override def bufferEncoder = org.apache.spark.sql.Encoders.kryo[TrainBuf]
-    override def outputEncoder = org.apache.spark.sql.Encoders.STRING
-  }
-
-  /** 4-arg form with a JSON config (autompg.test:22). */
-  private[graft] final class TrainAgg4
+  final class TrainAgg4
       extends org.apache.spark.sql.expressions.Aggregator[
         (String, Array[Float], Array[Float], String), TrainBuf, String,
       ] {
@@ -545,41 +503,10 @@ object MlFunctions {
     spark.sql(s"SELECT ml_pred(${lit(name)}, $featuresExpr) AS prediction FROM $table")
   }
 
-  /** Register the SQL-compat surface on a fresh session:
-    *   - `ml_pred('name', feats)` — the native [[MlpPredict]]
-    *     expression over the weights current at analysis, batch-scored
-    *     in a projection ([[publish]]).
-    *   - `ml_create(name, spec)` AND `ml_create(name, spec,
-    *     weightsPath)` — both reference arities (src/lib.rs:23-86) on
-    *     one name via an arity-dispatching builder; the 3-arg form
-    *     restores the newest checkpoint under weightsPath. UDF bodies
-    *     run on an executor thread, which only aliases the driver
-    *     registry in local mode. Cluster code should call [[create]].
-    *     Marked nondeterministic so Catalyst cannot collapse/reorder/
-    *     re-execute them (SURVEY §4).
-    *   - table function `ml_list()` and view `ml_models` over it —
-    *     the registry's models as of the query's analysis ([[publish]]),
-    *     so a SQL `ml_create` shows in the next query.
+  /** [[publish]] under its older name: gives a session built without
+    * `GraftExtensions` the SQL surface.
     */
-  def registerAll(spark: SparkSession): Unit = {
-    val create2 = udf { (name: String, spec: String) =>
-      ModelRegistry.put(Mlp.fromSpec(name, spec))
-      "Ok"
-    }.asNondeterministic()
-    val create3 = udf { (name: String, spec: String, weightsPath: String) =>
-      val loaded = ModelRegistry
-        .loadLatest(name, weightsPath)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no saved weights for '$name' under $weightsPath"))
-      ModelRegistry.put(loaded)
-      "Ok"
-    }.asNondeterministic()
-    org.apache.spark.sql.graftext.FunctionRegistration
-      .registerOverloaded(spark, "ml_create", Map(2 -> create2, 3 -> create3))
-    spark.udf.register("ml_train", udaf(new TrainAgg3))
-    spark.udf.register("ml_train_cfg", udaf(new TrainAgg4))
-    publish(spark)
-  }
+  def registerAll(spark: SparkSession): Unit = publish(spark)
 
   /** Weight-fold per-partition BatchNorm running (mean, var) estimates
     * into global ones by the LAW OF TOTAL VARIANCE:
@@ -620,7 +547,7 @@ object MlFunctions {
     (mean, variance)
   }
 
-  private def seqToFloats(s: Seq[Float], what: String): Array[Float] = {
+  private def seqToFloats(s: Seq[Float]): Array[Float] = {
     val a = new Array[Float](s.length)
     var i = 0
     val it = s.iterator

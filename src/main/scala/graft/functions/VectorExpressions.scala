@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 
 /** Public faces of the native vector expressions (implementation lives
   * in [[org.apache.spark.sql.graftext]] because Catalyst's expression
@@ -23,12 +23,17 @@ object VectorExpressions {
     org.apache.spark.sql.graftext.VectorExpressions.signPack(v)
   def hammingDist(a: Column, b: Column): Column =
     org.apache.spark.sql.graftext.VectorExpressions.hammingDist(a, b)
+  /** Add to `spark` every graft SQL function it lacks (the native
+    * expressions and the ML surface; see
+    * [[org.apache.spark.sql.graftext.GraftFunctions]]).
+    */
   def register(spark: SparkSession): Unit =
-    org.apache.spark.sql.graftext.VectorExpressions.register(spark)
+    org.apache.spark.sql.graftext.GraftFunctions.register(spark)
 }
 
-/** `spark.sql.extensions`-compatible alias in the public namespace. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private val inner = new org.apache.spark.sql.graftext.GraftExtensions
-  override def apply(ext: SparkSessionExtensions): Unit = inner(ext)
-}
+/** `spark.sql.extensions=graft.functions.GraftExtensions`: the public
+  * name of [[org.apache.spark.sql.graftext.GraftExtensions]], which gives
+  * a pure-SQL session every graft SQL function, `ml_list()` included, and
+  * the batch scorer. The `ml_models` view needs `graft.MlFunctions.publish`.
+  */
+class GraftExtensions extends org.apache.spark.sql.graftext.GraftExtensions

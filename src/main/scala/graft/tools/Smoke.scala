@@ -9,6 +9,8 @@ import graft.MlFunctions
 /** End-to-end smoke drive of the ML surface through Spark SQL — the
   * Scala mirror of the reference's sqllogictest flow
   * (test/sql/autompg.test:1-23): create → list → train → predict.
+  * The session is built with `GraftExtensions` and no registration
+  * call, as a pure-SQL user would load the reference extension.
   * Run: `sbt "runMain graft.tools.Smoke [sfDir]"`.
   */
 object Smoke {
@@ -20,11 +22,10 @@ object Smoke {
       .appName("graft-smoke")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-
-    MlFunctions.registerAll(spark)
 
     // ml_create via SQL (reference test/sql/autompg.test:4)
     val created = spark
@@ -39,11 +40,11 @@ object Smoke {
     println(s"ml_create → $created")
 
     // ml_list mirror (reference test/sql/autompg.test:7-10): the SQL
-    // create shows in the next query, with no publish in between
-    val models = spark.sql("SELECT * FROM ml_models")
+    // create shows in the next query
+    val models = spark.sql("SELECT * FROM ml_list()")
     models.show(truncate = false)
     require(models.where(col("model") === "mpg_model").count() == 1,
-      "ml_models does not list the model SQL ml_create just made")
+      "ml_list() does not list the model SQL ml_create just made")
 
     // train on lineitem-derived regression: predict extendedprice/10000
     // from (quantity, discount, tax)
@@ -69,6 +70,9 @@ object Smoke {
       trainFraction = 1.0,
     )
     trained.select("features", "targets", "prediction").show(5, truncate = false)
+    // the API train published the ml_models view over ml_list()
+    require(spark.sql("SELECT * FROM ml_models").where(col("model") === "mpg_model").count() == 1,
+      "ml_models does not list the model after the API train")
 
     // SQL-surface whole-relation training (reference test/sql/autompg.test:16
     // form): aggregate ml_train over the relation, then predict

@@ -66,11 +66,14 @@ object MlpScoreStrategy extends SparkStrategy {
       case other => other.mapChildren(extract(_, scored))
     }
 
-  /** Add the strategy to `spark`'s planner, once per session. */
-  def install(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraStrategies.contains(MlpScoreStrategy)) ex.extraStrategies = MlpScoreStrategy +: ex.extraStrategies
-  }
+  /** Add the strategy to `spark`'s planner unless the planner already
+    * has it (from an earlier call or from `GraftExtensions`).
+    */
+  def install(spark: SparkSession): Unit =
+    if (!spark.sessionState.planner.strategies.contains(MlpScoreStrategy)) {
+      val ex = spark.experimental
+      ex.extraStrategies = MlpScoreStrategy +: ex.extraStrategies
+    }
 }
 
 /** Scores `preds` over its child in chunks of [[Mlp.EvalChunk]] rows and
@@ -78,9 +81,10 @@ object MlpScoreStrategy extends SparkStrategy {
   * chunk it copies the rows, evaluates every call's features through one
   * `UnsafeProjection`, scatters them feature-major and runs one
   * [[Mlp.predictColumns]] per call, so each output has [[Mlp.predict]]'s
-  * bits. Null features give a null output; a feature row of the wrong
-  * width fails with [[Mlp.requireWidth]]'s message, as the row
-  * expression does.
+  * bits (features are read in place with `getFloat`, the raw bits the
+  * row path's `toFloatArray` copies). Null features give a null output;
+  * a feature row of the wrong width fails with [[Mlp.requireWidth]]'s
+  * message, as the row expression does.
   */
 case class MlpScoreExec(preds: Seq[MlpPredict], outs: Seq[Attribute], child: SparkPlan)
     extends UnaryExecNode {
@@ -159,11 +163,11 @@ object MlpScoreExec {
         while (j < models.length) {
           isNull(j)(n) = f.isNullAt(j)
           if (!isNull(j)(n)) {
-            val a = f.getArray(j).toFloatArray()
-            models(j).requireWidth(a.length)
+            val a = f.getArray(j)
+            models(j).requireWidth(a.numElements())
             val xj = x(j)
             var i = 0
-            while (i < a.length) { xj(i)(n) = a(i); i += 1 }
+            while (i < xj.length) { xj(i)(n) = a.getFloat(i); i += 1 }
           }
           j += 1
         }

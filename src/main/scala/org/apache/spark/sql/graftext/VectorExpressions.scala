@@ -6,17 +6,16 @@
  */
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{
-  BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression,
+  BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression,
 }
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{
   AbstractDataType, ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType, LongType,
 }
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.Column
 
 /** Native Catalyst expressions for the embedding hot paths.
   *
@@ -407,117 +406,4 @@ object VectorExpressions {
     ExpressionUtils.column(
       LongArrayHamming(ExpressionUtils.expression(a), ExpressionUtils.expression(b)),
     )
-
-  /** SQL registration for the current session. Shape parameters of
-    * the parameterized expressions (shingle n, signature widths,
-    * PQ ksub) come in as literal arguments and must be plan-time
-    * constants — non-literals throw at registration-lookup time, not
-    * mid-query.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def intLit(e: Expression, fn: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other =>
-        throw new IllegalArgumentException(s"$fn expects a literal int argument, got $other")
-    }
-    reg.createOrReplaceTempFunction("vec_dot", es => FloatVectorDot(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_norm", es => FloatVectorNorm(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_cosine", es => FloatVectorCosine(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sign_pack", es => FloatSignPack(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hamming_dist", es => LongArrayHamming(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_count", es => SortedLongIntersectCount(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "pq_adc_score", es => PqAdcScore(es(0), es(1), intLit(es(2), "pq_adc_score")), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "z_value", es => ZOrderValue(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "shingle_set", es => TextShingleSet(es(0), intLit(es(1), "shingle_set")), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", es => TextShingleHashes(es(0), intLit(es(1), "shingle_hashes")),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_prep",
-      es => MinHashPrep(es(0), intLit(es(1), "minhash_prep"), intLit(es(2), "minhash_prep")),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "repetition_stats", es => TextRepetitionStats(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hashed_ngram_features",
-      es => HashedNgramFeatures(es(0), intLit(es(1), "hashed_ngram_features")),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "winnow_signature",
-      es =>
-        WinnowSignature(es(0), intLit(es(1), "winnow_signature"), intLit(es(2), "winnow_signature")),
-      "scala_udf")
-    def strLit(e: Expression, fn: String): String = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-        v.toString
-      case other =>
-        throw new IllegalArgumentException(s"$fn expects a literal string argument, got $other")
-    }
-    reg.createOrReplaceTempFunction(
-      "unicode_normalize",
-      es =>
-        UnicodeNormalize(
-          es(0),
-          if (es.length > 1) strLit(es(1), "unicode_normalize") else "NFC"),
-      "scala_udf")
-  }
-}
-
-/** Session extension wiring — `SparkSession.builder.withExtensions(new
-  * GraftExtensions)` or `spark.sql.extensions=graft.functions.GraftExtensions`
-  * gives pure-SQL users `vec_dot`/`vec_norm`/`vec_cosine`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (
-        FunctionIdentifier("vec_dot"),
-        new ExpressionInfo(classOf[FloatVectorDot].getName, null, "vec_dot"),
-        (es: Seq[Expression]) => FloatVectorDot(es(0), es(1)),
-      ),
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("vec_norm"),
-        new ExpressionInfo(classOf[FloatVectorNorm].getName, null, "vec_norm"),
-        (es: Seq[Expression]) => FloatVectorNorm(es.head),
-      ),
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("vec_cosine"),
-        new ExpressionInfo(classOf[FloatVectorCosine].getName, null, "vec_cosine"),
-        (es: Seq[Expression]) => FloatVectorCosine(es(0), es(1)),
-      ),
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("sorted_intersect_count"),
-        new ExpressionInfo(
-          classOf[SortedLongIntersectCount].getName, null, "sorted_intersect_count"),
-        (es: Seq[Expression]) => SortedLongIntersectCount(es(0), es(1)),
-      ),
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("z_value"),
-        new ExpressionInfo(classOf[ZOrderValue].getName, null, "z_value"),
-        (es: Seq[Expression]) => ZOrderValue(es(0), es(1)),
-      ),
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("simhash64"),
-        new ExpressionInfo(classOf[SimHash64].getName, null, "simhash64"),
-        (es: Seq[Expression]) => SimHash64(es.head),
-      ),
-    )
-  }
 }
