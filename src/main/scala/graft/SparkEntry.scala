@@ -4684,10 +4684,7 @@ object SparkEntry {
     * dedup of planted copies, host caps, ParquetDir threading — are
     * locked in CorpusPipelineSpec.
     */
-  /** q104's page frame, split out so the stage probe
-    * (tools/Probe `funnel_stages`) can time the gate's chain piecewise
-    * against the exact corpus the gate runs.
-    */
+  /** q104's page frame: the planted pages the gate's chain runs over. */
   private[graft] def q104PlantedPages(s: SparkSession, dir: String): DataFrame = {
     val html = concat(
       lit("<html><head><title>t</title><script>var x = 1 < 2;</script></head><body><p>"),
@@ -5516,7 +5513,7 @@ object SparkEntry {
 
   /** GATE-SCOPE boundary cache: several gates audit the SAME planted
     * corpus through different faces (q122/q136/q141 over the q122
-    * pages; q142/q143 over the prepare texts); the staged chain runs
+    * pages; q142/q143 over the prepare texts); the recorded chain runs
     * once per (sf dir, key), each landed boundary is written to a
     * temp PARQUET dir, and every face reads the parquet-backed
     * frames — identical results, one chain run instead of one per
@@ -5723,7 +5720,7 @@ object SparkEntry {
       gateBoundaryCache.values.map(_._2.toString).toSeq
     }
 
-  /** The q122 planted corpus' staged-ingest boundaries (langs=en,
+  /** The q122 planted corpus' recorded ingest boundaries (langs=en,
     * maxPerHost=80, subdomain blocklist — the q122/q136/q141 config),
     * computed once per sf dir.
     */
@@ -5737,13 +5734,12 @@ object SparkEntry {
     }
 
   private def q122WebIngestPlanted(s: SparkSession, dir: String): DataFrame = {
-    // the staged chain's host_cap boundary IS the fused pipeline's
-    // pre-chunk survivor frame for this corpus+config (the staged
-    // exact+near split restates cleanCorpus's fused pass — the
-    // funnel ≡ pipeline spec pins frame equality, r22), so the gate
-    // rides the shared boundary cache through the cap and runs the
-    // real chunk→pack layout tail (webIngestFromCapped — the same
-    // code path webIngestFromCleaned delegates to)
+    // the recorded host_cap boundary IS the pipeline's pre-chunk
+    // survivor frame for this corpus+config (ingestBoundaries runs
+    // webIngest's own chain through the stage hook), so the gate rides
+    // the shared boundary cache through the cap and runs the real
+    // chunk→pack layout tail (webIngestFromCapped — the same code path
+    // webIngest runs)
     val capped = q122IngestBoundaries(s, dir).find(_._1 == "host_cap").get._2
     graft.operators.CorpusPipeline
       .webIngestFromCapped(capped, seqLen = 64, shuffleSalt = "epoch0")
@@ -6879,7 +6875,7 @@ object SparkEntry {
     load(s, dir, "documents").select(col("doc_id"), text.as("text"))
   }
 
-  /** The prepare-corpus staged boundaries (langs=en, defaults —
+  /** The prepare-corpus recorded boundaries (langs=en, defaults —
     * the q142/q143 config), computed once per sf dir.
     */
   private def q142PrepareBoundaries(s: SparkSession, dir: String): Seq[(String, DataFrame)] =

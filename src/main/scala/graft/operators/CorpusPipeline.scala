@@ -148,6 +148,36 @@ object CorpusPipeline {
     case Materialize.ParquetDir(p) => Materialize.ParquetDir(s"$p/$stage")
   }
 
+  /** Called by each pipeline chain at every report boundary with the
+    * stage's name and frame; the chain continues from the frame it
+    * returns. Production passes [[noStages]].
+    */
+  private[graft] type StageHook = (String, DataFrame) => DataFrame
+
+  private val noStages: StageHook = (_, frame) => frame
+
+  /** Runs `chain` once with a hook that lands each boundary
+    * (`localCheckpoint(true)`) and records it; returns the landed
+    * boundaries in chain order.
+    *
+    * The report chains run with [[Materialize.Lazy]]: the hook already
+    * lands every boundary, so a chain's own landings would copy landed
+    * frames again. cleanCorpus's lazy output lands at the `near_dup`
+    * hook after cleanCorpus released its signature frame; that landing
+    * is the landed `exact_dedup` frame anti-joined with the losers —
+    * the signature column is pruned from its plan, so the MinHash pass
+    * does not run twice.
+    */
+  private def recordBoundaries(chain: StageHook => DataFrame): Seq[(String, DataFrame)] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
+    chain { (name, frame) =>
+      val landed = frame.localCheckpoint(true)
+      buf += ((name, landed))
+      landed
+    }
+    buf.toSeq
+  }
+
   /** The full web-ingest front end as ONE face — the seven-stage
     * composition a crawl-to-training-data pipeline hand-wired until
     * now, in the canonical order:
@@ -245,29 +275,25 @@ object CorpusPipeline {
     val quality = cleanedCrawlPrefix(df, idCol, None, htmlCol, urlCol, langs,
       blocklist, canonicalizeNfc, c4, soft404, redactPii, mainContent, stripTracking,
       paragraphBreaks)
-    webIngestFromCleaned(quality, maxPerHost, jaccardThreshold, minLineChars,
-      seqLen, shuffleSalt, materialize, paragraphDedup, minParagraphChars)
+    val capped = dedupAndCap(quality, maxPerHost, jaccardThreshold, minLineChars,
+      materialize, paragraphDedup, minParagraphChars, noStages)
+    webIngestFromCapped(capped, seqLen, shuffleSalt, materialize)
   }
 
-  /** [[webIngest]]'s post-prefix stages (line dedup → exact+near dedup
-    * → host cap → chunk → packed layout) over an ALREADY-CLEANED
-    * prefix frame ((id, text, url_norm, url_host, lang_pred) — the
-    * [[cleanedCrawlPrefix]] output shape). Split out so a caller
-    * holding a materialized prefix (e.g. a gate suite whose report
-    * faces already landed the same boundary) can reuse it instead of
-    * re-running the crawl scan; [[webIngest]] itself delegates here,
-    * so the two can never diverge.
+  /** [[webIngest]]'s corpus-wide stages over the
+    * [[cleanedCrawlPrefix]] output ((id, text, url_norm, url_host,
+    * lang_pred)): line dedup → optional paragraph dedup → exact+near
+    * dedup ([[Dedup.cleanCorpus]]'s fused pass) → host cap.
     */
-  private[graft] def webIngestFromCleaned(
+  private def dedupAndCap(
       quality: DataFrame,
-      maxPerHost: Int = 100000,
-      jaccardThreshold: Double = 0.8,
-      minLineChars: Int = 5,
-      seqLen: Int = 512,
-      shuffleSalt: String = "epoch0",
-      materialize: Materialize = Materialize.LocalCheckpoint,
-      paragraphDedup: Boolean = false,
-      minParagraphChars: Int = 5,
+      maxPerHost: Int,
+      jaccardThreshold: Double,
+      minLineChars: Int,
+      materialize: Materialize,
+      paragraphDedup: Boolean,
+      minParagraphChars: Int,
+      stage: StageHook,
   ): DataFrame = {
     val landedQuality = Materialize(quality, stageMaterialize(materialize, "quality"))
     val attrCols = Seq("url_norm", "url_host", "lang_pred")
@@ -283,10 +309,10 @@ object CorpusPipeline {
     // a chunk-frame-sized attrs join at the end
     val lined0 =
       if (minLineChars < 0) landedQuality
-      else Dedup
+      else stage("line_dedup", Dedup
         .lineDedupCarry(landedQuality, "id", "text", minLineChars, attrCols)
         .where(length(trim(col("clean_text"))) > 0)
-        .select(col("id") +: col("clean_text").as("text") +: attrCols.map(col): _*)
+        .select(col("id") +: col("clean_text").as("text") +: attrCols.map(col): _*))
     // optional corpus-wide PARAGRAPH dedup between line dedup and the
     // exact/near stage (default off, byte-stable): with
     // `paragraphBreaks` extraction upstream, repeated whole blocks
@@ -297,25 +323,23 @@ object CorpusPipeline {
     // enabling it adds one line-dedup-sized pass, nothing superlinear.
     val lined =
       if (!paragraphDedup) lined0
-      else Dedup
+      else stage("paragraph_dedup", Dedup
         .paragraphDedupCarry(lined0, "id", "text", minParagraphChars, attrCols)
         .where(length(trim(col("clean_text"))) > 0)
-        .select(col("id") +: col("clean_text").as("text") +: attrCols.map(col): _*)
-    val deduped = Dedup.cleanCorpus(lined, "id", "text", jaccardThreshold,
-      transitive = true, materialize = stageMaterialize(materialize, "dedup"))
-    val capped = Sampling.capPerStratum(deduped, "url_host", "id", maxPerHost)
-    webIngestFromCapped(capped, seqLen, shuffleSalt, materialize)
+        .select(col("id") +: col("clean_text").as("text") +: attrCols.map(col): _*))
+    val deduped = stage("near_dup", Dedup.cleanCorpusHooked(lined, "id", "text",
+      jaccardThreshold, transitive = true, stageMaterialize(materialize, "dedup"),
+      stage("exact_dedup", _)))
+    stage("host_cap", Sampling.capPerStratum(deduped, "url_host", "id", maxPerHost))
   }
 
-  /** [[webIngestFromCleaned]]'s chunk→pack→join layout TAIL over an
+  /** [[webIngest]]'s chunk→pack→join layout TAIL over an
     * ALREADY-CAPPED survivor frame ((id, text, url_norm, url_host,
-    * lang_pred) — [[Sampling.capPerStratum]]'s output in the fused
-    * chain, or the staged chain's `host_cap` boundary, which the
-    * funnel ≡ pipeline specs pin to the same rows). Split out so a
-    * gate suite holding a landed host_cap boundary can reuse it
+    * lang_pred) — [[dedupAndCap]]'s output, which is also the
+    * `host_cap` boundary [[ingestBoundaries]] records). Split out so
+    * a gate suite holding a landed host_cap boundary can reuse it
     * instead of re-running line dedup + exact/near dedup + the cap;
-    * [[webIngestFromCleaned]] itself delegates here, so the two can
-    * never diverge.
+    * [[webIngest]] itself runs it, so the two can never diverge.
     */
   private[graft] def webIngestFromCapped(
       capped: DataFrame,
@@ -365,18 +389,14 @@ object CorpusPipeline {
     * `paragraph_dedup` (only with `paragraphDedup`),
     * `exact_dedup`, `near_dup`, `host_cap`.
     *
-    * Mechanics: this RUNS the pipeline — each boundary is the SAME
-    * operator call [[webIngest]]/[[cleanedCrawlPrefix]] composes
-    * (c4Clean, dropSoft404, filterBlockedHosts, withLangId,
-    * gopherFilterByLang, lineDedup, exactDedup + cleanCorpus,
-    * capPerStratum), in the same order, with a count at each seam —
-    * so the report cannot disagree with the pipeline about what a
-    * stage drops (the funnel ≡ prefix spec pins the restated order).
-    * The exact/near split restates [[Dedup.cleanCorpus]]'s fused pass
-    * as [[Dedup.exactDedup]] keep-min-id followed by cleanCorpus on
-    * the exact survivors — the same composition, one extra exchange,
-    * bought for the per-stage attribution this operator exists to
-    * report.
+    * Mechanics: this RUNS the pipeline's own chain —
+    * [[cleanedCrawlPrefix]] and [[dedupAndCap]], the functions
+    * [[webIngest]] composes — with a stage hook that lands each
+    * boundary and counts it, so the report cannot disagree with the
+    * pipeline about what a stage drops. The `exact_dedup` boundary
+    * is [[Dedup.cleanCorpus]]'s own exact-survivor frame inside its
+    * fused pass (no second exchange); `near_dup` is cleanCorpus's
+    * output. The chunk→pack layout tail never runs.
     *
     * Scale shape: one action per stage boundary over
     * localCheckpointed frames (each stage's work runs once, the extra
@@ -412,11 +432,12 @@ object CorpusPipeline {
         redactPii, mainContent, stripTracking, paragraphBreaks, paragraphDedup,
         minParagraphChars))
 
-  /** [[stagedIngest]] run once, every landed stage boundary collected
-    * in chain order — the shared substrate of the report faces: a
-    * caller auditing the SAME corpus through several faces (funnel +
-    * per-doc reasons, or reusing a boundary as a pipeline input) pays
-    * for the chain once instead of once per face.
+  /** [[webIngest]]'s chain up to the host cap, run once through
+    * [[recordBoundaries]]: every stage boundary landed and collected
+    * in chain order. A caller auditing the SAME corpus through
+    * several faces (funnel + per-doc reasons, or reusing the
+    * `host_cap` boundary as [[webIngestFromCapped]]'s input) pays for
+    * the chain once instead of once per face.
     */
   private[graft] def ingestBoundaries(
       df: DataFrame,
@@ -437,14 +458,14 @@ object CorpusPipeline {
       paragraphBreaks: Boolean = false,
       paragraphDedup: Boolean = false,
       minParagraphChars: Int = 5,
-  ): Seq[(String, DataFrame)] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
-    stagedIngest(df, idCol, htmlCol, urlCol, langs, maxPerHost, jaccardThreshold,
-      minLineChars, blocklist, canonicalizeNfc, c4, soft404, redactPii, mainContent,
-      stripTracking, paragraphBreaks, paragraphDedup, minParagraphChars,
-      (name, landed) => { buf += ((name, landed)); landed })
-    buf.toSeq
-  }
+  ): Seq[(String, DataFrame)] =
+    recordBoundaries { stage =>
+      val quality = cleanedCrawlPrefix(df, idCol, None, htmlCol, urlCol, langs,
+        blocklist, canonicalizeNfc, c4, soft404, redactPii, mainContent, stripTracking,
+        paragraphBreaks, stage)
+      dedupAndCap(quality, maxPerHost, jaccardThreshold, minLineChars,
+        Materialize.Lazy, paragraphDedup, minParagraphChars, stage)
+    }
 
   /** The funnel report computed from collected stage boundaries —
     * docs + surviving tokens in ONE aggregation per landed frame;
@@ -503,95 +524,6 @@ object CorpusPipeline {
     }
   }
 
-  /** The ONE staged restatement of [[webIngest]]'s chain backing both
-    * report faces ([[webIngestFunnel]], [[webIngestDropReasons]]):
-    * runs every stage boundary as the operator call webIngest
-    * composes, landing each via localCheckpoint and passing it
-    * through `record(stageName, landedFrame)` (which must return the
-    * frame the next stage consumes). Returns the shipped frame.
-    * A single chain means the two reports and any future face cannot
-    * disagree about stage order or membership.
-    */
-  private def stagedIngest(
-      df: DataFrame,
-      idCol: String,
-      htmlCol: String,
-      urlCol: String,
-      langs: Seq[String],
-      maxPerHost: Int,
-      jaccardThreshold: Double,
-      minLineChars: Int,
-      blocklist: Option[DataFrame],
-      canonicalizeNfc: Boolean,
-      c4: Boolean,
-      soft404: Boolean,
-      redactPii: Boolean,
-      mainContent: Boolean,
-      stripTracking: Boolean,
-      paragraphBreaks: Boolean,
-      paragraphDedup: Boolean,
-      minParagraphChars: Int,
-      record: (String, DataFrame) => DataFrame,
-  ): DataFrame = {
-    def land(name: String, f: DataFrame): DataFrame = record(name, f.localCheckpoint(true))
-    val src = df.select(
-      col(idCol).as("id"), col(htmlCol).as("__html"), col(urlCol).as("__url"))
-    val extracted0 =
-      (if (mainContent)
-         WebText.htmlToMainText(src, "__html", outCol = "text",
-           paragraphBreaks = paragraphBreaks)
-       else WebText.htmlToText(src, "__html", outCol = "text",
-         paragraphBreaks = paragraphBreaks)).drop("__html")
-    val extracted1 =
-      if (canonicalizeNfc)
-        extracted0.withColumn("text", TextAnalysis.canonicalize(col("text")))
-      else extracted0
-    var cur = land("extract", extracted1)
-    if (c4) cur = land("c4", QualityFilters.c4Clean(cur, "text"))
-    if (soft404) cur = land("soft404", QualityFilters.dropSoft404(cur, "text"))
-    cur = WebText.withUrlParts(cur, "__url", stripTracking = stripTracking).drop("__url")
-    blocklist.foreach { bl =>
-      cur = land("blocklist", WebText.filterBlockedHosts(cur, "id", "url_host", bl))
-    }
-    cur = TextAnalysis.withLangId(cur, "text")
-    if (langs.nonEmpty)
-      cur = land("lang_filter", cur.where(col("lang_pred").isInCollection(langs)))
-    cur = land("gopher",
-      QualityFilters
-        .withGopherFlagsByLang(cur, "text", "lang_pred")
-        .where(col("pass"))
-        .select(col("id"), col("text"), col("url_norm"), col("url_host"), col("lang_pred")))
-    // redaction transforms (never drops) but its position is load-
-    // bearing for the dedup stages downstream — apply it exactly as
-    // the prefix does, without a report boundary
-    if (redactPii)
-      cur = TextAnalysis
-        .redactPii(cur, "text")
-        .withColumn("text", col("redacted"))
-        .drop("redacted", "pii_found")
-    val attrCols = Seq("url_norm", "url_host", "lang_pred")
-    if (minLineChars >= 0)
-      cur = land("line_dedup",
-        Dedup
-          .lineDedupCarry(cur, "id", "text", minLineChars, attrCols)
-          .where(length(trim(col("clean_text"))) > 0)
-          .select(col("id") +: col("clean_text").as("text") +: attrCols.map(col): _*))
-    if (paragraphDedup)
-      cur = land("paragraph_dedup",
-        Dedup
-          .paragraphDedupCarry(cur, "id", "text", minParagraphChars, attrCols)
-          .where(length(trim(col("clean_text"))) > 0)
-          .select(col("id") +: col("clean_text").as("text") +: attrCols.map(col): _*))
-    cur = land("exact_dedup",
-      Dedup
-        .exactDedup(cur, "id", "text")
-        .where(col("is_canonical"))
-        .drop("content_hash", "canonical_id", "group_size", "is_canonical"))
-    cur = land("near_dup",
-      Dedup.cleanCorpus(cur, "id", "text", jaccardThreshold, transitive = true))
-    land("host_cap", Sampling.capPerStratum(cur, "url_host", "id", maxPerHost))
-  }
-
   /** PER-DOCUMENT drop attribution for [[webIngest]] — the debugging
     * companion of the aggregate [[webIngestFunnel]]: one row per
     * INPUT document with `drop_stage` naming the stage that
@@ -600,8 +532,8 @@ object CorpusPipeline {
     * stage cost me", this answers "why is THIS url missing from the
     * corpus" — the question every curation on-call actually gets.
     *
-    * Mechanics: the same stage chain as [[webIngestFunnel]] (each
-    * boundary is the operator call [[webIngest]] composes), with the
+    * Mechanics: the same boundaries as [[webIngestFunnel]]
+    * ([[ingestBoundaries]] — webIngest's own chain), with the
     * per-stage DROPPED ids derived as the anti-join of consecutive
     * boundaries — id-only frames, so the attribution costs one narrow
     * anti-join per stage over already-landed boundaries. First-drop
@@ -673,6 +605,7 @@ object CorpusPipeline {
       mainContent: Boolean,
       stripTracking: Boolean,
       paragraphBreaks: Boolean = false,
+      stage: StageHook = noStages,
   ): DataFrame = {
     val ts = tsCol.map(c => col(c).as("ts")).toSeq
     val src = df.select(
@@ -688,31 +621,34 @@ object CorpusPipeline {
     // optional NFC canonicalization BEFORE any hashing stage, so
     // composed/decomposed spellings of the same page dedup together
     // (default off: byte-stable output for existing callers)
-    val extracted1 =
+    val extracted1 = stage("extract",
       if (canonicalizeNfc)
         extracted0.withColumn("text", TextAnalysis.canonicalize(col("text")))
-      else extracted0
-    val extracted2 = if (c4) QualityFilters.c4Clean(extracted1, "text") else extracted1
+      else extracted0)
+    val extracted2 =
+      if (c4) stage("c4", QualityFilters.c4Clean(extracted1, "text")) else extracted1
     val extracted =
-      if (soft404) QualityFilters.dropSoft404(extracted2, "text") else extracted2
+      if (soft404) stage("soft404", QualityFilters.dropSoft404(extracted2, "text"))
+      else extracted2
     val withUrl0 =
       WebText.withUrlParts(extracted, "__url", stripTracking = stripTracking).drop("__url")
     // optional domain blocklist, applied on the normalized host as
     // early as possible (blocked pages never reach langId/quality)
     val withUrl = blocklist match {
-      case Some(bl) => WebText.filterBlockedHosts(withUrl0, "id", "url_host", bl)
+      case Some(bl) =>
+        stage("blocklist", WebText.filterBlockedHosts(withUrl0, "id", "url_host", bl))
       case None => withUrl0
     }
     val withLang = TextAnalysis.withLangId(withUrl, "text")
     val langKept =
       if (langs.isEmpty) withLang
-      else withLang.where(col("lang_pred").isInCollection(langs))
+      else stage("lang_filter", withLang.where(col("lang_pred").isInCollection(langs)))
     val outCols = Seq(col("id")) ++ tsCol.map(_ => col("ts")).toSeq ++
       Seq(col("text"), col("url_norm"), col("url_host"), col("lang_pred"))
-    val quality0 = QualityFilters
+    val quality0 = stage("gopher", QualityFilters
       .withGopherFlagsByLang(langKept, "text", "lang_pred")
       .where(col("pass"))
-      .select(outCols: _*)
+      .select(outCols: _*))
     // PII redaction sits between the filters and the dedup stages
     // (prepare's order): redacted text is what gets line-deduped,
     // hashed, and shipped — contact-detail variants collapse
@@ -737,6 +673,30 @@ object CorpusPipeline {
       stride: Int = 512,
       canonicalizeNfc: Boolean = false,
       materialize: Materialize = Materialize.LocalCheckpoint,
+  ): DataFrame =
+    // `materialize` threads to the dedup boundary like webIngest's —
+    // a ParquetDir run lands the corpus-sized survivor frame durably
+    // (`<dir>/dedup/`), the preemptible-executor restart point
+    TextAnalysis.chunkTokens(
+      preparedDocs(df, idCol, textCol, langs, langCol, minQuality, jaccardThreshold,
+        transitive, canonicalizeNfc, stageMaterialize(materialize, "dedup"), noStages),
+      idCol, textCol, window, stride)
+
+  /** [[prepare]]'s document chain, before chunking: NFC → language
+    * filter → quality filter → PII redaction → exact+near dedup.
+    */
+  private def preparedDocs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      langs: Seq[String],
+      langCol: Option[String],
+      minQuality: Double,
+      jaccardThreshold: Double,
+      transitive: Boolean,
+      canonicalizeNfc: Boolean,
+      dedupMaterialize: Materialize,
+      stage: StageHook,
   ): DataFrame = {
     // optional NFC before any scoring/hashing — the webIngest option's
     // twin (default off: byte-stable output for existing callers)
@@ -744,20 +704,20 @@ object CorpusPipeline {
       if (canonicalizeNfc) df.withColumn(textCol, TextAnalysis.canonicalize(col(textCol)))
       else df
     val lang: Column = langCol.map(col).getOrElse(TextAnalysis.langIdUdf(col(textCol)))
-    val filtered = TextAnalysis
-      .qualityScore(src, textCol)
-      .where(lang.isInCollection(langs) && col("quality_score") >= minQuality)
-      .select(src.columns.map(col): _*)
+    // two consecutive filters, one boundary each; with no hook between
+    // them Spark combines them into the one `lang AND quality` filter
+    val langKept = stage("lang_filter",
+      TextAnalysis.qualityScore(src, textCol).where(lang.isInCollection(langs)))
+    val filtered = stage("quality",
+      langKept.where(col("quality_score") >= minQuality).select(src.columns.map(col): _*))
+    // redaction transforms but never drops: no boundary, and it runs
+    // before the dedup stages so contact-detail variants collapse
     val redacted = TextAnalysis
       .redactPii(filtered, textCol)
       .withColumn(textCol, col("redacted"))
       .drop("redacted", "pii_found")
-    // `materialize` threads to the dedup boundary like webIngest's —
-    // a ParquetDir run lands the corpus-sized survivor frame durably
-    // (`<dir>/dedup/`), the preemptible-executor restart point
-    val deduped = Dedup.cleanCorpus(redacted, idCol, textCol, jaccardThreshold, transitive,
-      materialize = stageMaterialize(materialize, "dedup"))
-    TextAnalysis.chunkTokens(deduped, idCol, textCol, window, stride)
+    stage("near_dup", Dedup.cleanCorpusHooked(redacted, idCol, textCol, jaccardThreshold,
+      transitive, dedupMaterialize, stage("exact_dedup", _)))
   }
 
   /** [[prepare]] continued to the training-ready layout: chunks get a
@@ -807,57 +767,6 @@ object CorpusPipeline {
     out
   }
 
-  /** The ONE staged restatement of [[prepare]]'s chain backing its
-    * report faces ([[prepareFunnel]], [[prepareDropReasons]]) — the
-    * text-corpus twin of [[stagedIngest]]: every stage boundary is
-    * the operator call [[prepare]] composes, landed via
-    * localCheckpoint and passed through `record`. Stage names:
-    * `lang_filter`, `quality`, `exact_dedup`, `near_dup`. prepare's
-    * single `lang AND quality` predicate is restated as two
-    * consecutive filters (the same conjunction, per-stage
-    * attribution bought for free); its fused [[Dedup.cleanCorpus]]
-    * is restated as [[Dedup.exactDedup]] keep-min-id + cleanCorpus
-    * on the exact survivors, exactly as [[stagedIngest]] does.
-    * Transforms that never drop (NFC, PII redaction) and the
-    * chunking fan-out carry no boundary. Returns the surviving DOC
-    * frame (pre-chunking — the report faces attribute documents,
-    * not chunks).
-    */
-  private def stagedPrepare(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      langs: Seq[String],
-      langCol: Option[String],
-      minQuality: Double,
-      jaccardThreshold: Double,
-      canonicalizeNfc: Boolean,
-      record: (String, DataFrame) => DataFrame,
-  ): DataFrame = {
-    def land(name: String, f: DataFrame): DataFrame = record(name, f.localCheckpoint(true))
-    val src =
-      if (canonicalizeNfc) df.withColumn(textCol, TextAnalysis.canonicalize(col(textCol)))
-      else df
-    val lang: Column = langCol.map(col).getOrElse(TextAnalysis.langIdUdf(col(textCol)))
-    val scored = TextAnalysis.qualityScore(src, textCol)
-    var cur = land("lang_filter", scored.where(lang.isInCollection(langs)))
-    cur = land("quality",
-      cur.where(col("quality_score") >= minQuality).select(src.columns.map(col): _*))
-    // PII redaction transforms but never drops — applied exactly
-    // where prepare() does (before the dedup stages), no boundary
-    cur = TextAnalysis
-      .redactPii(cur, textCol)
-      .withColumn(textCol, col("redacted"))
-      .drop("redacted", "pii_found")
-    cur = land("exact_dedup",
-      Dedup
-        .exactDedup(cur, idCol, textCol)
-        .where(col("is_canonical"))
-        .drop("content_hash", "canonical_id", "group_size", "is_canonical"))
-    land("near_dup",
-      Dedup.cleanCorpus(cur, idCol, textCol, jaccardThreshold, transitive = true))
-  }
-
   /** Per-stage ATTRITION REPORT for [[prepare]] — the text-corpus
     * counterpart of [[webIngestFunnel]], same row contract:
     * (stage_ix, stage, docs_in, docs_dropped, docs_out, tokens_out),
@@ -885,9 +794,10 @@ object CorpusPipeline {
         jaccardThreshold, canonicalizeNfc),
       textCol)
 
-  /** [[stagedPrepare]] run once, landed boundaries collected —
-    * prepare's twin of [[ingestBoundaries]], shared by both report
-    * faces (and by gate suites auditing one corpus through both).
+  /** [[prepare]]'s document chain run once through
+    * [[recordBoundaries]], landed boundaries collected — prepare's
+    * twin of [[ingestBoundaries]], shared by both report faces (and
+    * by gate suites auditing one corpus through both).
     */
   private[graft] def prepareBoundaries(
       df: DataFrame,
@@ -898,12 +808,9 @@ object CorpusPipeline {
       minQuality: Double = 0.3,
       jaccardThreshold: Double = 0.8,
       canonicalizeNfc: Boolean = false,
-  ): Seq[(String, DataFrame)] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
-    stagedPrepare(df, idCol, textCol, langs, langCol, minQuality, jaccardThreshold,
-      canonicalizeNfc, (name, landed) => { buf += ((name, landed)); landed })
-    buf.toSeq
-  }
+  ): Seq[(String, DataFrame)] =
+    recordBoundaries(stage => preparedDocs(df, idCol, textCol, langs, langCol, minQuality,
+      jaccardThreshold, transitive = true, canonicalizeNfc, Materialize.Lazy, stage))
 
   /** PER-DOCUMENT drop attribution for [[prepare]] — the
     * [[webIngestDropReasons]] counterpart: one row per input document

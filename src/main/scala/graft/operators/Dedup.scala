@@ -2179,6 +2179,28 @@ object Dedup {
       bands: Int = 32,
       shingleSize: Int = 3,
       materialize: Materialize = Materialize.LocalCheckpoint,
+  ): DataFrame =
+    cleanCorpusHooked(df, idCol, textCol, jaccardThreshold, transitive, materialize, identity,
+      numHashes, bands, shingleSize)
+
+  /** [[cleanCorpus]] with `exactHook` applied to the exact-dedup
+    * survivor rows (`df`'s schema, keep-min-id per content hash)
+    * before the signature projection reads them — the
+    * `exact_dedup` boundary of [[CorpusPipeline]]'s attrition
+    * reports, taken from the fused pass itself. The frame the hook
+    * returns is what the near-dup pass consumes.
+    */
+  private[graft] def cleanCorpusHooked(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      jaccardThreshold: Double,
+      transitive: Boolean,
+      materialize: Materialize,
+      exactHook: DataFrame => DataFrame,
+      numHashes: Int = 128,
+      bands: Int = 32,
+      shingleSize: Int = 3,
   ): DataFrame = {
     // FUSED exact + near-dup pass: the exact-dedup window and the
     // MinHash signature are computed around ONE exchange of the
@@ -2190,10 +2212,12 @@ object Dedup {
     // paid a second text scan for the signature pass and a second
     // persist of the survivor rows.
     val grp = Window.partitionBy(col("__content_hash"))
-    val withSig = df
+    val exact = exactHook(df
       .withColumn("__content_hash", md5(col(textCol)))
       .withColumn("__canonical_id", min(col(idCol)).over(grp))
       .where(col(idCol) === col("__canonical_id"))
+      .select(df.columns.map(col): _*))
+    val withSig = exact
       .select(df.columns.map(col) :+
         minHashPrep(col(textCol), numHashes, shingleSize).as("__p"): _*)
       .persist()

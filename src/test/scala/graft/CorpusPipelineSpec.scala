@@ -9,6 +9,25 @@ class CorpusPipelineSpec extends SparkTestBase {
     "the quick brown fox jumps over the lazy dog while the cat watches from the warm windowsill " +
       "in the afternoon sun and birds sing in the garden trees near the old stone wall today"
 
+  /** A funnel ends where its pipeline ships: the stages in `stages`
+    * order, the last `docs_out` = the shipped distinct ids, the last
+    * `tokens_out` = the shipped chunk tokens (chunking conserves them).
+    */
+  private def assertFunnelShips(
+      funnel: org.apache.spark.sql.DataFrame,
+      stages: Seq[String],
+      shipped: org.apache.spark.sql.DataFrame,
+      idCol: String): Unit = {
+    val rows = funnel.orderBy("stage_ix").collect()
+    val last = rows.last
+    val shippedTokens = shipped.agg(org.apache.spark.sql.functions.sum("n_chunk_tokens")).head()
+    assert(
+      rows.map(_.getAs[String]("stage")).toSeq == stages &&
+        last.getAs[Long]("docs_out") == shipped.select(idCol).distinct().count() &&
+        last.getAs[Long]("tokens_out") == shippedTokens.getLong(0),
+      s"funnel ${rows.toSeq} vs shipped tokens $shippedTokens")
+  }
+
   test("prepare: filters, redacts, dedups, chunks — only clean canonical content survives") {
     val docs = Seq(
       (1L, prose), // keeper
@@ -305,10 +324,10 @@ class CorpusPipelineSpec extends SparkTestBase {
   }
 
   test("webIngestFromCapped over the staged host_cap boundary ≡ the fused pipeline (r22 gate seam)") {
-    // the q122 gate rides the staged chain's host_cap boundary and
+    // the q122 gate rides the recorded chain's host_cap boundary and
     // runs only the layout tail — this pins, row for row and column
-    // for column, that (a) the staged exact+near restatement of
-    // cleanCorpus's fused pass lands the same capped survivors, and
+    // for column, that (a) the recorded boundary (webIngest's own chain
+    // through the landing stage hook) holds the same capped survivors, and
     // (b) webIngestFromCapped over that boundary reproduces the full
     // fused webIngest output. Corpus exercises every dropping stage:
     // lang filter, line dedup (exact pair), NEAR-dup (20/21 differ by
@@ -594,6 +613,21 @@ class CorpusPipelineSpec extends SparkTestBase {
       .select("doc_id").as[Long].collect().toSet
     assert(runPrepare(false) == Set(30L, 31L))
     assert(runPrepare(true).size == 1)
+    // the funnels with the same options run the same chains
+    assertFunnelShips(
+      CorpusPipeline.webIngestFunnel(rows, "doc_id", "html", "url",
+        jaccardThreshold = 1.5, blocklist = Some(blocklist), canonicalizeNfc = true),
+      Seq("extract", "blocklist", "gopher", "line_dedup", "exact_dedup", "near_dup", "host_cap"),
+      CorpusPipeline.webIngest(rows, "doc_id", "html", "url", seqLen = 64,
+        jaccardThreshold = 1.5, blocklist = Some(blocklist), canonicalizeNfc = true),
+      "id")
+    assertFunnelShips(
+      CorpusPipeline.prepareFunnel(plain, "doc_id", "text", minQuality = 0.0,
+        jaccardThreshold = 1.5, canonicalizeNfc = true),
+      Seq("lang_filter", "quality", "exact_dedup", "near_dup"),
+      CorpusPipeline.prepare(plain, "doc_id", "text", minQuality = 0.0, jaccardThreshold = 1.5,
+        window = 64, stride = 64, canonicalizeNfc = true),
+      "doc_id")
   }
 
   test("webIngest c4 option: line rules strip boilerplate, doc rules drop thin pages, default off") {
@@ -621,5 +655,15 @@ class CorpusPipelineSpec extends SparkTestBase {
     val on = run(c4 = true)
     assert(on.map(_._1).toSet == Set(50L), s"c4 drops the unpunctuated page: ${on.map(_._1).toSet}")
     assert(on.forall(!_._2.contains("javascript")), "c4 strips the javascript line")
+    // the funnel with every optional prefix stage on runs the same chain
+    assertFunnelShips(
+      CorpusPipeline.webIngestFunnel(rows, "doc_id", "html", "url", jaccardThreshold = 1.5,
+        c4 = true, soft404 = true, redactPii = true, mainContent = true, stripTracking = true),
+      Seq("extract", "c4", "soft404", "gopher", "line_dedup", "exact_dedup", "near_dup",
+        "host_cap"),
+      CorpusPipeline.webIngest(rows, "doc_id", "html", "url", seqLen = 64,
+        jaccardThreshold = 1.5, c4 = true, soft404 = true, redactPii = true,
+        mainContent = true, stripTracking = true),
+      "id")
   }
 }
