@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.graftext.{GraftFunctions, MlpPredict, MlpScoreStrategy}
+import org.apache.spark.sql.graftext.{GraftFunctions, MlTrainExec, MlpPredict, MlpStrategy}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -13,7 +13,10 @@ import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
   *
   * Execution model: models are created/trained on the DRIVER (training
   * a single model with sequential Adam is inherently driver-side state,
-  * mirroring the reference's in-process registry at src/nn/mod.rs:25);
+  * mirroring the reference's in-process registry at src/nn/mod.rs:25).
+  * A global SQL `ml_train` is planned as
+  * [[org.apache.spark.sql.graftext.MlTrainExec]], which gathers the rows
+  * to the driver in one collect and fits there, as [[train]] does;
   * inference runs distributed on executors through ONE expression,
   * the native [[org.apache.spark.sql.graftext.MlpPredict]]: SQL
   * `ml_pred('name', feats)` and [[predictCol]] both build it over an
@@ -25,7 +28,7 @@ import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
   * Scoring runs in batches, as the reference's per-`DataChunk` tensor
   * forward does (src/lib.rs:248-249): every call in a projection, and
   * not under CASE, IF or COALESCE, is planned by
-  * [[org.apache.spark.sql.graftext.MlpScoreStrategy]] as one
+  * [[org.apache.spark.sql.graftext.MlpStrategy]] as one
   * `MlpScoreExec`, which scores 512-row chunks feature-major through
   * [[graft.ml.Mlp.predictColumns]]. A call under a conditional (so only
   * a taken branch runs), in a filter or in an aggregate runs per row
@@ -91,11 +94,18 @@ object MlFunctions {
     *                    first-30%-train split (src/nn/mod.rs:104-109);
     *                    1.0 trains on everything.
     *
-    * Scale note: `collect()` of the feature matrix to the driver bounds
-    * the trainable set by driver memory (same bound as the reference's
-    * in-process design). For 100 TB inputs the intended pattern is to
-    * train on a sample (`df.sample(...)`) or aggregate minibatch
-    * gradients distributedly — see [[trainSampled]].
+    * The rows are gathered as SQL `ml_train` gathers them
+    * ([[org.apache.spark.sql.graftext.MlTrainExec.gather]]): without
+    * `orderBy`, partitions in id order, each in scan order, so `train`
+    * and `SELECT ml_train_cfg(…)` over one DataFrame with one config and
+    * `trainFraction` 0.3 train the same weight bits.
+    *
+    * Scale note: the collect of the feature matrix to the driver bounds
+    * the trainable set by driver memory and `spark.driver.maxResultSize`
+    * (same bound as the reference's in-process design). For 100 TB
+    * inputs the intended pattern is to train on a sample
+    * (`df.sample(...)`) or aggregate minibatch gradients distributedly —
+    * see [[trainSampled]].
     */
   def train(
       df: DataFrame,
@@ -110,14 +120,10 @@ object MlFunctions {
     val spark = df.sparkSession
     val cfg = TrainConfig.parse(configJson)
     val ordered = if (orderBy.nonEmpty) df.orderBy(orderBy: _*) else df
-    val rows = ordered
-      .select(
-        features.cast(ArrayType(FloatType)).as("f"),
-        targets.cast(ArrayType(FloatType)).as("t"),
-      )
-      .collect()
-    val feats = rows.map(r => seqToFloats(r.getSeq[Float](0)))
-    val tgts = rows.map(r => seqToFloats(r.getSeq[Float](1)))
+    val (feats, tgts) = MlTrainExec.gather(ordered.select(
+      features.cast(ArrayType(FloatType)).as("f"),
+      targets.cast(ArrayType(FloatType)).as("t"),
+    ))
     fitRows(spark, name, feats, tgts, cfg, trainFraction, log)
     df.withColumn("prediction", predictCol(spark, name, features))
   }
@@ -369,7 +375,7 @@ object MlFunctions {
     * `ml_train`, `ml_train_cfg`, `ml_pred`, the table function
     * `ml_list()` and the native expressions), the `ml_models` view over
     * `ml_list()` and the batch scorer
-    * ([[org.apache.spark.sql.graftext.MlpScoreStrategy]]). It adds only
+    * ([[org.apache.spark.sql.graftext.MlpStrategy]]). It adds only
     * what this session lacks, so repeated calls, or a session built with
     * `GraftExtensions`, register nothing twice. Called by create, the
     * train paths and [[predictCol]], so API-only sessions get the SQL
@@ -383,7 +389,7 @@ object MlFunctions {
     // a SQL temp view keeps its text and is analysed at every use
     if (spark.sessionState.catalog.getRawTempView("ml_models").isEmpty)
       spark.sql("CREATE TEMPORARY VIEW ml_models AS SELECT model, json FROM ml_list()")
-    MlpScoreStrategy.install(spark)
+    MlpStrategy.install(spark)
   }
 
   /** SQL-callable whole-relation training: `ml_train(name, feats,
@@ -391,19 +397,28 @@ object MlFunctions {
     * features, targets) FROM t` trains once on all rows and returns
     * "Ok" (one row). This is the Aggregator formulation from SURVEY
     * §2.1 row 3: partial buffers collect (features, targets) pairs,
-    * the final merge trains.
+    * the final merge trains ([[sqlTrain]]).
+    *
+    * Which plan runs: a global call whose model name and config are
+    * constants is planned as
+    * [[org.apache.spark.sql.graftext.MlTrainExec]], which gathers the
+    * rows to the driver and trains there, with no shuffle; the registry
+    * update and [[lastStats]] happen in the driver JVM on any cluster. A
+    * grouped call (`GROUP BY`), or one whose name or config is not a
+    * constant, runs this aggregate.
     *
     * Training order: `reduce` tags each partial buffer's rows with the
     * id of the input partition it runs in, and the final merge trains
-    * on the partitions in ascending id order, each in its scan order.
-    * That order does not depend on the order the shuffle delivers the
-    * partial buffers in, so one seed over one scan trains one model
-    * (the reference likewise trains in chunk order). Caveats: the
-    * final merge runs in the reducer task, so the registry update and
-    * [[lastStats]] are only visible in local mode — cluster deployments
-    * use [[train]]/[[trainDistributed]]. Unlike the reference, predictions
-    * are not returned inline (an aggregate yields one row); follow
-    * with `ml_pred`, which binds the trained weights in the next query.
+    * on the partitions in ascending id order, each in its scan order —
+    * the order the node's gather returns. That order does not depend on
+    * the order the shuffle delivers the partial buffers in, so one seed
+    * over one scan trains one model on either plan (the reference
+    * likewise trains in chunk order). Caveat of the aggregate: its final
+    * merge runs in a reducer task, so its registry update and
+    * [[lastStats]] reach the driver only in local mode. Unlike the
+    * reference, predictions are not returned inline (an aggregate
+    * yields one row); follow with `ml_pred`, which binds the trained
+    * weights in the next query.
     */
   type TrainBuf = (String, String, List[(Int, List[(Array[Float], Array[Float])])])
 
@@ -422,22 +437,31 @@ object MlFunctions {
 
   private def finishTrain(b: TrainBuf): String = {
     val (name, cfg, chunks) = b
-    if (name.isEmpty) "Err: no rows"
+    val ordered = chunks.sortBy(_._1).flatMap(_._2.reverse)
+    sqlTrain(name, cfg, ordered.map(_._1).toArray, ordered.map(_._2).toArray)
+  }
+
+  /** The training of SQL `ml_train`/`ml_train_cfg`, on both plans: fit
+    * the registered model `name` on the rows in the given order with the
+    * reference's first-30% split (src/nn/mod.rs:104-109), register it
+    * and record [[lastStats]]. Returns "Ok", or "Err: no rows" for no
+    * rows; an unknown model fails.
+    */
+  def sqlTrain(
+      name: String,
+      configJson: String,
+      features: Array[Array[Float]],
+      targets: Array[Array[Float]],
+  ): String =
+    if (features.isEmpty) "Err: no rows"
     else {
       val model = ModelRegistry
         .get(name)
         .getOrElse(throw new IllegalArgumentException(s"ml_train: model '$name' not found"))
-      val ordered = chunks.sortBy(_._1).flatMap(_._2.reverse)
-      lastStats = Some(model.fit(
-        ordered.map(_._1).toArray,
-        ordered.map(_._2).toArray,
-        TrainConfig.parse(cfg),
-        trainFraction = 0.3, // reference-observed split (src/nn/mod.rs:104-109)
-      ))
+      lastStats = Some(model.fit(features, targets, TrainConfig.parse(configJson), trainFraction = 0.3))
       ModelRegistry.put(model)
       "Ok"
     }
-  }
 
   private def mergeBuf(a: TrainBuf, b: TrainBuf): TrainBuf =
     (if (a._1.nonEmpty) a._1 else b._1, if (a._2.nonEmpty) a._2 else b._2, a._3 ::: b._3)
@@ -559,9 +583,11 @@ object MlFunctions {
     a
   }
 
-  /** Per-epoch train/test MSE of the most recent driver-side fit
-    * (`train`, `trainSampled`, and the `ml_train`/`ml_train_cfg`
-    * aggregate, whose final merge shares this JVM in local mode).
+  /** Per-epoch train/test MSE of the most recent fit in this JVM:
+    * `train`, `trainSampled` and SQL `ml_train`/`ml_train_cfg`. A global
+    * SQL call fits on the driver (`MlTrainExec`); a grouped one fits in
+    * the aggregate's reducer task, which shares this JVM only in local
+    * mode.
     */
   @volatile var lastStats: Option[TrainStats] = None
 }

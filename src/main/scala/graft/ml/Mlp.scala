@@ -96,7 +96,8 @@ final case class TrainStats(
   * per-epoch MSEs; MlpSpec's golden digests pin them): every output
   * element sums bias first, then inputs in ascending order (four
   * inputs per pass, still left to right); `dW`, `dB` and the BatchNorm
-  * sums accumulate rows in ascending order; dropout masks are drawn in
+  * sums accumulate rows in ascending order (`dW` on four independent
+  * accumulators per pass, one per unit); dropout masks are drawn in
   * row-major order. No `Math.fma`, no reassociation: either changes
   * the rounding. A zero input is multiplied like any other: its
   * product is a signed zero, which changes no sum while weights are
@@ -441,12 +442,14 @@ final class Mlp(
       log: String => Unit = _ => (),
   ): TrainStats = {
     require(features.length == targets.length, "features/targets row counts differ")
-    features.foreach(f =>
-      require(f.length == inputDim, s"feature row width ${f.length} != model input $inputDim"),
-    )
-    targets.foreach(t =>
-      require(t.length == outputDim, s"target row width ${t.length} != model output $outputDim"),
-    )
+    features.foreach { f =>
+      require(f != null, "feature row is null")
+      require(f.length == inputDim, s"feature row width ${f.length} != model input $inputDim")
+    }
+    targets.foreach { t =>
+      require(t != null, "target row is null")
+      require(t.length == outputDim, s"target row width ${t.length} != model output $outputDim")
+    }
     val n = features.length
     val splitAt = math.min(n, (trainFraction * n).toInt)
     val trainIdx = (0 until splitAt).toArray
@@ -604,7 +607,7 @@ final class Mlp(
             val g = dY(o); val p = tape.postDrop(o)
             val d = new Array[Float](rows)
             var r = 0
-            while (r < rows) { d(r) = if (p(r) > 0f) g(r) else 0f; r += 1 }
+            while (r < rows) { d(r) = Mlp.reluGate(p(r), g(r)); r += 1 }
             d
           }
         case Activation.Tanh =>
@@ -678,17 +681,7 @@ final class Mlp(
       val dW = new Array[Float](in * out)
       var i = 0
       while (i < in) {
-        val xi = tape.x(i)
-        val wOff = i * out
-        o = 0
-        while (o < out) {
-          val g = dZ(o)
-          var acc = 0f
-          var r = 0
-          while (r < rows) { acc += xi(r) * g(r); r += 1 }
-          dW(wOff + o) = acc
-          o += 1
-        }
+        weightGrads(dW, i * out, tape.x(i), dZ, rows)
         i += 1
       }
       // dX(i)(r) = Σ_o dZ(o)(r)·w(i·out+o), o ascending
@@ -708,6 +701,37 @@ final class Mlp(
       li -= 1
     }
     perLayer.flatten
+  }
+
+  /** `dW(off + o) = Σ_r x(r)·dZ(o)(r)` for every unit `o`, rows
+    * ascending from `0f`: four units per pass over the rows, each on its
+    * own accumulator, then one pass per left-over unit. Every weight
+    * rounds exactly as under one `+=` chain of its own, while the four
+    * independent chains overlap instead of waiting on one another.
+    */
+  private def weightGrads(dW: Array[Float], off: Int, x: Array[Float], dZ: Array[Array[Float]], rows: Int): Unit = {
+    val out = dZ.length
+    var o = 0
+    while (o + 4 <= out) {
+      val g0 = dZ(o); val g1 = dZ(o + 1); val g2 = dZ(o + 2); val g3 = dZ(o + 3)
+      var a0 = 0f; var a1 = 0f; var a2 = 0f; var a3 = 0f
+      var r = 0
+      while (r < rows) {
+        val xr = x(r)
+        a0 += xr * g0(r); a1 += xr * g1(r); a2 += xr * g2(r); a3 += xr * g3(r)
+        r += 1
+      }
+      dW(off + o) = a0; dW(off + o + 1) = a1; dW(off + o + 2) = a2; dW(off + o + 3) = a3
+      o += 4
+    }
+    while (o < out) {
+      val g = dZ(o)
+      var acc = 0f
+      var r = 0
+      while (r < rows) { acc += x(r) * g(r); r += 1 }
+      dW(off + o) = acc
+      o += 1
+    }
   }
 
   /** Apply one Adam step from gradients in canonical tensor order. */
@@ -761,6 +785,19 @@ object Mlp {
     * chunk) scored within noise of 512.
     */
   val EvalChunk = 512
+
+  /** Relu backward, `if (p > 0f) g else 0f`, without a branch (the
+    * branch mispredicts on about half of the rows). With `b` the raw bits
+    * of `p` minus one, the mask is all ones exactly when `b` lies in
+    * `[0, 0x7f7fffff]`, i.e. `p` is a positive subnormal, normal or +Inf;
+    * for ±0, every negative and every NaN it is zero. The result has the
+    * branch's bits for every `p`: `g`'s own bits, or +0.
+    */
+  private def reluGate(p: Float, g: Float): Float = {
+    val b = java.lang.Float.floatToRawIntBits(p) - 1
+    val mask = ((b - 0x7f800000) >> 31) & ~(b >> 31)
+    java.lang.Float.intBitsToFloat(java.lang.Float.floatToRawIntBits(g) & mask)
+  }
 
   /** Whether a -0 sits in `l`'s bias or BatchNorm beta. */
   private def holdsNegativeZero(l: DenseLayer): Boolean = {

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftext.MlpScoreExec
+import org.apache.spark.sql.graftext.{MlTrainExec, MlpScoreExec}
 
 import graft.MlFunctions
 
@@ -75,13 +75,15 @@ object Smoke {
       "ml_models does not list the model after the API train")
 
     // SQL-surface whole-relation training (reference test/sql/autompg.test:16
-    // form): aggregate ml_train over the relation, then predict
+    // form): ml_train over the relation, then predict
     li.createOrReplaceTempView("li_feats")
-    val sqlTrainStatus = spark
+    val sqlTrain = spark
       .sql("""SELECT ml_train_cfg('mpg_model', features, targets,
              |'{"epochs":2,"batch_size":128}') AS s FROM li_feats""".stripMargin)
-      .head()
-      .getString(0)
+    // a global call trains on the driver, with no shuffle
+    require(sqlTrain.queryExecution.executedPlan.find(_.isInstanceOf[MlTrainExec]).isDefined,
+      s"SQL ml_train does not plan MlTrainExec:\n${sqlTrain.queryExecution.executedPlan}")
+    val sqlTrainStatus = sqlTrain.head().getString(0)
     println(s"SQL ml_train → $sqlTrainStatus")
 
     // ml_pred via SQL over a fresh view (reference test/sql/autompg.test:19)

@@ -88,7 +88,9 @@ object GraftFunctions {
       case es => throw new IllegalArgumentException(s"ml_create takes 2/3 arguments, got ${es.length}")
     },
     // ml_train(name, feats, tgts): the reference default config
-    // (functions.test:10), which ml_train_cfg reads from an empty string
+    // (functions.test:10), which ml_train_cfg reads from an empty string.
+    // Both build the TrainAgg4 aggregate; MlpStrategy plans a global call
+    // with constant arguments as the driver-side MlTrainExec
     entry("ml_train", classOf[ScalaAggregator[_, _, _]]) {
       case es @ Seq(_, _, _) => ScalaAggregator(trainAgg.withName("ml_train"), es :+ Literal(""))
       case es => throw new IllegalArgumentException(s"ml_train takes 3 arguments, got ${es.length}")
@@ -151,15 +153,16 @@ object GraftFunctions {
   * GraftExtensions)` or `spark.sql.extensions=graft.functions.GraftExtensions`
   * gives a pure-SQL session every [[GraftFunctions]] entry (the native
   * expressions, `ml_create`, `ml_train`, `ml_train_cfg`, `ml_pred` and
-  * the table function `ml_list()`) and the batch scorer
-  * [[MlpScoreStrategy]], as loading the reference extension does. The
-  * `ml_models` view over `ml_list()` is a temp view, which only a live
-  * session can hold: `graft.MlFunctions.publish` creates it.
+  * the table function `ml_list()`) and [[MlpStrategy]] (the batch
+  * scorer and the driver-side `ml_train`), as loading the reference
+  * extension does. The `ml_models` view over `ml_list()` is a temp
+  * view, which only a live session can hold: `graft.MlFunctions.publish`
+  * creates it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
     GraftFunctions.tableFunctions.foreach(ext.injectTableFunction)
-    ext.injectPlannerStrategy(_ => MlpScoreStrategy)
+    ext.injectPlannerStrategy(_ => MlpStrategy)
   }
 }

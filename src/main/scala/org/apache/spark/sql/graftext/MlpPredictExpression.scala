@@ -20,7 +20,7 @@ import graft.ml.Mlp
   * BatchNorm running stats — reference src/nn/mod.rs:71). SQL
   * `ml_pred` and `MlFunctions.predictCol` both build this expression.
   * In a projection, and not under CASE, IF or COALESCE,
-  * [[MlpScoreStrategy]] plans it as [[MlpScoreExec]], which scores
+  * [[MlpStrategy]] plans it as [[MlpScoreExec]], which scores
   * chunks feature-major through [[graft.ml.Mlp.predictColumns]] with
   * the same output bits; everywhere else (under a conditional, in a
   * filter or an aggregate) it runs per row through [[MlpPredict.run]].

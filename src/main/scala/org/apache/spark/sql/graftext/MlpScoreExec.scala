@@ -1,80 +1,14 @@
 package org.apache.spark.sql.graftext
 
-import scala.collection.mutable
-
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Attribute, AttributeReference, AttributeSet, ConditionalExpression, Expression,
-  GenericInternalRow, HigherOrderFunction, JoinedRow, NamedExpression, SortOrder,
-  UnsafeArrayData, UnsafeProjection,
+  Attribute, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeArrayData, UnsafeProjection,
 }
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
-import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
 import graft.ml.Mlp
-
-/** Plans the [[MlpPredict]] calls of a `Project` as one batch scorer:
-  * `Project(list, child)` becomes `ProjectExec(list′,
-  * MlpScoreExec(preds, outs, child))`, where `list′` reads each call's
-  * output attribute. This is the reference's per-chunk tensor forward
-  * (src/lib.rs:248-249) in Spark's `ExtractPythonUDFs` →
-  * `BatchEvalPythonExec` shape, without a logical node.
-  *
-  * A call stays the row expression when it sits under a
-  * `ConditionalExpression` (CASE, IF, COALESCE: only a taken branch may
-  * run, so `CASE WHEN size(f) = 2 THEN ml_pred('m', f) END` never sees a
-  * wrong width) or a higher-order function (its input is a lambda
-  * variable), and whenever it is not in a `Project` (a `Filter`, an
-  * aggregate). Of nested calls the innermost is batched.
-  */
-object MlpScoreStrategy extends SparkStrategy {
-
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Project(list, child) =>
-      val scored = mutable.ArrayBuffer.empty[(MlpPredict, Attribute)]
-      val rewritten = list.map(e => extract(e, scored).asInstanceOf[NamedExpression])
-      if (scored.isEmpty) Nil
-      else {
-        val (preds, outs) = scored.toSeq.unzip
-        // keep the scan's column pruning: read only what the calls and list′ use
-        val used = AttributeSet(preds.flatMap(_.references) ++ rewritten.flatMap(_.references))
-        val input =
-          if (child.output.forall(used.contains)) child
-          else Project(child.output.filter(used.contains), child)
-        ProjectExec(rewritten, MlpScoreExec(preds, outs, planLater(input))) :: Nil
-      }
-    case _ => Nil
-  }
-
-  /** `e` with each batchable call replaced by its output attribute;
-    * semantically equal calls share one.
-    */
-  private def extract(e: Expression, scored: mutable.ArrayBuffer[(MlpPredict, Attribute)]): Expression =
-    e match {
-      case _: ConditionalExpression | _: HigherOrderFunction => e
-      case p: MlpPredict =>
-        val child = extract(p.child, scored)
-        if (!child.fastEquals(p.child)) p.withNewChildren(Seq(child))
-        else scored.find(_._1.semanticEquals(p)).map(_._2).getOrElse {
-          val out = AttributeReference(p.prettyName, p.dataType, p.nullable)()
-          scored += p -> out
-          out
-        }
-      case other => other.mapChildren(extract(_, scored))
-    }
-
-  /** Add the strategy to `spark`'s planner unless the planner already
-    * has it (from an earlier call or from `GraftExtensions`).
-    */
-  def install(spark: SparkSession): Unit =
-    if (!spark.sessionState.planner.strategies.contains(MlpScoreStrategy)) {
-      val ex = spark.experimental
-      ex.extraStrategies = MlpScoreStrategy +: ex.extraStrategies
-    }
-}
 
 /** Scores `preds` over its child in chunks of [[Mlp.EvalChunk]] rows and
   * emits each input row joined with one output per call (`outs`). Per

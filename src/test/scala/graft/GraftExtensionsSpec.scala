@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftext.{GraftFunctions, MlpScoreExec, MlpScoreStrategy}
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.graftext.{GraftFunctions, MlTrainExec, MlpScoreExec, MlpStrategy}
 
 import graft.ml.{Mlp, ModelRegistry, TrainConfig}
 
@@ -41,10 +43,10 @@ class GraftExtensionsSpec extends SparkTestBase {
       assert(ext.sessionState.functionRegistry.functionExists(id), id)
     }
     assert(ext.sessionState.tableFunctionRegistry.functionExists(GraftFunctions.tableFunctions.head._1))
-    assert(ext.sessionState.planner.strategies.count(_ == MlpScoreStrategy) == 1)
+    assert(ext.sessionState.planner.strategies.count(_ == MlpStrategy) == 1)
     // nothing was registered per session: no ml_models view, no experimental strategy
     assert(ext.sessionState.catalog.getRawTempView("ml_models").isEmpty)
-    assert(!ext.experimental.extraStrategies.contains(MlpScoreStrategy))
+    assert(!ext.experimental.extraStrategies.contains(MlpStrategy))
     val natives = ext.sql("SELECT vec_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)), " +
       "array(CAST(3 AS FLOAT), CAST(4 AS FLOAT))), z_value(3L, 5L), simhash64('one two three')").head()
     assert(natives.getDouble(0) == 11.0 && !natives.isNullAt(1) && !natives.isNullAt(2), natives)
@@ -91,6 +93,23 @@ class GraftExtensionsSpec extends SparkTestBase {
     MlFunctions.create(ext, "ext_view", """{"layers":[{"in":1,"out":1}]}""")
     MlFunctions.publish(ext)
     assert(ext.sql("SELECT model FROM ml_models WHERE model = 'ext_view'").count() == 1)
-    assert(ext.sessionState.planner.strategies.count(_ == MlpScoreStrategy) == 1)
+    assert(ext.sessionState.planner.strategies.count(_ == MlpStrategy) == 1)
+  }
+
+  test("a global SQL ml_train_cfg plans the driver-side MlTrainExec: no exchange, no object or sort aggregate") {
+    MlFunctions.registerAll(spark)
+    Seq(ext -> "extension session", spark -> "registerAll session").foreach { case (s, route) =>
+      s.sql("CREATE OR REPLACE TEMPORARY VIEW shape_rows AS SELECT id, " +
+        "array(CAST(sin(id) AS FLOAT), CAST(cos(id) AS FLOAT)) AS f, " +
+        "array(CAST(sin(id) AS FLOAT)) AS t FROM range(0, 400, 1, 4)")
+      assert(s.sql(s"SELECT ml_create('shape_model', '$spec')").head().getString(0) == "Ok")
+      val train = s.sql(s"SELECT ml_train_cfg('shape_model', f, t, '$cfg') AS s FROM shape_rows")
+      val plan = train.queryExecution.executedPlan
+      assert(plan.collect { case n: MlTrainExec => n }.length == 1, s"$route:\n$plan")
+      assert(plan.collect {
+        case n @ (_: Exchange | _: ObjectHashAggregateExec | _: SortAggregateExec) => n
+      }.isEmpty, s"$route:\n$plan")
+      assert(train.collect().map(_.getString(0)).toSeq == Seq("Ok"), route)
+    }
   }
 }

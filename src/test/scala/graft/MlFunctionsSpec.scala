@@ -474,7 +474,7 @@ class MlFunctionsSpec extends SparkTestBase {
     assert(pred2 eq pred, "publish replaced ml_pred")
     assert(list2 eq list, "publish replaced ml_list")
     assert(view2 eq view, "publish replaced ml_models")
-    assert(s.experimental.extraStrategies.count(_ == org.apache.spark.sql.graftext.MlpScoreStrategy) == 1)
+    assert(s.experimental.extraStrategies.count(_ == org.apache.spark.sql.graftext.MlpStrategy) == 1)
     assert(s.sql("SELECT model FROM ml_models WHERE model = 'once'").count() == 1)
   }
 
@@ -523,5 +523,104 @@ class MlFunctionsSpec extends SparkTestBase {
     direct.fit(rows.map(_.getSeq[Float](1).toArray), rows.map(_.getSeq[Float](2).toArray),
       TrainConfig.parse(cfg), trainFraction = 0.3)
     assert(first == weightBits(direct))
+  }
+
+  // ------------------------------------------- driver-side ml_train (MlTrainExec)
+
+  private def plan(df: org.apache.spark.sql.DataFrame): String = df.queryExecution.executedPlan.toString
+
+  private def isNode(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.find(_.isInstanceOf[org.apache.spark.sql.graftext.MlTrainExec]).isDefined
+
+  /** `id`, 2 features and 1 target over `range(0, rows, 1, parts)`. */
+  private def trainView(view: String, rows: Int, parts: Int): Unit =
+    spark.range(0, rows, 1, parts)
+      .selectExpr("id", "array(CAST(sin(id) AS FLOAT), CAST(cos(id * 0.7) AS FLOAT)) AS f",
+        "array(CAST(0.5 * sin(id) + 0.25 * cos(id * 0.7) AS FLOAT)) AS t")
+      .createOrReplaceTempView(view)
+
+  test("driver-side ml_train: an empty relation gives Err: no rows; an unknown model fails as through the aggregate") {
+    MlFunctions.registerAll(spark)
+    trainView("node_edge", 40, 2)
+    MlFunctions.create(spark, "node_edge", """{"layers":[{"in":2,"out":4,"activation":"relu"},{"in":4,"out":1}]}""")
+    val empty = spark.sql("SELECT ml_train('node_edge', f, t) AS s FROM node_edge WHERE id < 0")
+    assert(isNode(empty), plan(empty))
+    assert(empty.collect().map(_.getString(0)).toSeq == Seq("Err: no rows"))
+    // the aggregate's answer for no rows, whatever the model name
+    val agg = new MlFunctions.TrainAgg4
+    assert(agg.finish(agg.zero) == "Err: no rows")
+    assert(spark.sql("SELECT ml_train('no_such_model', f, t) FROM node_edge WHERE id < 0").head().getString(0) ==
+      "Err: no rows")
+    val global = spark.sql("SELECT ml_train('no_such_model', f, t) FROM node_edge")
+    val grouped = spark.sql("SELECT ml_train('no_such_model', f, t) FROM node_edge GROUP BY id >= 0")
+    assert(isNode(global) && !isNode(grouped), plan(grouped))
+    Seq(global, grouped).foreach { df =>
+      val err = intercept[Exception](df.collect())
+      assert(err.getMessage.contains("ml_train: model 'no_such_model' not found"), err.getMessage)
+    }
+  }
+
+  test("driver-side ml_train: a null feature array and a wrong-width row fail as through the aggregate") {
+    MlFunctions.registerAll(spark)
+    MlFunctions.create(spark, "node_bad", """{"layers":[{"in":2,"out":4,"activation":"relu"},{"in":4,"out":1}]}""")
+    Seq(
+      ("CASE WHEN id = 3 THEN NULL ELSE array(CAST(id AS FLOAT), 1.0F) END", "feature row is null"),
+      ("CASE WHEN id = 3 THEN array(1.0F) ELSE array(CAST(id AS FLOAT), 1.0F) END",
+        "feature row width 1 != model input 2"),
+    ).foreach { case (features, message) =>
+      spark.sql(s"SELECT id, $features AS f, array(CAST(id AS FLOAT)) AS t FROM range(0, 10, 1, 2)")
+        .createOrReplaceTempView("node_bad")
+      val global = spark.sql("SELECT ml_train('node_bad', f, t) FROM node_bad")
+      val grouped = spark.sql("SELECT ml_train('node_bad', f, t) FROM node_bad GROUP BY id >= 0")
+      assert(isNode(global) && !isNode(grouped), plan(grouped))
+      Seq(global, grouped).foreach { df =>
+        val err = intercept[Exception](df.collect())
+        assert(err.getMessage.contains(message), err.getMessage)
+      }
+    }
+  }
+
+  test("GROUP BY over one group keeps the TrainAgg4 aggregate and trains the global node's weight bits and lastStats") {
+    MlFunctions.registerAll(spark)
+    val spec = """{"layers":[{"in":2,"out":8,"activation":"relu"},{"in":8,"out":1}]}"""
+    val cfg = """{"epochs":3,"batch_size":32,"seed":13}"""
+    // an 8-file parquet table, as the benchmark trains on: both plans read one file scan
+    trainView("node_group_src", 2000, 8)
+    val dir = java.nio.file.Files.createTempDirectory("graft-node-group").resolve("t").toString
+    spark.table("node_group_src").write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("node_group")
+    def trained(sql: String): (Seq[Int], graft.ml.TrainStats) = {
+      MlFunctions.create(spark, "node_group", spec)
+      MlFunctions.lastStats = None
+      assert(spark.sql(sql).collect().map(_.getString(0)).toSeq == Seq("Ok"))
+      (weightBits(ModelRegistry.get("node_group").get), MlFunctions.lastStats.getOrElse(fail(s"no TrainStats: $sql")))
+    }
+    val globalSql = s"SELECT ml_train_cfg('node_group', f, t, '$cfg') FROM node_group"
+    val groupedSql = s"SELECT ml_train_cfg('node_group', f, t, '$cfg') FROM node_group GROUP BY id >= 0"
+    assert(isNode(spark.sql(globalSql)))
+    val groupedPlan = plan(spark.sql(groupedSql))
+    assert(groupedPlan.contains("ObjectHashAggregate") && groupedPlan.contains("TrainAgg4") &&
+      !groupedPlan.contains("MlTrainExec"), groupedPlan)
+    val (nodeBits, nodeStats) = trained(globalSql)
+    val (aggBits, aggStats) = trained(groupedSql)
+    assert(nodeBits == aggBits, "the grouped aggregate and the node must train the same weights")
+    // the node's fit: the config's epochs and the first-30% split
+    assert(nodeStats.epochTrainMse.length == 3 && nodeStats.epochTestMse.length == 3)
+    assert(nodeStats.trainRows == 600 && nodeStats.testRows == 1400)
+    assert((nodeStats.epochTrainMse ++ nodeStats.epochTestMse).map(java.lang.Double.doubleToRawLongBits).toSeq ==
+      (aggStats.epochTrainMse ++ aggStats.epochTestMse).map(java.lang.Double.doubleToRawLongBits).toSeq)
+  }
+
+  test("train without orderBy trains the weight bits of SQL ml_train_cfg over the same DataFrame") {
+    MlFunctions.registerAll(spark)
+    val spec = """{"layers":[{"in":2,"out":8,"activation":"relu"},{"in":8,"out":1}]}"""
+    val cfg = """{"epochs":2,"batch_size":32,"seed":17}"""
+    trainView("api_vs_sql", 2000, 8)
+    MlFunctions.create(spark, "api_vs_sql", spec)
+    assert(spark.sql(s"SELECT ml_train_cfg('api_vs_sql', f, t, '$cfg') FROM api_vs_sql").head().getString(0) == "Ok")
+    val viaSql = weightBits(ModelRegistry.get("api_vs_sql").get)
+    MlFunctions.create(spark, "api_vs_sql", spec)
+    MlFunctions.train(spark.table("api_vs_sql"), "api_vs_sql", $"f", $"t", cfg, log = _ => ())
+    assert(weightBits(ModelRegistry.get("api_vs_sql").get) == viaSql)
   }
 }

@@ -368,6 +368,112 @@ class MlpSpec extends AnyFunSuite {
     }
   }
 
+  // ---------------------------------------------------- gradient golden bits
+
+  /** `rows` row-major input and target rows. Row `r < specials.length`
+    * is `(specials(r), -1, -1, …)`; the rest are uniform in [-1, 1), every
+    * 7th feature an exact zero.
+    */
+  private def gradBatch(
+      m: Mlp,
+      rows: Int,
+      seed: Int,
+      specials: Seq[Float] = Nil,
+  ): (Array[Float], Array[Float], Int) = {
+    val rng = new scala.util.Random(seed)
+    val xb = Array.tabulate(rows * m.inputDim) { k =>
+      val (r, i) = (k / m.inputDim, k % m.inputDim)
+      if (r < specials.length) { if (i == 0) specials(r) else -1f }
+      else if (k % 7 == 3) 0f
+      else rng.nextFloat() * 2 - 1
+    }
+    val yb = Array.fill(rows * m.outputDim)(rng.nextFloat() * 2 - 1)
+    (xb, yb, rows)
+  }
+
+  /** Digest of every gradient tensor [[Mlp.backwardBatch]] returns over a
+    * sequence of batches, and of the BatchNorm running statistics each
+    * batch updates. Biases and BatchNorm affine parameters are moved off
+    * their init first, so the relu gate and the normalisation vary by
+    * unit. All NaNs count as one value, as in the predict digests.
+    */
+  private def gradientDigest(
+      spec: String,
+      batches: Mlp => Seq[(Array[Float], Array[Float], Int)],
+      prepare: Mlp => Unit = _ => (),
+  ): Long = {
+    val m = Mlp.fromSpec("golden_grad", spec, seed = 42L)
+    val prng = new scala.util.Random(19)
+    m.layers.foreach { l =>
+      l.b.indices.foreach(o => l.b(o) = prng.nextFloat() * 0.4f - 0.2f)
+      l.bn.foreach { bn =>
+        bn.gamma.indices.foreach { o =>
+          bn.gamma(o) = 0.5f + prng.nextFloat()
+          bn.beta(o) = prng.nextFloat() * 0.4f - 0.2f
+        }
+      }
+    }
+    prepare(m)
+    var h = 0xcbf29ce484222325L
+    def mix(v: Long): Unit = { h = (h ^ v) * 0x100000001b3L; h ^= h >>> 29 }
+    def floats(a: Array[Float]): Unit =
+      a.foreach(f => mix(if (f.isNaN) 0x7fc00000L else java.lang.Float.floatToRawIntBits(f).toLong))
+    val dropRng = new scala.util.Random(3)
+    batches(m).foreach { case (xb, yb, rows) =>
+      m.backwardBatch(xb, yb, rows, dropRng).foreach(floats)
+      m.layers.foreach(_.bn.foreach { bn => floats(bn.runningMean); floats(bn.runningVar) })
+    }
+    h
+  }
+
+  /** 3 → 6 → 3 → 1 relu: output widths 6, 3 and 1 leave 2, 3 and 1 units
+    * after the passes of four.
+    */
+  private val reluWidthsSpec =
+    """{"layers":[{"in":3,"out":6,"activation":"relu"},""" +
+      """{"in":6,"out":3,"activation":"relu"},{"in":3,"out":1}]}"""
+
+  /** First-layer unit 0 gets weights (1, 0, 0) and bias -0, so on a row
+    * `(s, -1, -1)` its pre-activation is exactly `s`: `-0 + s`, then two
+    * `-1 · 0 = -0` terms, which keep a -0 and change nothing else.
+    */
+  private def passFirstInput(m: Mlp): Unit = {
+    val l = m.layers.head
+    l.w(0) = 1f; l.w(l.out) = 0f; l.w(2 * l.out) = 0f
+    l.b(0) = -0f
+  }
+
+  private val finiteSpecials = Seq(0f, -0f, 1e-40f, -1e-40f, java.lang.Float.MIN_VALUE, -java.lang.Float.MIN_VALUE)
+  private val nonFiniteSpecials = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, 0f, -0f)
+
+  /** Constants computed on the backward kernels that predate the
+    * four-unit `dW` pass and the branch-free relu gate: one `+=` chain
+    * per weight and `if (p > 0f) g else 0f`.
+    */
+  private val goldenGradients: Seq[(String, () => Long, Long)] = Seq(
+    ("bench net 5-64-32-1 relu, batches of 64 and 1",
+      () => gradientDigest(benchSpec, m => Seq(gradBatch(m, 64, 1), gradBatch(m, 1, 2))), 0x0fc864989dbbe739L),
+    ("tanh + batch_norm + dropout 0.1, 2 outputs, batches of 64 and 1",
+      () => gradientDigest(bnDropTanhSpec, m => Seq(gradBatch(m, 64, 3), gradBatch(m, 1, 4))), 0x59527164d003e578L),
+    ("relu widths 6, 3, 1: pre-activations ±0 and ± subnormals, batch of 64",
+      () => gradientDigest(reluWidthsSpec, m => Seq(gradBatch(m, 64, 5, finiteSpecials)), passFirstInput), 0x0d04e6c8a5afd530L),
+    ("relu widths 6, 3, 1: a pre-activation of ±0 or a subnormal, batches of 1",
+      () => gradientDigest(reluWidthsSpec,
+        m => finiteSpecials.zipWithIndex.map { case (s, k) => gradBatch(m, 1, 6 + k, Seq(s)) }, passFirstInput), 0xee1b404cecfb8d42L),
+    ("relu widths 6, 3, 1: pre-activations NaN and ±Inf, batch of 64",
+      () => gradientDigest(reluWidthsSpec, m => Seq(gradBatch(m, 64, 7, nonFiniteSpecials)), passFirstInput), 0x779db1c68c498f4dL),
+    ("relu widths 6, 3, 1: a pre-activation of NaN or ±Inf, batches of 1",
+      () => gradientDigest(reluWidthsSpec,
+        m => nonFiniteSpecials.zipWithIndex.map { case (s, k) => gradBatch(m, 1, 20 + k, Seq(s)) }, passFirstInput), 0x332ee1fe54337c0bL),
+  )
+
+  goldenGradients.foreach { case (label, run, expected) =>
+    test(s"golden gradient bits: $label") {
+      val got = run()
+      assert(got == expected, f"digest 0x$got%016xL != pinned 0x$expected%016xL")
+    }
+  }
+
   // ------------------------------------------------------ gradient check
 
   /** Batch-mean MSE of a train-mode forward (batch-statistic BatchNorm,
