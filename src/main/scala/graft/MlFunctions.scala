@@ -30,10 +30,12 @@ import graft.ml.{Mlp, ModelRegistry, TrainConfig, TrainStats}
   * not under CASE, IF or COALESCE, is planned by
   * [[org.apache.spark.sql.graftext.MlpStrategy]] as one
   * `MlpScoreExec`, which scores 512-row chunks feature-major through
-  * [[graft.ml.Mlp.predictColumns]]. A call under a conditional (so only
-  * a taken branch runs), in a filter or in an aggregate runs per row
-  * through [[graft.ml.Mlp.predict]]. Both give the same bits. [[publish]]
-  * installs the strategy with the SQL names, once per session.
+  * [[graft.ml.Mlp.predictColumns]], reading a Parquet `array<float>`
+  * column straight from the scan's column batches. A call under a
+  * conditional (so only a taken branch runs), in a filter or in an
+  * aggregate runs per row through [[graft.ml.Mlp.predict]]. Both give
+  * the same bits. [[publish]] installs the strategy with the SQL names,
+  * once per session.
   *
   * Semantic divergences from the reference (documented, intentional):
   *   - `ml_train` trains on the WHOLE input relation exactly once.

@@ -104,6 +104,22 @@ object Smoke {
       MlFunctions.predictCol(spark, "mpg_model", col("features")).as("yhat")))
     require(viaSql == viaApi, s"SQL ml_pred checksum $viaSql differs from predictCol's $viaApi")
     println(s"ml_pred (MlpScoreExec) equals predictCol: ${viaSql.getLong(0)} rows")
+    // the same rows as a Parquet array<float> column: the scorer reads the scan's batches
+    val featsDir = java.nio.file.Files.createTempDirectory("graft-smoke").resolve("li_feats").toString
+    li.write.parquet(featsDir)
+    val pq = spark.read.parquet(featsDir)
+    pq.createOrReplaceTempView("li_feats_pq")
+    val pqPreds = spark.sql(
+      "SELECT l_orderkey, l_linenumber, ml_pred('mpg_model', features) AS yhat FROM li_feats_pq")
+    require(pqPreds.queryExecution.executedPlan.collect { case s: MlpScoreExec => s }.exists(_.supportsColumnar),
+      s"SQL ml_pred over Parquet does not score columnar:\n${pqPreds.queryExecution.executedPlan}")
+    val pqSql = checksum(pqPreds)
+    val pqApi = checksum(pq.select(col("l_orderkey"), col("l_linenumber"),
+      MlFunctions.predictCol(spark, "mpg_model", col("features")).as("yhat")))
+    require(pqSql == pqApi && pqSql == viaSql,
+      s"Parquet ml_pred checksum $pqSql, predictCol $pqApi, row-path ml_pred $viaSql")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(featsDir).getParentFile)
+    println(s"columnar ml_pred over Parquet equals predictCol: ${pqSql.getLong(0)} rows")
     val mse = trained
       .select(avg(pow(element_at(col("prediction"), 1) - element_at(col("targets"), 1), 2)))
       .as[Double]

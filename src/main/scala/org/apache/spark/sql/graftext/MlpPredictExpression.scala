@@ -22,8 +22,11 @@ import graft.ml.Mlp
   * In a projection, and not under CASE, IF or COALESCE,
   * [[MlpStrategy]] plans it as [[MlpScoreExec]], which scores
   * chunks feature-major through [[graft.ml.Mlp.predictColumns]] with
-  * the same output bits; everywhere else (under a conditional, in a
-  * filter or an aggregate) it runs per row through [[MlpPredict.run]].
+  * the same output bits, straight from the scan's column batches when
+  * the features are a bare Parquet `array<float>` column; everywhere
+  * else (under a conditional, in a filter or an aggregate) it runs per
+  * row through [[MlpPredict.run]]. On every path a null feature array
+  * predicts null and a null element reads as `0f`.
   */
 case class MlpPredict(child: Expression, model: Mlp)
     extends UnaryExpression
@@ -48,10 +51,16 @@ case class MlpPredict(child: Expression, model: Mlp)
 
 object MlpPredict {
   /** The row path's eval/codegen entry: primitive in, primitive out;
-    * the outputs have [[graft.ml.Mlp.predict]]'s bits.
+    * the outputs have [[graft.ml.Mlp.predict]]'s bits. A null element
+    * reads as `0f`: an `UnsafeArrayData` zeroes its null slots, but in a
+    * codegen stage over `ColumnarToRow` the input is a `ColumnarArray`,
+    * whose null slot holds whatever an earlier batch left in the vector.
     */
   def run(model: Mlp, input: ArrayData): ArrayData = {
-    val out = model.predict(input.toFloatArray())
+    val x = input.toFloatArray()
+    var i = 0
+    while (i < x.length) { if (input.isNullAt(i)) x(i) = 0f; i += 1 }
+    val out = model.predict(x)
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 

@@ -29,7 +29,12 @@ import graft.MlFunctions
   * THEN ml_pred('m', f) END` never sees a wrong width) or a higher-order
   * function (its input is a lambda variable), and whenever it is not in
   * a `Project` (a `Filter`, an aggregate). Of nested calls the innermost
-  * is batched.
+  * is batched. The strategy plans rows in and rows out; the scorer
+  * itself reports whether it can read its child's column batches, and
+  * Spark's `ApplyColumnarRulesAndInsertTransitions` places the
+  * `ColumnarToRow` accordingly, so both install routes (this strategy
+  * through `GraftExtensions` or through [[install]]) get the columnar
+  * path with no `ColumnarRule`.
   *
   * '''Training.''' A global `SELECT ml_train…(name, feats, tgts[, cfg])
   * FROM t` (an `Aggregate` with no grouping and the one call, whose name

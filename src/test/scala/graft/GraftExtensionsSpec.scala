@@ -89,6 +89,23 @@ class GraftExtensionsSpec extends SparkTestBase {
     assert(extSum == regSum)
   }
 
+  test("ml_pred over a Parquet array<float> column scores the scan's batches on both routes, with equal bits") {
+    MlFunctions.registerAll(spark)
+    val dir = java.nio.file.Files.createTempDirectory("ext-columnar").resolve("t").toString
+    spark.range(0, 6000, 1, 2)
+      .selectExpr("id", "array(CAST(sin(id) AS FLOAT), CAST(cos(id * 0.7) AS FLOAT)) AS f")
+      .write.parquet(dir)
+    val m = Mlp.fromSpec("ext_columnar", spec)
+    ModelRegistry.put(m)
+    val sums = Seq(ext -> "extension session", spark -> "registerAll session").map { case (s, route) =>
+      s.read.parquet(dir).createOrReplaceTempView("ext_pq")
+      val scored = s.sql("SELECT id, ml_pred('ext_columnar', f) AS p FROM ext_pq")
+      assert(scoresColumnar(scored), s"$route:\n${scored.queryExecution.executedPlan}")
+      scored.selectExpr("count(1)", "bit_xor(xxhash64(id, p))").head()
+    }
+    assert(sums.head == sums.last && sums.head.getLong(0) == 6000, sums)
+  }
+
   test("publish on an extension session adds the ml_models view and no second batch scorer") {
     MlFunctions.create(ext, "ext_view", """{"layers":[{"in":1,"out":1}]}""")
     MlFunctions.publish(ext)

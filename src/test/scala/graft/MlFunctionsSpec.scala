@@ -431,6 +431,94 @@ class MlFunctionsSpec extends SparkTestBase {
     }
   }
 
+  private def checksum(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val r = df.selectExpr("count(1)", "bit_xor(xxhash64(id, p))").head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def tempParquet(df: org.apache.spark.sql.DataFrame): String = {
+    val dir = java.nio.file.Files.createTempDirectory("mlpred-pq").resolve("t").toString
+    df.write.parquet(dir)
+    dir
+  }
+
+  test("columnar ml_pred over a Parquet array<float> column; the row-path shapes keep its bits") {
+    MlFunctions.registerAll(spark)
+    val m = Mlp.fromSpec("colplan", """{"layers":[{"in":3,"out":8,"activation":"relu"},{"in":8,"out":2}]}""")
+    ModelRegistry.put(m)
+    val dir = tempParquet(spark.range(0, 9000, 1, 2).selectExpr("id",
+      "array(CAST(sin(id) AS FLOAT), CAST(cos(id) AS FLOAT), CAST(id / 900.0 AS FLOAT)) AS f"))
+    spark.read.parquet(dir).createOrReplaceTempView("colplan_pq")
+    val sqlPred = spark.sql("SELECT id, ml_pred('colplan', f) AS p FROM colplan_pq")
+    val api = spark.read.parquet(dir).select($"id", MlFunctions.predictCol(spark, "colplan", $"f").as("p"))
+    Seq(sqlPred, api).foreach(df => assert(scoresColumnar(df), df.queryExecution.executedPlan.toString))
+    val want = checksum(sqlPred)
+    assert(want._1 == 9000 && checksum(api) == want)
+    // per row, the columnar outputs are predict's bits
+    spark.sql("SELECT f, ml_pred('colplan', f) AS p FROM colplan_pq").collect().foreach { r =>
+      assert(floatBits(r, 1).contains(m.predict(r.getSeq[Float](0).toArray).toSeq
+        .map(java.lang.Float.floatToRawIntBits)), r)
+    }
+
+    def rowScored(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan
+      assert(scorers(df).length == 1 && !scorers(df).head.supportsColumnar, plan.toString)
+      assert(checksum(df) == want, plan.toString)
+    }
+    // q27's shape: the features are an expression, not a column
+    rowScored(spark.sql("SELECT id, ml_pred('colplan', array(f[0], f[1], f[2])) AS p FROM colplan_pq"))
+    // the row-based nested reader
+    val nested = "spark.sql.parquet.enableNestedColumnVectorizedReader"
+    spark.conf.set(nested, "false")
+    try rowScored(spark.sql("SELECT id, ml_pred('colplan', f) AS p FROM colplan_pq"))
+    finally spark.conf.unset(nested)
+    // a LocalRelation (kept as a relation: its projection is not evaluated away)
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    try {
+      val local = spark.table("colplan_pq").collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("id", "f")
+      rowScored(local.select($"id", MlFunctions.predictCol(spark, "colplan", $"f").as("p")))
+    } finally spark.conf.unset(excluded)
+  }
+
+  test("columnar ml_pred: a null element reads as 0f across batches, a null array scores null, a wrong width fails") {
+    MlFunctions.registerAll(spark)
+    val m = Mlp.fromSpec("colnull", """{"layers":[{"in":3,"out":6,"activation":"relu"},{"in":6,"out":1}]}""")
+    ModelRegistry.put(m)
+    // one file of 20 000 rows: 4096-row batches; rows 0, 5000, 10000 and
+    // 15000 hold a null element, whose vector slot an earlier batch wrote
+    val dir = tempParquet(spark.range(0, 20000, 1, 1).selectExpr("id",
+      "CASE WHEN id % 5000 = 0 THEN array(CAST(1.5 AS FLOAT), CAST(NULL AS FLOAT), CAST(2.5 AS FLOAT)) " +
+        "WHEN id % 3001 = 7 THEN NULL " +
+        "ELSE array(CAST(sin(id) AS FLOAT), CAST(cos(id) AS FLOAT), CAST(id / 2000.0 AS FLOAT)) END AS f"))
+    spark.read.parquet(dir).createOrReplaceTempView("colnull_pq")
+    val scored = spark.sql("SELECT id, f, ml_pred('colnull', f) AS p FROM colnull_pq")
+    assert(scoresColumnar(scored), scored.queryExecution.executedPlan.toString)
+    // the same bits as the row path (CASE keeps the call a row expression)
+    val rowPath = spark.sql("SELECT id, CASE WHEN id >= 0 THEN ml_pred('colnull', f) END AS p FROM colnull_pq")
+    assert(scorers(rowPath).isEmpty, rowPath.queryExecution.executedPlan.toString)
+    assert(checksum(scored) == checksum(rowPath))
+    val rows = scored.collect()
+    assert(rows.length == 20000)
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      if (r.isNullAt(1)) assert(id % 3001 == 7 && r.isNullAt(2), r)
+      else {
+        val f = r.getSeq[Any](1).map(v => if (v == null) 0f else v.asInstanceOf[Float]).toArray
+        if (id % 5000 == 0) assert(f.toSeq == Seq(1.5f, 0f, 2.5f), r)
+        assert(floatBits(r, 2).contains(m.predict(f).toSeq.map(java.lang.Float.floatToRawIntBits)), r)
+      }
+    }
+    // a wrong width in a later batch fails from the columnar path with predict's message
+    val wrongDir = tempParquet(spark.range(0, 9000, 1, 1).selectExpr("id",
+      "CASE WHEN id = 6000 THEN array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)) " +
+        "ELSE array(CAST(id AS FLOAT), CAST(1 AS FLOAT), CAST(2 AS FLOAT)) END AS f"))
+    val wrong = spark.read.parquet(wrongDir).select($"id", MlFunctions.predictCol(spark, "colnull", $"f").as("p"))
+    assert(scoresColumnar(wrong), wrong.queryExecution.executedPlan.toString)
+    val err = intercept[Exception](wrong.collect())
+    assert(err.getMessage.contains("model 'colnull' expects 3 features, got 2"), err.getMessage)
+  }
+
   test("ml_pred snapshot isolation: retraining does not change published plan until re-publish") {
     MlFunctions.create(spark, "snap", """{"layers":[{"in":1,"out":1}]}""")
     val df = Seq(Tuple1(Seq(2f))).toDF("f")

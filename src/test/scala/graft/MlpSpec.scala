@@ -1,10 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.ml._
 
-class MlpSpec extends AnyFunSuite {
+class MlpSpec extends SparkTestBase {
 
   private val spec5_16_1 =
     """{"layers":[{"in":5,"out":16,"activation":"relu"},{"in":16,"out":1}]}"""
@@ -246,6 +244,11 @@ class MlpSpec extends AnyFunSuite {
     * open.
     */
   private def predictDigest(spec: String, score: (Mlp, Seq[Array[Float]]) => Seq[Array[Float]]): Long = {
+    val m = goldenModel(spec)
+    digest(score(m, goldenGrid(m.inputDim)))
+  }
+
+  private def goldenModel(spec: String): Mlp = {
     val m = Mlp.fromSpec("golden_predict", spec, seed = 42L)
     val prng = new scala.util.Random(17)
     m.layers.foreach { l =>
@@ -259,19 +262,27 @@ class MlpSpec extends AnyFunSuite {
         }
       }
     }
-    val n = m.inputDim
+    m
+  }
+
+  private def goldenGrid(n: Int): Seq[Array[Float]] = {
     val rng = new scala.util.Random(23)
     def random(): Array[Float] = Array.fill(n)(rng.nextFloat() * 4 - 2)
     val specials = Seq(0f, -0f, -1.75f, Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, 3e30f, -2e-30f)
-    val rows = Seq.fill(256)(random()) ++
+    Seq.fill(256)(random()) ++
       (for (s <- specials; i <- 0 until n) yield { val x = random(); x(i) = s; x }) ++
       specials.map(s => Array.fill(n)(s))
+  }
+
+  private def digest(outputs: Seq[Array[Float]]): Long = {
     var h = 0xcbf29ce484222325L
     def mix(v: Long): Unit = { h = (h ^ v) * 0x100000001b3L; h ^= h >>> 29 }
-    score(m, rows).foreach(_.foreach(y =>
-      mix(if (y.isNaN) 0x7fc00000L else java.lang.Float.floatToRawIntBits(y).toLong)))
+    outputs.foreach(_.foreach(y => mix(bits(y).toLong)))
     h
   }
+
+  /** An output's raw bits, every NaN as one value. */
+  private def bits(y: Float): Int = if (y.isNaN) 0x7fc00000 else java.lang.Float.floatToRawIntBits(y)
 
   private def rowByRow(m: Mlp, rows: Seq[Array[Float]]): Seq[Array[Float]] = rows.map(m.predict)
 
@@ -288,6 +299,36 @@ class MlpSpec extends AnyFunSuite {
       val y = m.predictColumns(x, part.length, bufs)
       part.indices.map(r => Array.tabulate(m.outputDim)(o => y(o)(r)))
     }.toSeq
+  }
+
+  /** `rows` scored by SQL `ml_pred` (one call per model in one SELECT)
+    * over a one-file Parquet table that holds the grid back to back
+    * until it fills two 4096-row batches and a tail, so the columnar
+    * scorer reads every row through a batch, at several batch offsets.
+    * Every copy of the grid must score the same bits; returns each
+    * model's outputs for the first copy.
+    */
+  private def viaParquet(models: Seq[Mlp], rows: Seq[Array[Float]]): Seq[Seq[Array[Float]]] = {
+    import spark.implicits._
+    MlFunctions.registerAll(spark)
+    models.foreach(ModelRegistry.put)
+    val copies = 2 * 4096 / rows.length + 2
+    val dir = java.nio.file.Files.createTempDirectory("mlp-golden").resolve("t").toString
+    (0 until copies * rows.length).map(k => (k.toLong, rows(k % rows.length))).toDF("id", "f")
+      .coalesce(1).write.parquet(dir)
+    val calls = models.map(m => s"ml_pred('${m.name}', f)").mkString(", ")
+    spark.read.parquet(dir).createOrReplaceTempView("golden_pq")
+    val scored = spark.sql(s"SELECT id, $calls FROM golden_pq")
+    assert(scoresColumnar(scored), scored.queryExecution.executedPlan.toString)
+    val out = scored.collect().sortBy(_.getLong(0)).map(r =>
+      models.indices.map(j => r.getSeq[Float](j + 1).toArray))
+    assert(out.length == copies * rows.length)
+    out.grouped(rows.length).zipWithIndex.foreach { case (copy, c) =>
+      copy.indices.foreach(k => models.indices.foreach { j =>
+        assert(copy(k)(j).map(bits).toSeq == out(k)(j).map(bits).toSeq, s"copy $c row $k model ${models(j).name}")
+      })
+    }
+    models.indices.map(j => out.take(rows.length).map(_(j)).toSeq)
   }
 
   /** Constants computed on the output-major `predict` (one scalar chain
@@ -316,6 +357,38 @@ class MlpSpec extends AnyFunSuite {
       val got = predictDigest(spec, batched)
       assert(got == expected, f"digest 0x$got%016xL != pinned 0x$expected%016xL")
     }
+    test(s"golden predict bits through SQL ml_pred over Parquet batches: $label") {
+      val got = predictDigest(spec, (m, rows) => viaParquet(Seq(m), rows).head)
+      assert(got == expected, f"digest 0x$got%016xL != pinned 0x$expected%016xL")
+    }
+  }
+
+  test("golden predict bits through SQL ml_pred over Parquet batches: two models in one SELECT") {
+    val pair = goldenPredict.filter(g => Mlp.fromSpec("w", g._2).inputDim == 3)
+    assert(pair.length == 2)
+    // the init seed mixes in the name, so each model is renamed after it is built
+    val models = pair.zipWithIndex.map { case ((_, spec, _), j) =>
+      val m = goldenModel(spec)
+      new Mlp(s"golden_pair_$j", m.specJson, m.spec, m.layers)
+    }
+    viaParquet(models, goldenGrid(3)).zip(pair).foreach { case (out, (label, _, expected)) =>
+      val got = digest(out)
+      assert(got == expected, f"$label: digest 0x$got%016xL != pinned 0x$expected%016xL")
+    }
+  }
+
+  test("golden predict bits through SQL ml_pred over off-heap Parquet batches") {
+    val key = "spark.sql.columnVector.offheap.enabled"
+    spark.conf.set(key, "true")
+    try {
+      val (label, spec, expected) = goldenPredict.head
+      val got = predictDigest(spec, (m, rows) => viaParquet(Seq(m), rows).head)
+      assert(got == expected, f"$label: digest 0x$got%016xL != pinned 0x$expected%016xL")
+      val scan = spark.table("golden_pq").queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.vectorTypes
+      }
+      assert(scan.flatten.exists(_.forall(_.endsWith("OffHeapColumnVector"))), scan)
+    } finally spark.conf.unset(key)
   }
 
   test("predictColumns keeps predict's zero signs when every bias and beta is -0") {
@@ -332,11 +405,14 @@ class MlpSpec extends AnyFunSuite {
     }
     val rng = new scala.util.Random(5)
     val rows = Seq.fill(40)(Array(0f)) ++ Seq.fill(40)(Array(-0f)) ++ Seq.fill(40)(Array(rng.nextFloat() * 2 - 1))
-    def bits(y: Array[Float]) = y.toSeq.map(v => if (v.isNaN) 0x7fc00000 else java.lang.Float.floatToRawIntBits(v))
-    val want = rowByRow(m, rows).map(bits)
+    def rowBits(y: Array[Float]) = y.toSeq.map(bits)
+    val want = rowByRow(m, rows).map(rowBits)
     assert(want.flatten.contains(0x80000000), "the grid must produce a -0 output")
-    batched(m, rows).map(bits).zip(want).zipWithIndex.foreach { case ((got, exp), r) =>
+    batched(m, rows).map(rowBits).zip(want).zipWithIndex.foreach { case ((got, exp), r) =>
       assert(got == exp, s"row $r (input ${rows(r).head}): predictColumns $got vs predict $exp")
+    }
+    viaParquet(Seq(m), rows).head.map(rowBits).zip(want).zipWithIndex.foreach { case ((got, exp), r) =>
+      assert(got == exp, s"row $r (input ${rows(r).head}): SQL ml_pred over Parquet $got vs predict $exp")
     }
   }
 

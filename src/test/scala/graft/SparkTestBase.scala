@@ -23,4 +23,18 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   protected val Sf0001 = "/root/testdata/sf0.001"
+
+  /** `df` has a batch scorer, and each one reads its child's column
+    * batches: a `ColumnarToRow` above it and none below it.
+    */
+  protected def scoresColumnar(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.ColumnarToRowExec
+    import org.apache.spark.sql.graftext.MlpScoreExec
+    val plan = df.queryExecution.executedPlan
+    val scorers = plan.collect { case s: MlpScoreExec => s }
+    scorers.nonEmpty && scorers.forall { s =>
+      plan.collect { case c: ColumnarToRowExec => c }.exists(_.child.exists(_ eq s)) &&
+        !s.exists(_.isInstanceOf[ColumnarToRowExec])
+    }
+  }
 }
