@@ -498,6 +498,12 @@ class MlFunctionsSpec extends SparkTestBase {
     val rowPath = spark.sql("SELECT id, CASE WHEN id >= 0 THEN ml_pred('colnull', f) END AS p FROM colnull_pq")
     assert(scorers(rowPath).isEmpty, rowPath.queryExecution.executedPlan.toString)
     assert(checksum(scored) == checksum(rowPath))
+    // ORC's nested vectorized reader: vectors that are not WritableColumnVectors
+    val orcDir = java.nio.file.Files.createTempDirectory("mlpred-orc").resolve("t").toString
+    spark.table("colnull_pq").write.orc(orcDir)
+    val orc = spark.read.orc(orcDir).select($"id", MlFunctions.predictCol(spark, "colnull", $"f").as("p"))
+    assert(scoresColumnar(orc), orc.queryExecution.executedPlan.toString)
+    assert(checksum(orc) == checksum(rowPath))
     val rows = scored.collect()
     assert(rows.length == 20000)
     rows.foreach { r =>
